@@ -1517,10 +1517,10 @@ object AnalyticsQueries {
   )
 
   /** EXACT per-group median through the distributed two-phase rank:
-    * range-partition the (group, value) order, rank locally + add
+    * range-bucket the (group, value) order, rank locally + add
     * broadcast group offsets, keep only each group's middle row(s),
     * and assemble the median with quantile_cont's own lerp arithmetic
-    * (lo + (hi − lo)·0.5) — bit-identical to DuckDB. One range
+    * (lo + (hi − lo)·0.5) — bit-identical to DuckDB. One bucket
     * shuffle and a metadata-sized offsets frame; no per-group value
     * buffering (Spark's exact `percentile` holds every group value in
     * one aggregation buffer — the per-group OOM at 100 TB). `tb` must

@@ -138,14 +138,15 @@ object CurationQueries {
       .agg(count(lit(1)).as("n_docs"), sum(col("n")).as("shard_tokens"))
   }
 
-  /** Distributed EXACT ntile(k) over a total order: range-partition on
-    * the sort key, row_number within each partition, add broadcast
+  /** Distributed EXACT ntile(k) over a total order: range-bucket on
+    * the sort key, row_number within each bucket, add broadcast
     * exclusive offsets (a numParts-row frame) — the TeraSort-style
-    * two-phase global rank. Spark's own `ntile().over(Window.orderBy)`
-    * funnels the whole frame through ONE partition; this keeps both
-    * shuffles (range + pid-hash) fully parallel. The tile arithmetic —
-    * first (N mod k) tiles hold ceil(N/k) rows, the rest floor(N/k) —
-    * is integer-only, so it hash-matches any engine's ntile bit-exactly.
+    * two-phase global rank ([[graft.functions.GlobalRank]]). Spark's
+    * own `ntile().over(Window.orderBy)` funnels the whole frame through
+    * ONE partition; this keeps the bucket shuffle fully parallel. The
+    * tile arithmetic — first (N mod k) tiles hold ceil(N/k) rows, the
+    * rest floor(N/k) — is integer-only, so it hash-matches any
+    * engine's ntile bit-exactly.
     * `sortCols` must be a total order or tile assignment is
     * nondeterministic on the ties. */
   private[graft] def distributedNtile(df: org.apache.spark.sql.DataFrame, k: Int,

@@ -27,11 +27,13 @@ import org.apache.spark.sql.functions._
   *   O1/O3  tableExists ? SCD1 merge : overwrite saveAsTable
   *
   * Scale notes: new-row key assignment uses the two-phase distributed
-  * rank ([[graft.functions.GlobalRank]]) — range partition + local
-  * row_number + broadcast offsets — so even an initial full load of a
-  * high-cardinality (user-id-like) dimension never funnels through one
-  * task. The sink side of the R5 join is broadcast — dimension tables
-  * are the small side by design. The only unavoidable shuffle is the
+  * rank ([[graft.functions.GlobalRank]]) — fixed sampled range buckets
+  * + local row_number + broadcast offsets — so even an initial full
+  * load of a high-cardinality (user-id-like) dimension never funnels
+  * through one task, and the keys stay contiguous and unique whatever
+  * order the distinct() hands its rows over in. The sink side of the
+  * R5 join is broadcast — dimension tables are the small side by
+  * design. The only unavoidable shuffle is the
   * distinct() over the natural key, which is a partial+final
   * HashAggregate (map-side combine first).
   */
@@ -65,7 +67,9 @@ object DimensionBuilder {
   )
 
   /** Pure plan: given silver and the current sink state, produce the
-    * post-build dimension relation. No I/O — unit-testable. */
+    * post-build dimension relation. No writes — unit-testable
+    * ([[KeyMode.Deterministic]] runs one sampling job over the new rows
+    * here, for [[graft.functions.GlobalRank]]'s bucket bounds). */
   def plan(silver: DataFrame, sink: DataFrame, spec: DimSpec,
            keyMode: KeyMode = KeyMode.Deterministic): DataFrame = {
     // R1/R2 — distinct natural key + attributes

@@ -13,6 +13,18 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** The Catalyst expression behind a `Column` (converted, so a sort
+    * column comes back as a `SortOrder`), and a `Column` over a
+    * Catalyst expression — for operators that build expressions the
+    * Column API does not offer ([[graft.functions.GlobalRank]]'s fixed
+    * range buckets). */
+  def expression(spark: SparkSession, c: org.apache.spark.sql.Column)
+      : org.apache.spark.sql.catalyst.expressions.Expression =
+    spark.asInstanceOf[classic.SparkSession].expression(c)
+
+  def column(e: org.apache.spark.sql.catalyst.expressions.Expression): org.apache.spark.sql.Column =
+    classic.ExpressionUtils.column(e)
+
   /** ANSI-mode cast regardless of the session's `spark.sql.ansi.enabled`
     * — SQL INSERT's store-assignment coercion must FAIL on a value the
     * target type cannot represent ('abc' → INT, numeric overflow), not

@@ -8,6 +8,18 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
   def sf(s: String): String = s"/root/testdata/sf$s"
+
+  /** Path of a committed car-sales CSV (`SalesData.csv`,
+    * `IncrementalSales.csv`, `IncrementalSalesUpdate.csv`), resolved
+    * from the test classpath. The files live in
+    * `src/test/resources/carsales/`: a stand-in for the reference's
+    * own CSVs, built to the shape FIXTURES.md §1 documents and checked
+    * by `tools/carsales_fixture.py --selftest`. */
+  def carsales(file: String): String = {
+    val url = Option(getClass.getResource(s"/carsales/$file"))
+      .getOrElse(fail(s"car-sales fixture $file is not on the test classpath"))
+    new java.io.File(url.toURI).getPath
+  }
   def tmpDir(name: String): String = {
     val d = s"/root/repo/target/tmp/test_$name"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d))

@@ -27,6 +27,31 @@ class GlobalRankSpec extends SparkTestBase {
     }
   }
 
+  test("ranks are exactly 1..N in key order over a distinct() whose row order is not fixed") {
+    // 20k (key, attribute) rows out of a distinct() over a 6-file input
+    // (each row three times, spread across the files) — the shape of a
+    // dimension's new rows: the aggregate's output row order changes
+    // run to run, and 20k keys are far more than the range sampler
+    // keeps per partition. The attribute column is not a sort column,
+    // so the counts' plan and the row numbers' plan differ below the
+    // partitioning: per-partition counts and row numbers drawn from
+    // two separately sampled partition assignments would disagree here
+    // and mint duplicate or missing ranks.
+    val n = 20000
+    val dir = tmpDir("globalrank_distinct")
+    spark.range(0L, 3L * n, 1L, 6)
+      .select(format_string("K%07d", col("id") * 7919 % n).as("k"))
+      .withColumn("name", concat(lit("name of "), col("k")))
+      .write.parquet(dir)
+    val keys = spark.read.parquet(dir).distinct()
+    val got = GlobalRank.rowNumber(keys, "r", 8, Seq(col("k")))
+      .collect().map(r => (r.getString(0), r.getLong(2))).sortBy(_._2)
+    assert(got.length === n)
+    // ground truth: the i-th key in key order carries rank i + 1
+    val wrong = got.indices.find(i => got(i) != (f"K$i%07d", i + 1L))
+    assert(wrong.isEmpty, wrong.map(i => s"position $i of the rank order holds ${got(i)}"))
+  }
+
   test("totalCol carries the exact row count on every row") {
     val df = spark.range(137).toDF("id")
     val out = GlobalRank.rowNumber(df, "r", 8, Seq(col("id")),

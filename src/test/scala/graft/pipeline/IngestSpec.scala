@@ -3,28 +3,31 @@ package graft.pipeline
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
-/** S1/S3 — CSV parsing quirks + watermark/CDC semantics. */
+/** S1/S3 — CSV parsing quirks + watermark/CDC semantics. The CSV
+  * cases read the committed car-sales fixture
+  * (`src/test/resources/carsales/`, FIXTURES.md §1), a stand-in built
+  * to the shape of the reference's own CSVs. */
 class IngestSpec extends SparkTestBase {
 
   test("CSV source: BOM header, quoted embedded commas, empty → null") {
-    val raw = Ingest.readSalesCsv(spark, "/root/reference/SalesData.csv")
+    val raw = Ingest.readSalesCsv(spark, carsales("SalesData.csv"))
     assert(raw.count() === 1849)
     assert(raw.schema === Schemas.raw) // BOM did not corrupt the first column name
     // quoted field with comma survives as one value
-    assert(Ingest.readSalesCsv(spark, "/root/reference/IncrementalSales.csv")
+    assert(Ingest.readSalesCsv(spark, carsales("IncrementalSales.csv"))
       .filter(col("DealerName") === "Fisker, Karma Motors").count() === 1)
     // empty DealerName fields arrive as null
     assert(raw.filter(col("DealerName").isNull).count() > 0)
   }
 
   test("bronze drops Product_Name (11 columns)") {
-    val bronze = Ingest.toBronze(Ingest.readSalesCsv(spark, "/root/reference/SalesData.csv"))
+    val bronze = Ingest.toBronze(Ingest.readSalesCsv(spark, carsales("SalesData.csv")))
     assert(bronze.columns.length === 11)
     assert(!bronze.columns.contains("Product_Name"))
   }
 
   test("watermark filter keeps only rows strictly past the mark") {
-    val raw = Ingest.readSalesCsv(spark, "/root/reference/IncrementalSales.csv")
+    val raw = Ingest.readSalesCsv(spark, carsales("IncrementalSales.csv"))
     assert(Ingest.pastWatermark(raw, Some("DT01245")).count() === 4)
     assert(Ingest.pastWatermark(raw, Some("DT01246")).count() === 2)
     assert(Ingest.pastWatermark(raw, Some("DT01247")).count() === 0)
@@ -35,18 +38,18 @@ class IngestSpec extends SparkTestBase {
     val root = tmpDir("ingest_cdc")
     val bronze = s"$root/bronze"
     // batch 1 (full): watermark None
-    val wm1 = Ingest.ingest(spark, "/root/reference/IncrementalSales.csv", bronze, None)
+    val wm1 = Ingest.ingest(spark, carsales("IncrementalSales.csv"), bronze, None)
     assert(wm1 === Some("DT01247"))
     assert(spark.read.parquet(bronze).count() === 4)
     // batch 2 re-uses DT01246-47: only the 3 changed rows load
-    val wm2 = Ingest.ingest(spark, "/root/reference/IncrementalSalesUpdate.csv", bronze, wm1)
+    val wm2 = Ingest.ingest(spark, carsales("IncrementalSalesUpdate.csv"), bronze, wm1)
     assert(wm2 === Some("DT01247"))
     val b = spark.read.parquet(bronze)
     assert(b.count() === 3)
     assert(b.filter(col("DealerName").endsWith(" up")).count() === 3)
     // replaying batch 2: the 3 rows are now unchanged; only the XYZ row
     // (absent from current bronze) re-loads
-    val wm3 = Ingest.ingest(spark, "/root/reference/IncrementalSalesUpdate.csv", bronze, wm2)
+    val wm3 = Ingest.ingest(spark, carsales("IncrementalSalesUpdate.csv"), bronze, wm2)
     assert(spark.read.parquet(bronze).count() === 1)
     // the mark must never regress, even when the batch holds only
     // rows below the old mark
@@ -158,7 +161,7 @@ class IngestSpec extends SparkTestBase {
     val bronze = s"$root/bronze"
     // full load: 4 rows, no null keys, watermark from the write job
     val (wm1, m1) = Ingest.ingestObserved(spark,
-      "/root/reference/IncrementalSales.csv", bronze, None)
+      carsales("IncrementalSales.csv"), bronze, None)
     assert(m1("n_rows") === 4L)
     assert(m1("null_Date_ID") === 0L)
     assert(m1("max_date_id") === "DT01247")
@@ -167,7 +170,7 @@ class IngestSpec extends SparkTestBase {
     // the metrics come from that same job — max over the WRITTEN rows
     // folded with the old mark is the watermark (no separate max scan)
     val (wm2, m2) = Ingest.ingestObserved(spark,
-      "/root/reference/IncrementalSalesUpdate.csv", bronze, wm1)
+      carsales("IncrementalSalesUpdate.csv"), bronze, wm1)
     assert(m2("n_rows") === 3L)
     assert(m2("null_Date_ID") === 0L)
     assert(wm2 === Some("DT01247"))

@@ -22,10 +22,10 @@ class MetricsSpec extends SparkTestBase {
 
   test("full-load ingest takes its watermark from the write's observation") {
     val bronze = tmpDir("metrics_bronze")
-    val mark = Ingest.ingest(spark, "/root/reference/SalesData.csv", bronze, None)
+    val mark = Ingest.ingest(spark, carsales("SalesData.csv"), bronze, None)
     // same value the old separate max-scan produced
     val expected = Ingest.toBronze(
-      Ingest.readSalesCsv(spark, "/root/reference/SalesData.csv"))
+      Ingest.readSalesCsv(spark, carsales("SalesData.csv")))
       .agg(max("Date_ID")).head().getString(0)
     assert(mark === Some(expected))
     // and the write itself is intact (partitioned bronze readable)

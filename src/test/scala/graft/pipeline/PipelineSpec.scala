@@ -7,14 +7,16 @@ import org.apache.spark.sql.types._
 /** End-to-end golden replay (SURVEY §5, FIXTURES §6): full load →
   * incremental 1 → incremental 2 → idempotence, with every BASELINE.md
   * correctness invariant asserted. Runs the real SalesPipeline against
-  * the reference's own CSVs (read-only). */
+  * the committed car-sales fixture (`src/test/resources/carsales/`,
+  * generated and checked by `tools/carsales_fixture.py`), a stand-in
+  * built to the documented shape of the reference's own CSVs — not
+  * against those CSVs themselves. */
 class PipelineSpec extends SparkTestBase {
 
-  private val ref = "/root/reference"
   private lazy val root = tmpDir("pipeline_golden")
   private lazy val pipe = {
     val p = SalesPipeline(spark, root)
-    p.run(s"$ref/SalesData.csv")
+    p.run(carsales("SalesData.csv"))
     p
   }
 
@@ -64,7 +66,7 @@ class PipelineSpec extends SparkTestBase {
     val dealerKeysBefore = pipe.table("dim_dealer")
       .select("Dealer_ID", "dim_dealer_key").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    pipe.run(s"$ref/IncrementalSales.csv")
+    pipe.run(carsales("IncrementalSales.csv"))
     assert(counts === Map(
       "dim_branch" -> 1840L, "dim_dealer" -> 268L, "dim_model" -> 278L,
       "dim_date" -> 1158L, "factsales" -> 1853L))
@@ -87,10 +89,10 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("incremental batch 2: SCD1 updates in place, counts and keys stable") {
-    pipe.run(s"$ref/IncrementalSales.csv")
+    pipe.run(carsales("IncrementalSales.csv"))
     val keysBefore = pipe.table("dim_dealer").select("Dealer_ID", "dim_dealer_key")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    pipe.run(s"$ref/IncrementalSalesUpdate.csv")
+    pipe.run(carsales("IncrementalSalesUpdate.csv"))
     val d = pipe.table("dim_dealer")
     assert(d.filter(col("DealerName").endsWith(" up")).count() === 3)
     // the quoted-comma dealer got its update through the CSV parser
@@ -102,11 +104,11 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("replaying a batch is a no-op (merge idempotence)") {
-    pipe.run(s"$ref/IncrementalSalesUpdate.csv")
+    pipe.run(carsales("IncrementalSalesUpdate.csv"))
     val before = counts
     val namesBefore = pipe.table("dim_dealer").select("DealerName")
       .collect().map(r => Option(r.getString(0)).getOrElse("")).sorted
-    pipe.run(s"$ref/IncrementalSalesUpdate.csv")
+    pipe.run(carsales("IncrementalSalesUpdate.csv"))
     assert(counts === before)
     val namesAfter = pipe.table("dim_dealer").select("DealerName")
       .collect().map(r => Option(r.getString(0)).getOrElse("")).sorted
@@ -116,7 +118,7 @@ class PipelineSpec extends SparkTestBase {
   test("RunMode.ForceFull drops gold + watermark and reloads as initial") {
     // after the incremental batches above, a forced full load of the
     // original CSV must reproduce the pristine initial-load counts
-    pipe.run(s"$ref/SalesData.csv", RunMode.ForceFull)
+    pipe.run(carsales("SalesData.csv"), RunMode.ForceFull)
     assert(counts === Map(
       "dim_branch" -> 1836L, "dim_dealer" -> 267L, "dim_model" -> 277L,
       "dim_date" -> 1156L, "factsales" -> 1849L))
@@ -125,7 +127,7 @@ class PipelineSpec extends SparkTestBase {
   test("RunMode.ForceIncremental fails fast without persisted state") {
     val fresh = SalesPipeline(spark, tmpDir("pipeline_forceinc"))
     intercept[IllegalArgumentException](
-      fresh.run(s"$ref/SalesData.csv", RunMode.ForceIncremental))
+      fresh.run(carsales("SalesData.csv"), RunMode.ForceIncremental))
   }
 
   test("SQL registration survives multi-dir snapshots (append/mergePartitioned) via a view") {

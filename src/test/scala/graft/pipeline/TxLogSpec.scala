@@ -96,7 +96,7 @@ class TxLogSpec extends SparkTestBase {
     val spec = DimensionBuilder.specs.find(_.name == "dim_dealer").get
     def silverOf(csv: String) =
       Silver.transform(Ingest.toBronze(
-        Ingest.readSalesCsv(spark, s"/root/reference/$csv")))
+        Ingest.readSalesCsv(spark, carsales(csv))))
     // full load → overwrite commit
     val full = DimensionBuilder.plan(silverOf("SalesData.csv"),
       DimensionBuilder.emptySeed(spark, spec), spec)
