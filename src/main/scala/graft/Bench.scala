@@ -105,12 +105,21 @@ object Bench {
       (shuffleRead.get, shuffleWrite.get, memSpill.get, diskSpill.get)
   }
 
+  /** `SPARK_GRAFT_CPUS` (default 32) as a positive integer — it sizes
+    * `local[n]` and the shuffle width, and lands unquoted in the bench
+    * JSON, so any other value (say `*`) fails here rather than as an
+    * unparseable result line. */
+  def cpuCount(raw: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): Int =
+    scala.util.Try(raw.trim.toInt).toOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$raw'"))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = cpuCount()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")

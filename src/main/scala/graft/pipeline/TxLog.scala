@@ -150,8 +150,13 @@ final case class TxLog(spark: SparkSession, root: String,
     * log would be JSON actions — the commit protocol is the point
     * here):
     * {{{
+    *   #op=<operation>                    // DESCRIBE HISTORY's operation (tryCommitManifest)
+    *   #commitTs=<epochMillis>            // in-commit timestamp, TxLog.IctProp tables only
+    *   #ndirs=<n>                         // live dir count (bounded history reads)
+    *   #format=2                          // only when a format-2 feature (foreign tag) is used
     *   #partcol=<name>                    // optional: table is partition-tagged
     *   #check\t<name>\t<sqlPredicate>     // CHECK constraint (table metadata)
+    *   #prop\t<key>\t<value>              // table property (TBLPROPERTIES)
     *   #statscol=<name>|<sqlType>         // one per stats column tracked
     *   #range\t<dir>\t<col>\t<min>\t<max> // data-skipping stats, one per (dir, col)
     *   #bloom\t<dir>\t<col>\t<hex>        // point-lookup Bloom bits, one per (dir, col)
@@ -159,9 +164,19 @@ final case class TxLog(spark: SparkSession, root: String,
     *   #tombstone\t<dir>\t<tsDir>         // merge-on-read deletion vector for <dir>
     *   #colmap\t<logical>\t<physical>     // column mapping, one per VISIBLE column
     *   #colretired\t<physical>            // physical name retired by DROP (never reused)
+    *   #copied\t<regDir>                  // COPY INTO loaded-file registry sidecar
     *   <dir>                              // dir covers the whole table
     *   <dir>\t<partValue>                 // dir carries this partition's live rows
+    *   <dir>\t<value>\t<col>              // FOREIGN tag: value under a former partition column
     * }}}
+    * The first two lines are stamped by [[tryCommitManifest]], the
+    * rest rendered by [[manifestLines]] in this order. Every commit
+    * builds its manifest from the head's ([[commit]]), so TABLE
+    * metadata — `#txn`, `#check`, `#copied`, `#prop` — carries over
+    * unless the op changes it; LAYOUT (entries, stats, ranges,
+    * Blooms, tombstones, column mapping) follows one of two shapes:
+    * [[rewritten]] resets it, [[carried]] keeps the carried dirs'
+    * share.
     * `#colmap` lines (Delta's column-mapping `name` mode) decouple the
     * VISIBLE (logical) schema from the names stored in parquet
     * (physical): [[renameColumn]]/[[dropColumn]] commit new mapping
@@ -1151,11 +1166,8 @@ final case class TxLog(spark: SparkSession, root: String,
     require(oldName != newName, s"rename to the same name '$oldName'")
     require(newName.nonEmpty && !newName.exists("\t\n\r".contains(_)),
       s"column name '$newName' must be non-empty and tab/newline-free (manifest line format)")
-    var attempt = 0
-    while (attempt < MaxRaceRetries) {
-      val cur = currentVersion()
+    commit(s"RENAME COLUMN $oldName TO $newName") { (cur, m) =>
       require(cur >= 0, s"TxLog table at $root has no commits")
-      val m = readManifestFull(cur)
       val map = totalColMap(m)
       val ph = map.find(_._1 == oldName).map(_._2).getOrElse(
         throw new IllegalArgumentException(
@@ -1163,40 +1175,27 @@ final case class TxLog(spark: SparkSession, root: String,
       require(!map.exists(_._1 == newName),
         s"column '$newName' already exists in TxLog table at $root")
       requireRemappable(m, oldName, ph)
-      val lines = manifestLines(m.copy(colMap =
+      Some(m.copy(colMap =
         map.map { case (lg, p) => if (lg == oldName) (newName, p) else (lg, p) }))
-      if (tryCommitManifest(cur + 1, lines, s"RENAME COLUMN $oldName TO $newName"))
-        return cur + 1
-      attempt += 1
     }
-    throw new java.io.IOException(
-      s"TxLog renameColumn lost $MaxRaceRetries optimistic races at $root")
   }
 
   /** DROP COLUMN — metadata-only (the mapping entry disappears; the
     * physical bytes stay until a rewrite). A later append re-adding the
     * same logical name mints a FRESH physical name, so the dropped
     * column's old values never resurrect — Delta's drop semantics. */
-  def dropColumn(name: String): Long = {
-    var attempt = 0
-    while (attempt < MaxRaceRetries) {
-      val cur = currentVersion()
+  def dropColumn(name: String): Long =
+    commit(s"DROP COLUMN $name") { (cur, m) =>
       require(cur >= 0, s"TxLog table at $root has no commits")
-      val m = readManifestFull(cur)
       val map = totalColMap(m)
       val ph = map.find(_._1 == name).map(_._2).getOrElse(
         throw new IllegalArgumentException(
           s"no column '$name' in TxLog table at $root (visible: ${map.map(_._1).mkString(",")})"))
       require(map.size > 1, s"cannot drop the last column '$name'")
       requireRemappable(m, name, ph)
-      val lines = manifestLines(m.copy(colMap = map.filterNot(_._1 == name),
+      Some(m.copy(colMap = map.filterNot(_._1 == name),
         retired = (m.retired :+ ph).distinct))
-      if (tryCommitManifest(cur + 1, lines, s"DROP COLUMN $name")) return cur + 1
-      attempt += 1
     }
-    throw new java.io.IOException(
-      s"TxLog dropColumn lost $MaxRaceRetries optimistic races at $root")
-  }
 
   /** PARTITION EVOLUTION — metadata-only, the Iceberg partition-spec
     * change: make `newCol` the table's partition column WITHOUT
@@ -1214,12 +1213,9 @@ final case class TxLog(spark: SparkSession, root: String,
     * partition strategy with a metadata commit and rewriting the
     * table: exactly Iceberg's spec-evolution contract, which Delta
     * lacks. */
-  def evolvePartitioning(newCol: String): Long = {
-    var attempt = 0
-    while (attempt < MaxRaceRetries) {
-      val cur = currentVersion()
+  def evolvePartitioning(newCol: String): Long =
+    commit(s"EVOLVE PARTITIONING TO $newCol") { (cur, prev) =>
       require(cur >= 0, s"TxLog table at $root has no commits to evolve")
-      val prev = readManifestFull(cur)
       val phys = physicalOf(prev.colMap, newCol)
       require(!prev.partCol.contains(phys),
         s"TxLog table at $root is already partitioned by $newCol")
@@ -1232,14 +1228,8 @@ final case class TxLog(spark: SparkSession, root: String,
           (d, Some(foreignTag(oldCol, tag)))
         case e => e
       }
-      val lines = manifestLines(prev.copy(partCol = Some(phys), entries = evolved))
-      if (tryCommitManifest(cur + 1, lines, s"EVOLVE PARTITIONING TO $newCol"))
-        return cur + 1
-      attempt += 1
+      Some(prev.copy(partCol = Some(phys), entries = evolved))
     }
-    throw new java.io.IOException(
-      s"TxLog evolvePartitioning lost $MaxRaceRetries optimistic races at $root")
-  }
 
   private def statsEntry(m: Manifest, column: String): (String, String) = {
     val ph = physicalOf(m.colMap, column)
@@ -1714,17 +1704,6 @@ final case class TxLog(spark: SparkSession, root: String,
     * like [[statsFor]]'s agg. Size for ~10 bits per distinct key per
     * dir (~1% fp); an undersized filter saturates and degrades to
     * "open the dir" — conservative, never wrong. */
-  /** Manifest stats header for a commit that CARRIES previous dirs:
-    * the new dir's stats columns (declared order), plus any column the
-    * carried manifest still tracks but this (possibly
-    * pre-evolution-shaped) batch lacks — dropping such a column would
-    * discard the carried dirs' valid ranges and turn range reads on it
-    * into refusals. New dirs simply commit no range for it (absent
-    * range = conservatively opened, never wrong). */
-  private def carriedHeader(prevStats: Seq[(String, String)],
-                            hdr: Seq[(String, String)]): Seq[(String, String)] =
-    hdr ++ prevStats.filterNot(p => hdr.exists(_._1 == p._1))
-
   private def bloomsFor(uuid: String, colMap: Seq[(String, String)] = Nil)
       : Map[(String, String), String] =
     if (bloomCols.isEmpty) Map.empty
@@ -1865,7 +1844,87 @@ final case class TxLog(spark: SparkSession, root: String,
     won
   }
 
-  private val MaxRaceRetries = 5
+  /** THE optimistic transaction: the one commit path of every writing
+    * op. Per attempt it reads the head manifest (the empty manifest
+    * for a new table, whose head is -1) and skips a redelivered `txn`
+    * (Delta's txnAppId/txnVersion exactly-once: the head stands — a
+    * redelivered append would otherwise duplicate its rows). Then
+    * `next(head, prev)` builds the next manifest FROM `prev` (None =
+    * no-op, the head stands), the writer's batch id is stamped into
+    * its `#txn` marks, and it publishes put-if-absent as `head + 1`.
+    * A lost race re-runs `next` against the new head: ops whose result
+    * depends on the snapshot they read (merge, update, delete,
+    * compaction) recompute it, so a loser never recommits its stale
+    * view over the winner's data (lost update). Gives up with an
+    * IOException naming `op` after [[TxLog.MaxRaceRetries]] lost
+    * races. Returns the version that stands: the committed one, or
+    * the head on a no-op. */
+  private def commit(op: String, txn: Option[(String, Long)] = None)(
+      next: (Long, Manifest) => Option[Manifest]): Long = {
+    @scala.annotation.tailrec
+    def attempt(n: Int): Long = {
+      if (n == TxLog.MaxRaceRetries) throw new java.io.IOException(
+        s"TxLog $op lost ${TxLog.MaxRaceRetries} optimistic races at $root")
+      val head = currentVersion()
+      val prev =
+        if (head >= 0) readManifestFull(head)
+        else Manifest(None, Seq.empty, Seq.empty, Map.empty)
+      val redelivered = txn.exists { case (app, id) => prev.txns.get(app).exists(_ >= id) }
+      (if (redelivered) None else next(head, prev)) match {
+        case None => head
+        case Some(m) =>
+          val txns = txn.fold(prev.txns) { case (app, id) =>
+            prev.txns + (app -> math.max(id, prev.txns.getOrElse(app, -1L))) }
+          onCommitAttempt()
+          if (tryCommitManifest(head + 1, manifestLines(m.copy(txns = txns)), op)) head + 1
+          else attempt(n + 1)
+      }
+    }
+    attempt(0)
+  }
+
+  /** Test seam: invoked by [[commit]] between building a manifest and
+    * publishing it — lets a spec inject a concurrent writer
+    * deterministically. No-op in production. */
+  private[pipeline] var onCommitAttempt: () => Unit = () => ()
+
+  /** FULL-REWRITE shape: the new dirs ARE the table. Layout —
+    * partition column, stats, entries, ranges, Blooms — is the new
+    * dirs'; deletion vectors and column mapping reset (a rewrite
+    * stores the visible names physically). Table metadata carries
+    * from `prev`. */
+  private def rewritten(prev: Manifest, partCol: Option[String],
+                        entries: Seq[(String, Option[String])],
+                        stats: Seq[(String, String)],
+                        ranges: Map[(String, String), (String, String)],
+                        blooms: Map[(String, String), String]): Manifest =
+    prev.copy(partCol = partCol, stats = stats, entries = entries,
+      ranges = ranges, blooms = blooms, tombstones = Map.empty,
+      colMap = Nil, retired = Nil)
+
+  /** CARRY shape: `carry` (prev's entries that stay live) plus the
+    * `added` entries of freshly-written dirs. Ranges, Blooms and
+    * deletion vectors are kept for the carried dirs only — a dir that
+    * left the snapshot takes its metadata with it. Everything else
+    * carries from `prev`. */
+  private def carried(prev: Manifest, carry: Seq[(String, Option[String])],
+                      added: Seq[(String, Option[String])],
+                      stats: Seq[(String, String)],
+                      ranges: Map[(String, String), (String, String)],
+                      blooms: Map[(String, String), String]): Manifest = {
+    // stats header: the new dirs' columns (declared order), plus any
+    // column prev still tracks but this (possibly pre-evolution-shaped)
+    // batch lacks — dropping it would discard the carried dirs' valid
+    // ranges and turn range reads on it into refusals. New dirs simply
+    // commit no range for it (absent range = conservatively opened)
+    val header = stats ++ prev.stats.filterNot(p => stats.exists(_._1 == p._1))
+    val headerCols = header.map(_._1).toSet
+    val kept = carry.map(_._1).toSet
+    prev.copy(stats = header, entries = carry ++ added,
+      ranges = prev.ranges.filter { case ((d, c), _) => headerCols(c) && kept(d) } ++ ranges,
+      blooms = prev.blooms.filter { case ((d, _), _) => kept(d) } ++ blooms,
+      tombstones = prev.tombstones.filter { case (d, _) => kept(d) })
+  }
 
   /** Table-level CHECK constraints for the NEXT manifest: the previous
     * snapshot's persisted set, plus any writer-declared constraint
@@ -1981,28 +2040,20 @@ final case class TxLog(spark: SparkSession, root: String,
       s"constraint name '$name' must be non-empty and tab/newline-free")
     require(sql.nonEmpty && !sql.exists("\t\n\r".contains(_)),
       s"constraint '$name' SQL must be non-empty and tab/newline-free")
-    var attempt = 0
-    while (attempt < MaxRaceRetries) {
-      val cur = currentVersion()
+    commit(s"ADD CONSTRAINT $name") { (cur, prev) =>
       require(cur >= 0, s"TxLog table at $root has no commits")
-      val prev = readManifestFull(cur)
       prev.checks.find(_._1 == name) match {
         case Some((_, existing)) =>
           require(existing == sql, s"constraint '$name' already exists " +
             s"with a different predicate ($existing) — drop it first")
-          return cur
+          None
         case None =>
+          // Delta's ADD CONSTRAINT scan: existing rows must already satisfy
+          // the predicate, else the constraint would lie about the table
+          enforceChecksOnEntries(prev, Seq((name, sql)))
+          Some(prev.copy(checks = prev.checks :+ (name -> sql)))
       }
-      // Delta's ADD CONSTRAINT scan: existing rows must already satisfy
-      // the predicate, else the constraint would lie about the table
-      enforceChecksOnEntries(prev, Seq((name, sql)))
-      val lines = manifestLines(prev.copy(checks = prev.checks :+ (name -> sql)))
-      if (tryCommitManifest(cur + 1, lines, s"ADD CONSTRAINT $name"))
-        return cur + 1
-      attempt += 1
     }
-    throw new java.io.IOException(
-      s"TxLog addConstraint lost $MaxRaceRetries optimistic races at $root")
   }
 
   /** ALTER TABLE DROP CONSTRAINT — metadata-only removal. Derived
@@ -2012,21 +2063,12 @@ final case class TxLog(spark: SparkSession, root: String,
     require(!name.startsWith("__gen_"),
       s"'$name' is a generated-column validation check — drop the column, " +
         "not the check")
-    var attempt = 0
-    while (attempt < MaxRaceRetries) {
-      val cur = currentVersion()
+    commit(s"DROP CONSTRAINT $name") { (cur, prev) =>
       require(cur >= 0, s"TxLog table at $root has no commits")
-      val prev = readManifestFull(cur)
       require(prev.checks.exists(_._1 == name),
         s"no CHECK constraint named '$name' on the table at $root")
-      val lines = manifestLines(prev.copy(
-        checks = prev.checks.filterNot(_._1 == name)))
-      if (tryCommitManifest(cur + 1, lines, s"DROP CONSTRAINT $name"))
-        return cur + 1
-      attempt += 1
+      Some(prev.copy(checks = prev.checks.filterNot(_._1 == name)))
     }
-    throw new java.io.IOException(
-      s"TxLog dropConstraint lost $MaxRaceRetries optimistic races at $root")
   }
 
   /** The snapshot's table properties (TBLPROPERTIES) — free-form
@@ -2114,11 +2156,8 @@ final case class TxLog(spark: SparkSession, root: String,
     require(kvs.map(_._1).distinct.size == kvs.size,
       s"duplicate keys in SET TBLPROPERTIES: ${kvs.map(_._1).mkString(", ")}")
     val dropped = unset.toSet ++ kvs.map(_._1)
-    var attempt = 0
-    while (attempt < MaxRaceRetries) {
-      val cur = currentVersion()
+    commit(op) { (cur, prev) =>
       require(cur >= 0, s"TxLog table at $root has no commits")
-      val prev = readManifestFull(cur)
       // strict-UNSET presence is validated INSIDE the retry loop,
       // against the very property set the commit will replace — a
       // pre-loop check goes stale the moment a concurrent SET/UNSET
@@ -2139,13 +2178,9 @@ final case class TxLog(spark: SparkSession, root: String,
         (if (replaceAll) kvs
          else prev.props.filterNot(p => dropped.contains(p._1)) ++ kvs)
           .sortBy(_._1)
-      if (merged == prev.props.sortBy(_._1)) return cur
-      val lines = manifestLines(prev.copy(props = merged))
-      if (tryCommitManifest(cur + 1, lines, op)) return cur + 1
-      attempt += 1
+      if (merged == prev.props.sortBy(_._1)) None
+      else Some(prev.copy(props = merged))
     }
-    throw new java.io.IOException(
-      s"TxLog updateProperties lost $MaxRaceRetries optimistic races at $root")
   }
 
   /** Commit EXACTLY `kvs` as the table's property set — CREATE OR
@@ -2268,17 +2303,6 @@ final case class TxLog(spark: SparkSession, root: String,
             else None)
     }
 
-  /** Txn bookkeeping for a commit: previous manifest's per-app batch
-    * ids, updated with this commit's (if any). */
-  private def txnsAfter(prev: Map[String, Long],
-                        txn: Option[(String, Long)]): Map[String, Long] =
-    txn.fold(prev) { case (app, id) => prev + (app -> math.max(id, prev.getOrElse(app, -1L))) }
-
-  /** Whether `txn` was already committed per the manifest — the
-    * foreachBatch-redelivery test (Delta txnAppId/txnVersion). */
-  private def alreadyCommitted(m: Manifest, txn: Option[(String, Long)]): Boolean =
-    txn.exists { case (app, id) => m.txns.get(app).exists(_ >= id) }
-
   /** High-water committed foreachBatch id for writer `app`, or None if
     * that app never committed (Delta's txnVersion-by-appId probe). A
     * stateful streaming sink needs this BEFORE deciding what to do with
@@ -2298,22 +2322,13 @@ final case class TxLog(spark: SparkSession, root: String,
     val uuid = writeDataDir(df)
     val (hdr, ranges) = statsFor(uuid)
     val blooms = bloomsFor(uuid)
-    var attempt = 0
-    while (attempt < MaxRaceRetries) {
-      val cur = currentVersion()
-      val prev =
-        if (cur >= 0) readManifestFull(cur)
-        else Manifest(None, Seq.empty, Seq.empty, Map.empty)
+    commit("OVERWRITE") { (_, prev) =>
       // constraints survive an overwrite (table metadata, not data)
       val checks = mergedChecks(prev.checks)
       enforceChecksOnDirs(Seq(uuid), checks)
-      val lines = manifestLines(Manifest(None, hdr, Seq((uuid, None)), ranges,
-        prev.txns, blooms, checks, copied = prev.copied, props = prev.props))
-      if (tryCommitManifest(cur + 1, lines, "OVERWRITE")) return cur + 1
-      attempt += 1
+      Some(rewritten(prev, None, Seq((uuid, None)), hdr, ranges, blooms)
+        .copy(checks = checks))
     }
-    throw new java.io.IOException(
-      s"TxLog overwrite lost $MaxRaceRetries optimistic races at $root")
   }
 
   /** Append-style commit: previous snapshot stays live, `df` adds.
@@ -2341,46 +2356,25 @@ final case class TxLog(spark: SparkSession, root: String,
     val uuid = writeDataDir(phys)
     val (hdr, newRanges) = statsFor(uuid, fullMap)
     val newBlooms = bloomsFor(uuid, fullMap)
-    var attempt = 0
-    while (attempt < MaxRaceRetries) {
-      val cur = currentVersion()
-      val prev =
-        if (cur >= 0) readManifestFull(cur)
-        else Manifest(None, Seq.empty, Seq.empty, Map.empty)
-      // a redelivered append MUST be skipped — unlike merge, appending
-      // the same batch twice duplicates rows
-      if (alreadyCommitted(prev, txn)) return cur
+    commit(op, txn) { (_, prev) =>
       // the new dir was translated with the PRE-loop map: committing it
       // under a concurrently-changed mapping would silently revert the
       // rename/drop (Delta raises MetadataChangedException here)
       if (prev.colMap != curMap || prev.retired != curRetired)
         throw new java.io.IOException(
           s"concurrent column-mapping change during append to $root — retry the append")
-      // carry the previous snapshot's entries, partition tags, and
-      // stats wholesale; ranges are keyed (dir, col), so carried stats
-      // stay valid for every column the merged header tracks
-      val header = carriedHeader(prev.stats, hdr)
-      val headerCols = header.map(_._1).toSet
       // new data meets ALL constraints; existing data meets any the
       // writer is introducing with this commit (the ADD CONSTRAINT scan)
       val checks = mergedChecks(prev.checks)
       enforceChecksOnDirs(Seq(uuid), checks, colMap = fullMap)
       enforceChecksOnEntries(prev, addedChecks(prev.checks))
-      val m = Manifest(prev.partCol,
-        header,
-        prev.entries ++ newTags.fold(Seq((uuid, Option.empty[String])))(
-          _.map(v => (uuid, Option(v)))),
-        prev.ranges.filter { case ((_, c), _) => headerCols(c) } ++ newRanges,
-        txnsAfter(prev.txns, txn),
-        prev.blooms ++ newBlooms,
-        checks,
-        prev.tombstones, // carried dirs keep their deletion vectors
-        colMap = fullMap, retired = prev.retired, copied = prev.copied, props = prev.props)
-      if (tryCommitManifest(cur + 1, manifestLines(m), op)) return cur + 1
-      attempt += 1
+      // carry the previous snapshot's entries, partition tags, stats
+      // and deletion vectors wholesale; ranges are keyed (dir, col), so
+      // carried stats stay valid for every column the merged header tracks
+      Some(carried(prev, prev.entries,
+        newTags.fold(Seq((uuid, Option.empty[String])))(_.map(v => (uuid, Option(v)))),
+        hdr, newRanges, newBlooms).copy(checks = checks, colMap = fullMap))
     }
-    throw new java.io.IOException(
-      s"TxLog append lost $MaxRaceRetries optimistic races at $root")
   }
 
   /** COPY INTO — file-granular idempotent bulk ingestion (Databricks'
@@ -2423,12 +2417,10 @@ final case class TxLog(spark: SparkSession, root: String,
       .sortBy(_._1)
     require(candidates.nonEmpty,
       s"COPY INTO $root: no files matching '$pattern' under $srcDir")
-    var attempt = 0
-    while (attempt < MaxRaceRetries) {
-      val cur = currentVersion()
-      val prev =
-        if (cur >= 0) readManifestFull(cur)
-        else Manifest(None, Seq.empty, Seq.empty, Map.empty)
+    // files the standing attempt loads — re-derived from each head's
+    // registry, so a race lost to a COPY of the same files loads none
+    var loaded = 0L
+    val v = commit("COPY INTO") { (cur, prev) =>
       val candDf = spark.createDataFrame(candidates)
         .toDF("path", "size", "mtime")
       val newFiles =
@@ -2438,48 +2430,41 @@ final case class TxLog(spark: SparkSession, root: String,
            Seq("path"), "left_anti"))
           .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
           .toSeq.sortBy(_._1)
-      if (newFiles.isEmpty) return (cur, 0L) // everything already loaded
-      val raw = spark.read.format(format).options(options)
-        .option("mergeSchema", "true").load(newFiles.map(_._1): _*)
-      val aligned =
-        if (cur < 0 || prev.entries.isEmpty) raw
-        else {
-          val tgt = snapshot(cur).schema
-          val extra = raw.columns.filterNot(c =>
-            tgt.fieldNames.exists(_.equalsIgnoreCase(c)))
-          require(extra.isEmpty, s"COPY INTO $root: files carry columns " +
-            s"not on the table: ${extra.mkString(", ")}")
-          val missing = tgt.fieldNames.filterNot(c =>
-            raw.columns.exists(_.equalsIgnoreCase(c)))
-          require(missing.isEmpty, s"COPY INTO $root: files lack table " +
-            s"column(s): ${missing.mkString(", ")}")
-          raw.select(tgt.fields.toSeq.map(f =>
-            col(raw.columns.find(_.equalsIgnoreCase(f.name)).get)
-              .cast(f.dataType).as(f.name)): _*)
-        }
-      val df = withGenerated(aligned)
-      val (phys, fullMap) = toPhysical(prev.colMap, prev.retired, df)
-      val uuid = writeDataDir(phys)
-      val regUuid = writeDataDir(spark.createDataFrame(newFiles)
-        .toDF("path", "size", "mtime").repartition(1), sized = false)
-      val (hdr, newRanges) = statsFor(uuid, fullMap)
-      val newBlooms = bloomsFor(uuid, fullMap)
-      val header = carriedHeader(prev.stats, hdr)
-      val headerCols = header.map(_._1).toSet
-      val checks = mergedChecks(prev.checks)
-      enforceChecksOnDirs(Seq(uuid), checks, colMap = fullMap)
-      val m = Manifest(prev.partCol, header,
-        prev.entries :+ ((uuid, None)),
-        prev.ranges.filter { case ((_, c), _) => headerCols(c) } ++ newRanges,
-        prev.txns, prev.blooms ++ newBlooms, checks, prev.tombstones,
-        colMap = fullMap, retired = prev.retired,
-        copied = prev.copied :+ regUuid, props = prev.props)
-      if (tryCommitManifest(cur + 1, manifestLines(m), "COPY INTO"))
-        return (cur + 1, newFiles.size.toLong)
-      attempt += 1
+      loaded = newFiles.size.toLong
+      if (newFiles.isEmpty) None // everything already loaded
+      else {
+        val raw = spark.read.format(format).options(options)
+          .option("mergeSchema", "true").load(newFiles.map(_._1): _*)
+        val aligned =
+          if (cur < 0 || prev.entries.isEmpty) raw
+          else {
+            val tgt = snapshot(cur).schema
+            val extra = raw.columns.filterNot(c =>
+              tgt.fieldNames.exists(_.equalsIgnoreCase(c)))
+            require(extra.isEmpty, s"COPY INTO $root: files carry columns " +
+              s"not on the table: ${extra.mkString(", ")}")
+            val missing = tgt.fieldNames.filterNot(c =>
+              raw.columns.exists(_.equalsIgnoreCase(c)))
+            require(missing.isEmpty, s"COPY INTO $root: files lack table " +
+              s"column(s): ${missing.mkString(", ")}")
+            raw.select(tgt.fields.toSeq.map(f =>
+              col(raw.columns.find(_.equalsIgnoreCase(f.name)).get)
+                .cast(f.dataType).as(f.name)): _*)
+          }
+        val df = withGenerated(aligned)
+        val (phys, fullMap) = toPhysical(prev.colMap, prev.retired, df)
+        val uuid = writeDataDir(phys)
+        val regUuid = writeDataDir(spark.createDataFrame(newFiles)
+          .toDF("path", "size", "mtime").repartition(1), sized = false)
+        val (hdr, newRanges) = statsFor(uuid, fullMap)
+        val checks = mergedChecks(prev.checks)
+        enforceChecksOnDirs(Seq(uuid), checks, colMap = fullMap)
+        Some(carried(prev, prev.entries, Seq((uuid, None)), hdr, newRanges,
+          bloomsFor(uuid, fullMap)).copy(checks = checks, colMap = fullMap,
+          copied = prev.copied :+ regUuid))
+      }
     }
-    throw new java.io.IOException(
-      s"TxLog copyInto lost $MaxRaceRetries optimistic races at $root")
+    (v, loaded)
   }
 
   /** The loaded-file registry [[copyInto]] maintains — (path, size,
@@ -2591,25 +2576,12 @@ final case class TxLog(spark: SparkSession, root: String,
     val entries =
       if (parts.isEmpty) Seq((uuid, Option.empty[String]))
       else parts.map(p => (uuid, Some(p)))
-    var attempt = 0
-    while (attempt < MaxRaceRetries) {
-      val cur = currentVersion()
-      val prev =
-        if (cur >= 0) {
-          val p = readManifestFull(cur)
-          if (alreadyCommitted(p, txn)) return cur
-          p
-        } else Manifest(None, Seq.empty, Seq.empty, Map.empty)
+    commit("OVERWRITE", txn) { (_, prev) =>
       val checks = mergedChecks(prev.checks)
       enforceChecksOnDirs(Seq(uuid), checks)
-      val lines = manifestLines(Manifest(Some(partCol), hdr, entries, ranges,
-        txnsAfter(prev.txns, txn), blooms, checks,
-        copied = prev.copied, props = prev.props))
-      if (tryCommitManifest(cur + 1, lines, "OVERWRITE")) return cur + 1
-      attempt += 1
+      Some(rewritten(prev, Some(partCol), entries, hdr, ranges, blooms)
+        .copy(checks = checks))
     }
-    throw new java.io.IOException(
-      s"TxLog overwritePartitioned lost $MaxRaceRetries optimistic races at $root")
   }
 
   /** CLUSTERED overwrite — the SERVING layout: one data SUBDIR per
@@ -2666,8 +2638,7 @@ final case class TxLog(spark: SparkSession, root: String,
       // empty snapshot, the same contract as overwrite()
       df.repartition(1).write.mode("overwrite").parquet(s"$dataDir/$uuid")
       val (hdr0, _) = statsFor(uuid)
-      return commitClustered(uuid, partCol, Seq((uuid, None)), hdr0,
-        Map.empty, txn)
+      return commitClustered(partCol, Seq((uuid, None)), hdr0, Map.empty, txn)
     }
     val parts = subs.map { n =>
       val v = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -2702,38 +2673,24 @@ final case class TxLog(spark: SparkSession, root: String,
             }
           }.toMap
       }
-    commitClustered(uuid, partCol, parts.map { case (d, v) => (d, Some(v)) },
+    commitClustered(partCol, parts.map { case (d, v) => (d, Some(v)) },
       usable, ranges, txn)
   }
 
-  /** The optimistic manifest-commit tail shared by both
-    * [[overwriteClustered]] branches (clustered subdir entries and the
-    * empty-snapshot short circuit). */
-  private def commitClustered(uuid: String, partCol: String,
+  /** The manifest-commit tail shared by both [[overwriteClustered]]
+    * branches (clustered subdir entries and the empty-snapshot short
+    * circuit). */
+  private def commitClustered(partCol: String,
                               entries: Seq[(String, Option[String])],
                               header: Seq[(String, String)],
                               ranges: Map[(String, String), (String, String)],
-                              txn: Option[(String, Long)]): Long = {
-    var attempt = 0
-    while (attempt < MaxRaceRetries) {
-      val cur = currentVersion()
-      val prev =
-        if (cur >= 0) {
-          val p = readManifestFull(cur)
-          if (alreadyCommitted(p, txn)) return cur
-          p
-        } else Manifest(None, Seq.empty, Seq.empty, Map.empty)
+                              txn: Option[(String, Long)]): Long =
+    commit("OVERWRITE", txn) { (_, prev) =>
       val checks = mergedChecks(prev.checks)
       enforceChecksOnDirs(entries.map(_._1).distinct, checks)
-      val lines = manifestLines(Manifest(Some(partCol), header, entries, ranges,
-        txnsAfter(prev.txns, txn), Map.empty, checks,
-        copied = prev.copied, props = prev.props))
-      if (tryCommitManifest(cur + 1, lines, "OVERWRITE")) return cur + 1
-      attempt += 1
+      Some(rewritten(prev, Some(partCol), entries, header, ranges, Map.empty)
+        .copy(checks = checks))
     }
-    throw new java.io.IOException(
-      s"TxLog overwriteClustered lost $MaxRaceRetries optimistic races at $root")
-  }
 
   /** CONVERT TO GRAFT (Delta's `CONVERT TO DELTA`): impose the
     * transaction log IN PLACE on an existing plain-parquet directory —
@@ -2922,165 +2879,114 @@ final case class TxLog(spark: SparkSession, root: String,
 
   /** Shared pruned-commit transaction: read only `src`'s partitions of
     * the current snapshot, apply `fold` to that pruned target, commit
-    * the result dir + carried lines as the next version. Retries the
-    * WHOLE transaction on a version race. */
+    * the result dir + carried lines as the next version. A lost race
+    * re-runs the WHOLE transaction against the new head — unless the
+    * fold can be rebased onto it (below). */
   private def partitionedFoldCommit(src: DataFrame, partCol: String,
                                     txn: Option[(String, Long)], op: String,
                                     resultPartsAreAffected: Boolean)(
                                     fold: DataFrame => DataFrame): Long = {
-    var attempt = 0
-    while (attempt < MaxRaceRetries) {
-      val base = currentVersion()
+    lazy val affected = partValues(src, partCol).toSet
+    /** One fold's result dir and the head manifest it read. */
+    final case class Folded(read: Manifest, uuid: String,
+                            fullMap: Seq[(String, String)], resultParts: Seq[String],
+                            hdr: Seq[(String, String)],
+                            ranges: Map[(String, String), (String, String)],
+                            blooms: Map[(String, String), String])
+    def affectedLines(m: Manifest) = m.entries.filter(_._2.exists(affected)).toSet
+    // PARTITION-GRANULAR conflict resolution:
+    // losing the version race does NOT by itself invalidate the fold
+    // — it read only `affected`'s partitions. If every intervening
+    // commit left those partitions' visible state untouched (same
+    // (dir, tag) lines, same tombstones on those dirs, same schema
+    // mapping, an all-tagged head on the same scheme), the folded dir
+    // is still exactly right and we REBASE: re-derive the carry set
+    // from the new head and commit the same dir one version later —
+    // both disjoint-partition writers pay one fold each, the Delta
+    // file-level-conflict behavior. Anything else (overlapping
+    // partitions, overwrite, column mapping changes, untagged head)
+    // re-runs the fold against the new head.
+    def rebasesOnto(f: Folded, head: Manifest): Boolean =
+      head.partCol == f.read.partCol &&
+        head.colMap == f.read.colMap && head.retired == f.read.retired &&
+        head.entries.forall(e => e._2.isDefined && !isForeign(e._2)) &&
+        affectedLines(head) == affectedLines(f.read) &&
+        affectedLines(f.read).map(_._1)
+          .forall(d => f.read.tombstones.get(d) == head.tombstones.get(d))
+    var last: Option[Folded] = None // a rebasable fold from an earlier attempt
+    commit(op.toUpperCase, txn) { (base, prev) =>
       require(base >= 0, s"TxLog table at $root has no commits to fold into")
-      val prev = readManifestFull(base)
-      // redelivered batch (streaming restart): already committed — the
-      // manifest records this writer's batch id. Exactly-once, no
-      // double-commit, no version churn.
-      if (alreadyCommitted(prev, txn)) return base
       // empty batch: no-op — commit nothing, current version stands
-      if (src.isEmpty) return base
-      val entries = prev.entries
-      val affected = partValues(src, partCol).toSet
-      val pruned = prev.partCol.contains(partCol) && entries.forall(_._2.isDefined)
-      // dirs tagged under a FOREIGN scheme (their layout predates the
-      // current partition column, see evolvePartitioning) cannot be
-      // pruned on this merge's column: they are merged in whole (their
-      // visible rows) and come out re-tagged under the current scheme
-      // — the table self-heals into the new layout one merge at a time
-      val foreignDirs = entries.filter(e => isForeign(e._2)).map(_._1).distinct
-      val (target, carry) =
-        if (pruned) {
-          val byDir = entries.groupBy(_._1)
-          val touched = byDir.toSeq.sortBy(_._1).flatMap { case (d, es) =>
-            if (foreignDirs.contains(d))
-              Some(tagFilter(prev.partCol, es.map(_._2))
-                .fold(dirVisibleRows(prev.tombstones, d))(
-                  dirVisibleRows(prev.tombstones, d).filter))
-            else {
-              val hit = es.flatMap(_._2).filter(affected)
-              if (hit.isEmpty) None
-              else Some(dirVisibleRows(prev.tombstones, d).filter(
-                org.apache.spark.sql.functions.col(partCol)
-                  .cast("string").isin(hit: _*)))
-            }
-          }
-          // dirVisibleRows is physical-named; the fold (and its src)
-          // speak the visible schema — map at the boundary
-          val t =
-            if (touched.nonEmpty)
-              toLogical(prev.colMap, touched.reduce(
-                _.unionByName(_, allowMissingColumns = true)))
-            else snapshot(base).filter(org.apache.spark.sql.functions.lit(false))
-          (t, entries.filter { case (d, p) =>
-            !foreignDirs.contains(d) && !p.exists(affected) })
-        } else (snapshot(base), Seq.empty[(String, Option[String])])
-      val folded = fold(target).localCheckpoint(true)
-      // carried dirs keep physical names — the rewritten dir must too
-      val (physFolded, fullMap) = toPhysical(prev.colMap, prev.retired, folded)
-      val uuid = writeDataDir(physFolded)
-      val (hdr, newRanges) = statsFor(uuid, fullMap)
-      val newBlooms = bloomsFor(uuid, fullMap)
-      val header = carriedHeader(prev.stats, hdr)
-      val headerCols = header.map(_._1).toSet
-      val carriedRanges = prev.ranges.filter { case ((d, c), _) =>
-        headerCols(c) && carry.exists(_._1 == d) }
-      val carriedBlooms = prev.blooms.filter { case ((d, _), _) =>
-        carry.exists(_._1 == d) }
-      // the retag path (and any delete-capable fold) must enumerate the
-      // result's actual partitions
-      // foreign-scheme dirs merged in contribute rows OUTSIDE the
-      // affected set — enumerate the folded result's real partitions
-      val resultParts =
-        if (resultPartsAreAffected && pruned && foreignDirs.isEmpty)
-          affected.toSeq.sorted
-        else partValues(folded, partCol)
-      // all affected partitions emptied AND nothing carried: keep the
-      // (zero-row) dir referenced untagged so the manifest resolves
-      val newEntries =
-        if (resultParts.isEmpty && carry.isEmpty) Seq((uuid, Option.empty[String]))
-        else resultParts.map(p => (uuid, Option(p)))
-      val carriedTombs = prev.tombstones.filter { case (d, _) =>
-        carry.exists(_._1 == d) }
-      val checks = mergedChecks(prev.checks)
-      enforceChecksOnDirs(Seq(uuid), checks, colMap = fullMap)
-      enforceChecks(entryTagSets(carry, Some(partCol)), Some(partCol),
-        addedChecks(prev.checks), carriedTombs, fullMap)
-      val lines = manifestLines(Manifest(Some(partCol), header,
-        carry ++ newEntries,
-        carriedRanges ++ newRanges, txnsAfter(prev.txns, txn),
-        carriedBlooms ++ newBlooms, checks, carriedTombs,
-        colMap = fullMap, retired = prev.retired, copied = prev.copied, props = prev.props))
-      onCommitAttempt()
-      if (tryCommitManifest(base + 1, lines, op.toUpperCase)) return base + 1
-      attempt += 1
-
-      // PARTITION-GRANULAR conflict resolution (r6 verdict item 5):
-      // losing the version race does NOT by itself invalidate the fold
-      // — it read only `affected`'s partitions. If every intervening
-      // commit left those partitions' visible state untouched (same
-      // (dir, tag) lines, same tombstones on those dirs, same schema
-      // mapping and checks), the folded dir is still exactly right and
-      // we REBASE: re-derive the carry set from the new head and commit
-      // the same dir one version later — both disjoint-partition
-      // writers pay one fold each, the Delta file-level-conflict
-      // behavior. Anything else (overlapping partitions, overwrite,
-      // column mapping or constraint changes, untagged head) falls
-      // back to the full re-merge below.
-      if (pruned && foreignDirs.isEmpty) {
-        var rebasing = true
-        while (rebasing && attempt < MaxRaceRetries) {
-          val nb = currentVersion()
-          val np = readManifestFull(nb)
-          if (alreadyCommitted(np, txn)) return nb
-          def affectedLines(m: Manifest) =
-            m.entries.filter(_._2.exists(affected)).toSet
-          val oursUntouched = affectedLines(np) == affectedLines(prev) &&
-            affectedLines(prev).map(_._1)
-              .forall(d => prev.tombstones.get(d) == np.tombstones.get(d))
-          val safe = np.partCol == prev.partCol &&
-            np.colMap == prev.colMap && np.retired == prev.retired &&
-            np.entries.forall(_._2.isDefined) &&
-            !np.entries.exists(e => isForeign(e._2)) &&
-            oursUntouched
-          if (!safe) rebasing = false
-          else {
-            val carry2 = np.entries.filter { case (_, p) => !p.exists(affected) }
-            val header2 = carriedHeader(np.stats, hdr)
-            val headerCols2 = header2.map(_._1).toSet
-            val carriedRanges2 = np.ranges.filter { case ((d, c), _) =>
-              headerCols2(c) && carry2.exists(_._1 == d) }
-            val carriedBlooms2 = np.blooms.filter { case ((d, _), _) =>
-              carry2.exists(_._1 == d) }
-            val carriedTombs2 = np.tombstones.filter { case (d, _) =>
-              carry2.exists(_._1 == d) }
-            val checks2 = mergedChecks(np.checks)
-            // the winner's carried dirs have not been validated against
-            // any constraint THIS writer is introducing (none, usually)
-            enforceChecks(entryTagSets(carry2, Some(partCol)), Some(partCol),
-              addedChecks(np.checks), carriedTombs2, fullMap)
-            val newEntries2 =
-              if (resultParts.isEmpty && carry2.isEmpty)
-                Seq((uuid, Option.empty[String]))
-              else resultParts.map(p => (uuid, Option(p)))
-            val lines2 = manifestLines(Manifest(Some(partCol), header2,
-              carry2 ++ newEntries2,
-              carriedRanges2 ++ newRanges, txnsAfter(np.txns, txn),
-              carriedBlooms2 ++ newBlooms, checks2, carriedTombs2,
-              colMap = fullMap, retired = np.retired, copied = np.copied, props = np.props))
-            if (tryCommitManifest(nb + 1, lines2, op.toUpperCase)) return nb + 1
-            attempt += 1
-          }
+      if (src.isEmpty) None
+      else {
+        val pruned = prev.partCol.contains(partCol) && prev.entries.forall(_._2.isDefined)
+        // dirs tagged under a FOREIGN scheme (their layout predates the
+        // current partition column, see evolvePartitioning) cannot be
+        // pruned on this merge's column: they are merged in whole (their
+        // visible rows) and come out re-tagged under the current scheme
+        // — the table self-heals into the new layout one merge at a time
+        val foreignDirs = prev.entries.filter(e => isForeign(e._2)).map(_._1).distinct
+        val f = last.filter(rebasesOnto(_, prev)).getOrElse {
+          val target =
+            if (pruned) {
+              val touched = prev.entries.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (d, es) =>
+                if (foreignDirs.contains(d))
+                  Some(tagFilter(prev.partCol, es.map(_._2))
+                    .fold(dirVisibleRows(prev.tombstones, d))(
+                      dirVisibleRows(prev.tombstones, d).filter))
+                else {
+                  val hit = es.flatMap(_._2).filter(affected)
+                  if (hit.isEmpty) None
+                  else Some(dirVisibleRows(prev.tombstones, d).filter(
+                    org.apache.spark.sql.functions.col(partCol)
+                      .cast("string").isin(hit: _*)))
+                }
+              }
+              // dirVisibleRows is physical-named; the fold (and its src)
+              // speak the visible schema — map at the boundary
+              if (touched.nonEmpty)
+                toLogical(prev.colMap, touched.reduce(
+                  _.unionByName(_, allowMissingColumns = true)))
+              else snapshot(base).filter(org.apache.spark.sql.functions.lit(false))
+            } else snapshot(base)
+          val folded = fold(target).localCheckpoint(true)
+          // carried dirs keep physical names — the rewritten dir must too
+          val (physFolded, fullMap) = toPhysical(prev.colMap, prev.retired, folded)
+          val uuid = writeDataDir(physFolded)
+          val (hdr, newRanges) = statsFor(uuid, fullMap)
+          // the retag path (and any delete-capable fold) must enumerate the
+          // result's actual partitions; foreign-scheme dirs merged in
+          // contribute rows OUTSIDE the affected set — enumerate the
+          // folded result's real partitions
+          val resultParts =
+            if (resultPartsAreAffected && pruned && foreignDirs.isEmpty)
+              affected.toSeq.sorted
+            else partValues(folded, partCol)
+          Folded(prev, uuid, fullMap, resultParts, hdr, newRanges, bloomsFor(uuid, fullMap))
         }
+        // only a pruned fold over one scheme read a partition subset
+        last = if (pruned && foreignDirs.isEmpty) Some(f) else None
+        val carry =
+          if (pruned) prev.entries.filter { case (d, p) =>
+            !foreignDirs.contains(d) && !p.exists(affected) }
+          else Seq.empty
+        // all affected partitions emptied AND nothing carried: keep the
+        // (zero-row) dir referenced untagged so the manifest resolves
+        val newEntries =
+          if (f.resultParts.isEmpty && carry.isEmpty) Seq((f.uuid, Option.empty[String]))
+          else f.resultParts.map(p => (f.uuid, Option(p)))
+        val next = carried(prev, carry, newEntries, f.hdr, f.ranges, f.blooms)
+          .copy(partCol = Some(partCol), colMap = f.fullMap)
+        // the carried dirs have not been validated against any
+        // constraint THIS writer is introducing (none, usually)
+        val checks = mergedChecks(prev.checks)
+        enforceChecksOnDirs(Seq(f.uuid), checks, colMap = f.fullMap)
+        enforceChecks(entryTagSets(carry, Some(partCol)), Some(partCol),
+          addedChecks(prev.checks), next.tombstones, f.fullMap)
+        Some(next.copy(checks = checks))
       }
     }
-    throw new java.io.IOException(
-      s"TxLog $op lost $MaxRaceRetries optimistic races at $root")
   }
-
-  /** Test seam: invoked between a pruned fold's snapshot read and its
-    * first manifest-commit attempt — lets a spec inject a concurrent
-    * writer deterministically. No-op in production. */
-  private[pipeline] var onCommitAttempt: () => Unit = () => ()
 
   /** SCD1 MERGE commit: upsert `src` by `keys` against the current
     * snapshot (same semantics as [[Upsert.merge]]) and commit the
@@ -3097,13 +3003,9 @@ final case class TxLog(spark: SparkSession, root: String,
     * equivalent to retrying the transaction. */
   def merge(src: DataFrame, keys: Seq[String],
             txn: Option[(String, Long)] = None,
-            evolve: Boolean = false): Long = {
-    var attempt = 0
-    while (attempt < MaxRaceRetries) {
-      val base = currentVersion()
+            evolve: Boolean = false): Long =
+    commit("MERGE", txn) { (base, prev) =>
       require(base >= 0, s"TxLog table at $root has no commits to merge into")
-      val prev = readManifestFull(base)
-      if (alreadyCommitted(prev, txn)) return base
       // materialize before the commit swaps the snapshot out from
       // under the plan (merged reads the base snapshot's files);
       // evolve = Delta's withSchemaEvolution (additive, target-only
@@ -3114,15 +3016,9 @@ final case class TxLog(spark: SparkSession, root: String,
       val (hdr, ranges) = statsFor(uuid)
       val checks = mergedChecks(prev.checks)
       enforceChecksOnDirs(Seq(uuid), checks)
-      val lines = manifestLines(Manifest(None, hdr, Seq((uuid, None)), ranges,
-        txnsAfter(prev.txns, txn), bloomsFor(uuid), checks,
-        copied = prev.copied, props = prev.props))
-      if (tryCommitManifest(base + 1, lines, "MERGE")) return base + 1
-      attempt += 1
+      Some(rewritten(prev, None, Seq((uuid, None)), hdr, ranges, bloomsFor(uuid))
+        .copy(checks = checks))
     }
-    throw new java.io.IOException(
-      s"TxLog merge lost $MaxRaceRetries optimistic races at $root")
-  }
 
   /** Full conditional MERGE — Delta's complete clause surface (see
     * [[MergeInto]] for the model): matched rows update or delete under
@@ -3186,12 +3082,8 @@ final case class TxLog(spark: SparkSession, root: String,
     checkClauses(notMatchedBySource, "WHEN NOT MATCHED BY SOURCE") {
       case Update(_) | Delete => true; case _ => false }
     val SrcMark = "__merge_src"
-    var attempt = 0
-    while (attempt < MaxRaceRetries) {
-      val base = currentVersion()
+    commit("MERGE", txn) { (base, prev) =>
       require(base >= 0, s"TxLog table at $root has no commits to merge into")
-      val prev = readManifestFull(base)
-      if (alreadyCommitted(prev, txn)) return base
       val tgtSchema = snapshot(base).schema
       def srcHas(n: String) = src.columns.exists(_.equalsIgnoreCase(n))
       // additive evolution: source-only columns extend the commit's
@@ -3276,61 +3168,48 @@ final case class TxLog(spark: SparkSession, root: String,
             col(s"$targetAlias.$DvRow").as(DvRow), col(ActCol)) ++
           outSchema.fields.toSeq.map(f => valueChain(f).as(f.name)): _*)
         .localCheckpoint(true) // ∝ touched + inserted rows, not table
-      if (fired.isEmpty) return base // nothing fired anywhere: no-op
-      // SQL MERGE cardinality contract: a target row modified by two
-      // source matches fails the statement, not last-writer-wins
-      if (mActs.nonEmpty &&
-          fired.filter(col(ActCol).isin(mActs.map(_._1): _*))
-            .groupBy(col(DvDir), col(DvFile), col(DvRow)).count()
-            .filter(col("count") > 1).limit(1).count() > 0)
-        throw new IllegalStateException("MERGE cardinality violation: " +
-          "multiple source rows matched and attempted to modify the same " +
-          s"target row at $root — deduplicate the source on the merge keys")
-      val deleteActs = (mActs ++ nActs).collect {
-        case (g, When(_, Delete)) => g }
-      // affected dirs: bounded metadata (≤ table dir count) — the
-      // sanctioned driver round-trip
-      val affected = fired.filter(col(DvDir).isNotNull).select(col(DvDir))
-        .distinct().collect().map(_.getString(0)).toSeq.sorted
-      val outCols = outSchema.fields.toSeq.map(f => col(f.name))
-      val survivors = addressed.filter(col(DvDir).isin(affected: _*))
-        .join(fired.select(col(DvDir), col(DvFile), col(DvRow)),
-          Seq(DvDir, DvFile, DvRow), "left_anti")
-      val newData = survivors.select(outCols: _*).unionByName(
-        fired.filter(if (deleteActs.isEmpty) lit(true)
-          else !col(ActCol).isin(deleteActs: _*)).select(outCols: _*))
-      val (physNew, fullMap) = toPhysical(prev.colMap, prev.retired, newData)
-      val uuid = writeDataDir(physNew)
-      val (hdr, newRanges) = statsFor(uuid, fullMap)
-      val newBlooms = bloomsFor(uuid, fullMap)
-      val header = carriedHeader(prev.stats, hdr)
-      val headerCols = header.map(_._1).toSet
-      val carry = prev.entries.filterNot(e => affected.contains(e._1))
-      val carriedRanges = prev.ranges.filter { case ((d, c), _) =>
-        headerCols(c) && carry.exists(_._1 == d) }
-      val carriedBlooms = prev.blooms.filter { case ((d, _), _) =>
-        carry.exists(_._1 == d) }
-      val carriedTombs = prev.tombstones.filter { case (d, _) =>
-        carry.exists(_._1 == d) }
-      val newEntries = prev.partCol match {
-        case Some(pc) =>
-          val ps = partValues(newData, pc)
-          if (ps.isEmpty && carry.isEmpty) Seq((uuid, Option.empty[String]))
-          else ps.map(p => (uuid, Option(p)))
-        case None => Seq((uuid, Option.empty[String]))
+      if (fired.isEmpty) None // nothing fired anywhere: no-op
+      else {
+        // SQL MERGE cardinality contract: a target row modified by two
+        // source matches fails the statement, not last-writer-wins
+        if (mActs.nonEmpty &&
+            fired.filter(col(ActCol).isin(mActs.map(_._1): _*))
+              .groupBy(col(DvDir), col(DvFile), col(DvRow)).count()
+              .filter(col("count") > 1).limit(1).count() > 0)
+          throw new IllegalStateException("MERGE cardinality violation: " +
+            "multiple source rows matched and attempted to modify the same " +
+            s"target row at $root — deduplicate the source on the merge keys")
+        val deleteActs = (mActs ++ nActs).collect {
+          case (g, When(_, Delete)) => g }
+        // affected dirs: bounded metadata (≤ table dir count) — the
+        // sanctioned driver round-trip
+        val affected = fired.filter(col(DvDir).isNotNull).select(col(DvDir))
+          .distinct().collect().map(_.getString(0)).toSeq.sorted
+        val outCols = outSchema.fields.toSeq.map(f => col(f.name))
+        val survivors = addressed.filter(col(DvDir).isin(affected: _*))
+          .join(fired.select(col(DvDir), col(DvFile), col(DvRow)),
+            Seq(DvDir, DvFile, DvRow), "left_anti")
+        val newData = survivors.select(outCols: _*).unionByName(
+          fired.filter(if (deleteActs.isEmpty) lit(true)
+            else !col(ActCol).isin(deleteActs: _*)).select(outCols: _*))
+        val (physNew, fullMap) = toPhysical(prev.colMap, prev.retired, newData)
+        val uuid = writeDataDir(physNew)
+        val (hdr, newRanges) = statsFor(uuid, fullMap)
+        val newBlooms = bloomsFor(uuid, fullMap)
+        val carry = prev.entries.filterNot(e => affected.contains(e._1))
+        val newEntries = prev.partCol match {
+          case Some(pc) =>
+            val ps = partValues(newData, pc)
+            if (ps.isEmpty && carry.isEmpty) Seq((uuid, Option.empty[String]))
+            else ps.map(p => (uuid, Option(p)))
+          case None => Seq((uuid, Option.empty[String]))
+        }
+        val checks = mergedChecks(prev.checks)
+        enforceChecksOnDirs(Seq(uuid), checks, colMap = fullMap)
+        Some(carried(prev, carry, newEntries, hdr, newRanges, newBlooms)
+          .copy(checks = checks, colMap = fullMap))
       }
-      val checks = mergedChecks(prev.checks)
-      enforceChecksOnDirs(Seq(uuid), checks, colMap = fullMap)
-      val lines = manifestLines(Manifest(prev.partCol, header,
-        carry ++ newEntries, carriedRanges ++ newRanges,
-        txnsAfter(prev.txns, txn), carriedBlooms ++ newBlooms, checks,
-        carriedTombs, colMap = fullMap, retired = prev.retired,
-        copied = prev.copied, props = prev.props))
-      if (tryCommitManifest(base + 1, lines, "MERGE")) return base + 1
-      attempt += 1
     }
-    throw new java.io.IOException(
-      s"TxLog mergeInto lost $MaxRaceRetries optimistic races at $root")
   }
 
   /** Copy-on-write `UPDATE ... SET ... [WHERE ...]` commit: every
@@ -3339,117 +3218,96 @@ final case class TxLog(spark: SparkSession, root: String,
     * the PRE-update row (one projection computes every assignment, so
     * `SET a = b, b = a` swaps — SQL UPDATE semantics), cast back to
     * the column's existing type (UPDATE never changes the schema).
-    * The updated relation commits as a fresh single-dir snapshot like
-    * [[merge]]; same optimistic-transaction retry. */
-  /** Copy-on-write UPDATE at DIR granularity: stats prune the
-    * predicate to candidate dirs ([[mayMatchDirs]]), an addressed
-    * probe finds the dirs actually containing matches, and ONLY those
-    * rewrite — every other dir's manifest lines (entries, tags,
-    * ranges, Blooms, tombstones) carry untouched. Write amplification
-    * tracks the matched dirs, not the table: the one-customer UPDATE
-    * on a 100 TB table rewrites the dirs holding that customer.
-    * Partition tagging survives (the rewritten rows re-tag from data,
-    * so an UPDATE that moves rows across partitions stays correct);
-    * rewritten dirs' deletion vectors materialize, carried dirs keep
-    * theirs. Column-mapped tables take the legacy whole-snapshot
-    * rewrite, which re-homes the table on identity mapping. */
+    *
+    * DIR granularity: stats prune the predicate to candidate dirs
+    * ([[mayMatchDirs]]), an addressed probe finds the dirs actually
+    * containing matches, and ONLY those rewrite — every other dir's
+    * manifest lines (entries, tags, ranges, Blooms, tombstones) carry
+    * untouched. Write amplification tracks the matched dirs, not the
+    * table: the one-customer UPDATE on a 100 TB table rewrites the
+    * dirs holding that customer. Partition tagging survives (the
+    * rewritten rows re-tag from data, so an UPDATE that moves rows
+    * across partitions stays correct); rewritten dirs' deletion
+    * vectors materialize, carried dirs keep theirs. Column-mapped
+    * tables take the legacy whole-snapshot rewrite, which re-homes the
+    * table on identity mapping. Same optimistic-transaction retry as
+    * [[merge]]. */
   def updateWhere(assignments: Seq[(String, String)],
                   predicate: Option[String] = None): Long = {
-    import org.apache.spark.sql.functions.{col, expr, lit, when}
     require(assignments.nonEmpty, "UPDATE requires at least one assignment")
-    var attempt = 0
-    while (attempt < MaxRaceRetries) {
-      val base = currentVersion()
-      require(base >= 0, s"TxLog table at $root has no commits to update")
-      val prev = readManifestFull(base)
-      val snap = snapshot(base)
-      val unknown = assignments.map(_._1).filterNot(snap.columns.contains)
-      require(unknown.isEmpty,
-        s"UPDATE of unknown column(s): ${unknown.mkString(", ")}")
-      val cond = predicate.map(expr).getOrElse(lit(true))
-      def applyAssignments(df: DataFrame): DataFrame =
-        df.select(snap.schema.fields.map { f =>
-          assignments.find(_._1 == f.name) match {
-            case Some((_, rhs)) =>
-              when(cond, expr(rhs).cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-            case None => col(f.name)
-          }
-        }.toSeq: _*)
-      if (prev.colMap.nonEmpty) {
-        // legacy path: full rewrite onto identity mapping
-        val updated = applyAssignments(snap).localCheckpoint(true)
-        val uuid = writeDataDir(updated)
-        val (hdr, ranges) = statsFor(uuid)
-        val checks = mergedChecks(prev.checks)
-        enforceChecksOnDirs(Seq(uuid), checks)
-        val lines = manifestLines(Manifest(None, hdr, Seq((uuid, None)), ranges,
-          txnsAfter(prev.txns, None), bloomsFor(uuid), checks,
-          copied = prev.copied, props = prev.props))
-        if (tryCommitManifest(base + 1, lines, "UPDATE")) return base + 1
-      } else {
-        val candidates = predicate.fold(prev.dirs)(p => mayMatchDirs(prev.dirs, p))
-        val affected =
-          if (candidates.isEmpty) Seq.empty[String]
-          else addressedVisibleRows(prev, Some(candidates.toSet)).filter(cond)
-            .select(col(DvDir)).distinct()
-            .collect().map(_.getString(0)).toSeq.sorted
-        if (affected.isEmpty) {
-          // zero matches: a metadata-only version (UPDATE always
-          // commits — history records the statement ran)
-          if (tryCommitManifest(base + 1,
-              manifestLines(prev.copy(txns = txnsAfter(prev.txns, None))),
-              "UPDATE")) return base + 1
-        } else {
-          val aff = affected.toSet
-          val carry = prev.entries.filterNot(e => aff(e._1))
-          val raw = prev.entries.filter(e => aff(e._1))
-            .groupBy(_._1).toSeq.sortBy(_._1).map { case (d, es) =>
-              val baseDf = dirVisibleRows(prev.tombstones, d)
-              tagFilter(prev.partCol, es.map(_._2)).fold(baseDf)(baseDf.filter)
-            }.reduce(_.unionByName(_, allowMissingColumns = true))
-          // pre-evolution dirs may lack later columns: widen to the
-          // snapshot schema so assignments/predicates resolve
-          val widened = snap.schema.fields
-            .filterNot(f => raw.columns.contains(f.name))
-            .foldLeft(raw)((df, f) =>
-              df.withColumn(f.name, lit(null).cast(f.dataType)))
-          val updated = applyAssignments(widened).localCheckpoint(true)
-          val uuid = writeDataDir(updated)
-          val newEntries = prev.partCol match {
-            case Some(pc) =>
-              // an UPDATE writing NULL partition values: untagged
-              // entry keeps those rows visible
-              partValuesOpt(snapshotOfDir(uuid), pc)
-                .fold(Seq((uuid, Option.empty[String])))(
-                  _.map(p => (uuid, Option(p))))
-            case None => Seq((uuid, Option.empty[String]))
-          }
-          val (hdr, newRanges) = statsFor(uuid)
-          val header = carriedHeader(prev.stats, hdr)
-          val headerCols = header.map(_._1).toSet
-          val carriedRanges = prev.ranges.filter { case ((d, c), _) =>
-            headerCols(c) && carry.exists(_._1 == d) }
-          val carriedBlooms = prev.blooms.filter { case ((d, _), _) =>
-            carry.exists(_._1 == d) }
-          val carriedTombs = prev.tombstones.filter { case (d, _) =>
-            carry.exists(_._1 == d) }
-          val checks = mergedChecks(prev.checks)
-          enforceChecksOnDirs(Seq(uuid), checks)
-          enforceChecks(entryTagSets(carry, prev.partCol), prev.partCol,
-            addedChecks(prev.checks), carriedTombs, prev.colMap)
-          val m2 = Manifest(prev.partCol, header, carry ++ newEntries,
-            carriedRanges ++ newRanges, txnsAfter(prev.txns, None),
-            carriedBlooms ++ bloomsFor(uuid), checks, carriedTombs,
-            retired = prev.retired, copied = prev.copied, props = prev.props)
-          if (tryCommitManifest(base + 1, manifestLines(m2), "UPDATE"))
-            return base + 1
-        }
-      }
-      attempt += 1
-    }
-    throw new java.io.IOException(
-      s"TxLog updateWhere lost $MaxRaceRetries optimistic races at $root")
+    commit("UPDATE")(copyOnWriteUpdate(assignments, predicate))
   }
+
+  /** One attempt of [[updateWhere]] against head `base`. */
+  private def copyOnWriteUpdate(assignments: Seq[(String, String)],
+                                predicate: Option[String])(
+                                base: Long, prev: Manifest): Option[Manifest] = {
+    import org.apache.spark.sql.functions.{col, expr, lit, when}
+    require(base >= 0, s"TxLog table at $root has no commits to update")
+    val snap = snapshot(base)
+    val unknown = assignments.map(_._1).filterNot(snap.columns.contains)
+    require(unknown.isEmpty,
+      s"UPDATE of unknown column(s): ${unknown.mkString(", ")}")
+    val cond = predicate.map(expr).getOrElse(lit(true))
+    def applyAssignments(df: DataFrame): DataFrame =
+      df.select(snap.schema.fields.map { f =>
+        assignments.find(_._1 == f.name) match {
+          case Some((_, rhs)) =>
+            when(cond, expr(rhs).cast(f.dataType)).otherwise(col(f.name)).as(f.name)
+          case None => col(f.name)
+        }
+      }.toSeq: _*)
+    val checks = mergedChecks(prev.checks)
+    if (prev.colMap.nonEmpty) {
+      // legacy path: full rewrite onto identity mapping
+      val updated = applyAssignments(snap).localCheckpoint(true)
+      val uuid = writeDataDir(updated)
+      val (hdr, ranges) = statsFor(uuid)
+      enforceChecksOnDirs(Seq(uuid), checks)
+      return Some(rewritten(prev, None, Seq((uuid, None)), hdr, ranges,
+        bloomsFor(uuid)).copy(checks = checks))
+    }
+    val candidates = predicate.fold(prev.dirs)(p => mayMatchDirs(prev.dirs, p))
+    val affected =
+      if (candidates.isEmpty) Seq.empty[String]
+      else addressedVisibleRows(prev, Some(candidates.toSet)).filter(cond)
+        .select(col(DvDir)).distinct()
+        .collect().map(_.getString(0)).toSeq.sorted
+    // zero matches: a metadata-only version (UPDATE always commits —
+    // history records the statement ran)
+    if (affected.isEmpty) return Some(prev)
+    val aff = affected.toSet
+    val carry = prev.entries.filterNot(e => aff(e._1))
+    val raw = prev.entries.filter(e => aff(e._1))
+      .groupBy(_._1).toSeq.sortBy(_._1).map { case (d, es) =>
+        val baseDf = dirVisibleRows(prev.tombstones, d)
+        tagFilter(prev.partCol, es.map(_._2)).fold(baseDf)(baseDf.filter)
+      }.reduce(_.unionByName(_, allowMissingColumns = true))
+    // pre-evolution dirs may lack later columns: widen to the
+    // snapshot schema so assignments/predicates resolve
+    val widened = snap.schema.fields
+      .filterNot(f => raw.columns.contains(f.name))
+      .foldLeft(raw)((df, f) =>
+        df.withColumn(f.name, lit(null).cast(f.dataType)))
+    val updated = applyAssignments(widened).localCheckpoint(true)
+    val uuid = writeDataDir(updated)
+    val (hdr, newRanges) = statsFor(uuid)
+    val next = carried(prev, carry, taggedFromData(uuid, prev.partCol), hdr,
+      newRanges, bloomsFor(uuid))
+    enforceChecksOnDirs(Seq(uuid), checks)
+    enforceChecks(entryTagSets(carry, prev.partCol), prev.partCol,
+      addedChecks(prev.checks), next.tombstones, prev.colMap)
+    Some(next.copy(checks = checks))
+  }
+
+  /** Entries for a freshly-written dir on a table tagged by `partCol`:
+    * one per partition value in its data. An UPDATE may move rows
+    * across partitions or write NULL partition values — the latter
+    * leaves the dir untagged, keeping those rows visible. */
+  private def taggedFromData(uuid: String,
+                             partCol: Option[String]): Seq[(String, Option[String])] =
+    partCol.flatMap(pc => partValuesOpt(snapshotOfDir(uuid), pc))
+      .fold(Seq((uuid, Option.empty[String])))(_.map(p => (uuid, Option(p))))
 
   /** MERGE-ON-READ update — the deletion-vector UPDATE (Delta's
     * DV-enabled UPDATE): matching rows are tombstoned by physical
@@ -3465,91 +3323,67 @@ final case class TxLog(spark: SparkSession, root: String,
     * predicate-pruned scan means a keyed update on a stats/bloom
     * column opens only the matching dirs). Zero matches commit a
     * metadata-only version, matching [[updateWhere]] — history
-    * records the statement ran. Column-mapped tables delegate to
-    * [[updateWhere]]: appends speak physical names, and the mapped
-    * write path is the CoW rewrite. */
+    * records the statement ran. Column-mapped tables take
+    * [[updateWhere]]'s path: appends speak physical names, and the
+    * mapped write path is the CoW rewrite. */
   def updateWhereMoR(assignments: Seq[(String, String)],
                      predicate: Option[String] = None): Long = {
     import org.apache.spark.sql.functions.{col, expr, lit}
     require(assignments.nonEmpty, "UPDATE requires at least one assignment")
-    var attempt = 0
-    while (attempt < MaxRaceRetries) {
-      val base = currentVersion()
+    commit("UPDATE") { (base, prev) =>
       require(base >= 0, s"TxLog table at $root has no commits to update")
-      val prev = readManifestFull(base)
-      if (prev.colMap.nonEmpty) return updateWhere(assignments, predicate)
-      val snap = snapshot(base)
-      val unknown = assignments.map(_._1).filterNot(snap.columns.contains)
-      require(unknown.isEmpty,
-        s"UPDATE of unknown column(s): ${unknown.mkString(", ")}")
-      // predicate-pruned: dirs whose committed stats exclude the
-      // predicate cannot contain hits (stats stay sound over
-      // tombstones — deletes only narrow a dir's visible rows)
-      val candidates = predicate.fold(prev.dirs)(p =>
-        mayMatchDirs(prev.dirs, p)).toSet
-      val hits =
-        if (candidates.isEmpty) None
-        else Some(addressedVisibleRows(prev, Some(candidates))
-          .filter(predicate.map(expr).getOrElse(lit(true)))
-          .localCheckpoint(true))
-      // affected-dir list: bounded metadata (≤ table dir count)
-      val affected = hits.fold(Seq.empty[String])(h =>
-        h.select(col(DvDir)).distinct()
-          .collect().map(_.getString(0)).toSeq.sorted)
-      if (affected.isEmpty) {
-        if (tryCommitManifest(base + 1,
-            manifestLines(prev.copy(txns = txnsAfter(prev.txns, None))),
-            "UPDATE")) return base + 1
-      } else {
-        val h = hits.get
-        // the hit addresses become a tombstone sidecar shared by every
-        // affected dir — deleteWhere's shape
-        val tsUuid = writeDataDir(
-          h.select(col(DvFile).as("file"), col(DvRow).as("row")))
-        val tombs = affected.foldLeft(prev.tombstones)((acc, d) =>
-          acc + (d -> (acc.getOrElse(d, Nil) :+ tsUuid)))
-        // the updated images append in the snapshot schema; hits all
-        // match, so assignments apply unconditionally (RHS evaluated
-        // against the pre-update row)
-        val updated = h.select(snap.schema.fields.map { f =>
-          assignments.find(_._1 == f.name) match {
-            case Some((_, rhs)) => expr(rhs).cast(f.dataType).as(f.name)
-            case None => col(f.name).cast(f.dataType).as(f.name)
-          }
-        }.toSeq: _*).localCheckpoint(true)
-        val uuid = writeDataDir(updated)
-        val newEntries = prev.partCol match {
-          case Some(pc) =>
-            // an UPDATE may move rows across partitions (or write NULL
-            // partition values): tag the new dir from its data, like
-            // every other append
-            partValuesOpt(snapshotOfDir(uuid), pc)
-              .fold(Seq((uuid, Option.empty[String])))(
-                _.map(p => (uuid, Option(p))))
-          case None => Seq((uuid, Option.empty[String]))
+      if (prev.colMap.nonEmpty) copyOnWriteUpdate(assignments, predicate)(base, prev)
+      else {
+        val snap = snapshot(base)
+        val unknown = assignments.map(_._1).filterNot(snap.columns.contains)
+        require(unknown.isEmpty,
+          s"UPDATE of unknown column(s): ${unknown.mkString(", ")}")
+        // predicate-pruned: dirs whose committed stats exclude the
+        // predicate cannot contain hits (stats stay sound over
+        // tombstones — deletes only narrow a dir's visible rows)
+        val candidates = predicate.fold(prev.dirs)(p =>
+          mayMatchDirs(prev.dirs, p)).toSet
+        val hits =
+          if (candidates.isEmpty) None
+          else Some(addressedVisibleRows(prev, Some(candidates))
+            .filter(predicate.map(expr).getOrElse(lit(true)))
+            .localCheckpoint(true))
+        // affected-dir list: bounded metadata (≤ table dir count)
+        val affected = hits.fold(Seq.empty[String])(h =>
+          h.select(col(DvDir)).distinct()
+            .collect().map(_.getString(0)).toSeq.sorted)
+        if (affected.isEmpty) Some(prev)
+        else {
+          val h = hits.get
+          // the hit addresses become a tombstone sidecar shared by every
+          // affected dir — deleteWhere's shape
+          val tsUuid = writeDataDir(
+            h.select(col(DvFile).as("file"), col(DvRow).as("row")))
+          val tombs = affected.foldLeft(prev.tombstones)((acc, d) =>
+            acc + (d -> (acc.getOrElse(d, Nil) :+ tsUuid)))
+          // the updated images append in the snapshot schema; hits all
+          // match, so assignments apply unconditionally (RHS evaluated
+          // against the pre-update row)
+          val updated = h.select(snap.schema.fields.map { f =>
+            assignments.find(_._1 == f.name) match {
+              case Some((_, rhs)) => expr(rhs).cast(f.dataType).as(f.name)
+              case None => col(f.name).cast(f.dataType).as(f.name)
+            }
+          }.toSeq: _*).localCheckpoint(true)
+          val uuid = writeDataDir(updated)
+          val (hdr, newRanges) = statsFor(uuid)
+          val checks = mergedChecks(prev.checks)
+          enforceChecksOnDirs(Seq(uuid), checks)
+          enforceChecks(entryTagSets(prev.entries, prev.partCol), prev.partCol,
+            addedChecks(prev.checks), tombs, prev.colMap)
+          // every prior entry carries (nothing was rewritten), so every
+          // prior range/bloom stays — bounds over tombstoned rows are
+          // loose but sound for skipping
+          Some(carried(prev, prev.entries, taggedFromData(uuid, prev.partCol), hdr,
+            newRanges, bloomsFor(uuid)).copy(checks = checks, tombstones = tombs))
         }
-        val (hdr, newRanges) = statsFor(uuid)
-        val header = carriedHeader(prev.stats, hdr)
-        val headerCols = header.map(_._1).toSet
-        // every prior entry carries (nothing was rewritten), so every
-        // prior range/bloom stays — bounds over tombstoned rows are
-        // loose but sound for skipping
-        val keptRanges = prev.ranges.filter { case ((_, c), _) => headerCols(c) }
-        val checks = mergedChecks(prev.checks)
-        enforceChecksOnDirs(Seq(uuid), checks)
-        enforceChecks(entryTagSets(prev.entries, prev.partCol), prev.partCol,
-          addedChecks(prev.checks), tombs, prev.colMap)
-        val m2 = Manifest(prev.partCol, header, prev.entries ++ newEntries,
-          keptRanges ++ newRanges, txnsAfter(prev.txns, None),
-          prev.blooms ++ bloomsFor(uuid), checks, tombs,
-          retired = prev.retired, copied = prev.copied, props = prev.props)
-        if (tryCommitManifest(base + 1, manifestLines(m2), "UPDATE"))
-          return base + 1
       }
-      attempt += 1
     }
-    throw new java.io.IOException(
-      s"TxLog updateWhereMoR lost $MaxRaceRetries optimistic races at $root")
   }
 
   /** MERGE-ON-READ delete — Delta deletion-vector parity: rows
@@ -3570,33 +3404,29 @@ final case class TxLog(spark: SparkSession, root: String,
     * snapshot read, so a lost race recomputes it. */
   def deleteWhere(predicate: String): Long = {
     import org.apache.spark.sql.functions.{col, expr}
-    var attempt = 0
-    while (attempt < MaxRaceRetries) {
-      val cur = currentVersion()
+    commit("DELETE") { (cur, m) =>
       require(cur >= 0, s"TxLog table at $root has no commits to delete from")
-      val m = readManifestFull(cur)
       // predicate-pruned scan: a dir whose committed stats exclude the
       // predicate cannot contain hits — a one-key GDPR delete on a
       // stats/bloom column opens the matching dirs, not the table
       val candidates = mayMatchDirs(m.dirs, predicate).toSet
-      if (candidates.isEmpty) return cur // stats exclude every dir — no-op
-      val hits = addressedVisibleRows(m, Some(candidates)).filter(expr(predicate))
-        .select(col(DvFile).as("file"), col(DvRow).as("row"),
-          col(DvDir).as("__dir")).localCheckpoint(true)
-      // affected-dir list: bounded metadata (≤ table dir count) — the
-      // sanctioned driver round-trip
-      val affected = hits.select(col("__dir")).distinct()
-        .collect().map(_.getString(0)).toSeq.sorted
-      if (affected.isEmpty) return cur // nothing matched — no-op
-      val uuid = writeDataDir(hits.drop("__dir"))
-      val tombs = affected.foldLeft(m.tombstones)((acc, d) =>
-        acc + (d -> (acc.getOrElse(d, Nil) :+ uuid)))
-      if (tryCommitManifest(cur + 1,
-          manifestLines(m.copy(tombstones = tombs)), "DELETE")) return cur + 1
-      attempt += 1
+      if (candidates.isEmpty) None // stats exclude every dir — no-op
+      else {
+        val hits = addressedVisibleRows(m, Some(candidates)).filter(expr(predicate))
+          .select(col(DvFile).as("file"), col(DvRow).as("row"),
+            col(DvDir).as("__dir")).localCheckpoint(true)
+        // affected-dir list: bounded metadata (≤ table dir count) — the
+        // sanctioned driver round-trip
+        val affected = hits.select(col("__dir")).distinct()
+          .collect().map(_.getString(0)).toSeq.sorted
+        if (affected.isEmpty) None // nothing matched — no-op
+        else {
+          val uuid = writeDataDir(hits.drop("__dir"))
+          Some(m.copy(tombstones = affected.foldLeft(m.tombstones)((acc, d) =>
+            acc + (d -> (acc.getOrElse(d, Nil) :+ uuid)))))
+        }
+      }
     }
-    throw new java.io.IOException(
-      s"TxLog deleteWhere lost $MaxRaceRetries optimistic races at $root")
   }
 
   /** OPTIMIZE-style compaction commit: rewrite the current snapshot as
@@ -3674,96 +3504,78 @@ final case class TxLog(spark: SparkSession, root: String,
                        dvOnly: Boolean): Long = {
     require(exists(), s"TxLog table at $root has no commits to compact")
     require(targetBytes > 0, s"targetBytes must be positive (got $targetBytes)")
+    commit("OPTIMIZE")((_, prev) => packAttempt(targetBytes, parts, dvOnly, prev))
+  }
+
+  /** One attempt of [[packImpl]] against the head manifest `prev`. */
+  private def packAttempt(targetBytes: Long, parts: Seq[String], dvOnly: Boolean,
+                          prev: Manifest): Option[Manifest] = {
     import org.apache.spark.sql.functions.{col, spark_partition_id}
-    var attempt = 0
-    while (attempt < MaxRaceRetries) {
-      val cur = currentVersion()
-      val prev = readManifestFull(cur)
-      require(parts.isEmpty || prev.partCol.nonEmpty,
-        "partition-scoped OPTIMIZE requires a partition-tagged table")
-      val scope: Option[Set[String]] = if (parts.isEmpty) None else Some(parts.toSet)
-      // under a scope, a None-tagged entry (dir covers the whole
-      // table) never packs — it spans partitions outside the scope
-      def inScope(tag: Option[String]): Boolean =
-        scope.forall(s => tag.exists(s))
-      val sizes = prev.dirs.map(d => d -> dirSize(d)).toMap
-      // deletion-vector debt counts as packing debt: rewriting a
-      // tombstoned dir MATERIALIZES its deletes (survivors only, lines
-      // dropped) — Delta's OPTIMIZE-purges-DVs behavior
-      val dvDirs = prev.dirs.filter(d =>
-        prev.tombstones.get(d).exists(_.nonEmpty)).toSet
-      val packable = prev.entries.filter { case (d, t) =>
-        (if (dvOnly) dvDirs(d)
-         else sizes(d) < targetBytes || dvDirs(d)) && inScope(t) }
-      val packDirs = packable.map(_._1).distinct
-      // no size debt (≤1 small dir cannot pack better) and no deletion
-      // debt — no version churn
-      if (packDirs.size <= 1 && packDirs.forall(!dvDirs(_))) return cur
-      val carry = prev.entries.filterNot(packable.contains)
-      // allowMissingColumns: small dirs may span a SCHEMA EVOLUTION —
-      // the same additive-widening semantics every read path uses
-      val rows = packable
-        .groupBy(_._1).toSeq.sortBy(_._1).map { case (d, es) =>
-          val base = dirVisibleRows(prev.tombstones, d)
-          tagFilter(prev.partCol, es.map(_._2)).fold(base)(base.filter)
-        }.reduce(_.unionByName(_, allowMissingColumns = true))
-      val k = math.max(1L, packDirs.map(sizes).sum / targetBytes).toInt
-      // `rows` is physical-named (raw dir reads) — resolve the writer's
-      // logical cluster column through the map; partCol is physical
-      val clusterCol = prev.partCol.orElse(
-        statsCols.headOption.map(physicalOf(prev.colMap, _)))
-      val packed = clusterCol.fold(rows.repartition(k))(c =>
-          rows.repartitionByRange(k, col(c)))
-        .withColumn("__bucket", spark_partition_id())
-        .localCheckpoint(true)
-      val uuids = (0 until k).flatMap { b =>
-        val part = packed.filter(col("__bucket") === b).drop("__bucket")
-        if (part.isEmpty) None else Some(writeDataDir(part, sized = false))
-      }
-      val stats = uuids.map(statsFor(_, prev.colMap))
-      val header = carriedHeader(prev.stats,
-        stats.map(_._1).find(_.nonEmpty).getOrElse(Seq.empty))
-      val headerCols = header.map(_._1).toSet
-      val carriedRanges = prev.ranges.filter { case ((d, c), _) =>
-        headerCols(c) && carry.exists(_._1 == d) }
-      val carriedBlooms = prev.blooms.filter { case ((d, _), _) =>
-        carry.exists(_._1 == d) }
-      val newEntries0 = uuids.flatMap { u =>
-        prev.partCol match {
-          // packed rows may include NULL partition values (from a
-          // degraded untagged append): the packed dir stays untagged
-          case Some(pc) => partValuesOpt(snapshotOfDir(u), pc)
-            .fold(Seq((u, Option.empty[String])))(_.map(p => (u, Option(p))))
-          case None => Seq((u, Option.empty[String]))
-        }
-      }
-      // a full merge-on-read wipe leaves every dir dirty and zero
-      // visible rows: keep a zero-row dir referenced (untagged) so the
-      // manifest still resolves to a snapshot — same guard as the
-      // overwritePartitioned/foldCommit empty cases
-      val newEntries =
-        if (newEntries0.isEmpty && carry.isEmpty)
-          Seq((writeDataDir(packed.drop("__bucket")
-            .filter(org.apache.spark.sql.functions.lit(false)), sized = false),
-            Option.empty[String]))
-        else newEntries0
-      val carriedTombs = prev.tombstones.filter { case (d, _) =>
-        carry.exists(_._1 == d) }
-      val checks = mergedChecks(prev.checks)
-      enforceChecksOnDirs(uuids, checks, prev.colMap)
-      enforceChecks(entryTagSets(carry, prev.partCol), prev.partCol,
-        addedChecks(prev.checks), carriedTombs, prev.colMap)
-      val m = Manifest(prev.partCol, header, carry ++ newEntries,
-        carriedRanges ++ stats.flatMap(_._2).toMap, prev.txns,
-        carriedBlooms ++ uuids.map(bloomsFor(_, prev.colMap)).foldLeft(
-          Map.empty[(String, String), String])(_ ++ _),
-        checks, carriedTombs, colMap = prev.colMap, retired = prev.retired,
-        props = prev.props)
-      if (tryCommitManifest(cur + 1, manifestLines(m), "OPTIMIZE")) return cur + 1
-      attempt += 1
+    require(parts.isEmpty || prev.partCol.nonEmpty,
+      "partition-scoped OPTIMIZE requires a partition-tagged table")
+    val scope: Option[Set[String]] = if (parts.isEmpty) None else Some(parts.toSet)
+    // under a scope, a None-tagged entry (dir covers the whole
+    // table) never packs — it spans partitions outside the scope
+    def inScope(tag: Option[String]): Boolean =
+      scope.forall(s => tag.exists(s))
+    val sizes = prev.dirs.map(d => d -> dirSize(d)).toMap
+    // deletion-vector debt counts as packing debt: rewriting a
+    // tombstoned dir MATERIALIZES its deletes (survivors only, lines
+    // dropped) — Delta's OPTIMIZE-purges-DVs behavior
+    val dvDirs = prev.dirs.filter(d =>
+      prev.tombstones.get(d).exists(_.nonEmpty)).toSet
+    val packable = prev.entries.filter { case (d, t) =>
+      (if (dvOnly) dvDirs(d)
+       else sizes(d) < targetBytes || dvDirs(d)) && inScope(t) }
+    val packDirs = packable.map(_._1).distinct
+    // no size debt (≤1 small dir cannot pack better) and no deletion
+    // debt — no version churn
+    if (packDirs.size <= 1 && packDirs.forall(!dvDirs(_))) return None
+    val carry = prev.entries.filterNot(packable.contains)
+    // allowMissingColumns: small dirs may span a SCHEMA EVOLUTION —
+    // the same additive-widening semantics every read path uses
+    val rows = packable
+      .groupBy(_._1).toSeq.sortBy(_._1).map { case (d, es) =>
+        val base = dirVisibleRows(prev.tombstones, d)
+        tagFilter(prev.partCol, es.map(_._2)).fold(base)(base.filter)
+      }.reduce(_.unionByName(_, allowMissingColumns = true))
+    val k = math.max(1L, packDirs.map(sizes).sum / targetBytes).toInt
+    // `rows` is physical-named (raw dir reads) — resolve the writer's
+    // logical cluster column through the map; partCol is physical
+    val clusterCol = prev.partCol.orElse(
+      statsCols.headOption.map(physicalOf(prev.colMap, _)))
+    val packed = clusterCol.fold(rows.repartition(k))(c =>
+        rows.repartitionByRange(k, col(c)))
+      .withColumn("__bucket", spark_partition_id())
+      .localCheckpoint(true)
+    val uuids = (0 until k).flatMap { b =>
+      val part = packed.filter(col("__bucket") === b).drop("__bucket")
+      if (part.isEmpty) None else Some(writeDataDir(part, sized = false))
     }
-    throw new java.io.IOException(
-      s"TxLog compactSmallFiles lost $MaxRaceRetries optimistic races at $root")
+    val stats = uuids.map(statsFor(_, prev.colMap))
+    // packed rows may include NULL partition values (from a degraded
+    // untagged append): such a packed dir stays untagged
+    val newEntries0 = uuids.flatMap(taggedFromData(_, prev.partCol))
+    // a full merge-on-read wipe leaves every dir dirty and zero
+    // visible rows: keep a zero-row dir referenced (untagged) so the
+    // manifest still resolves to a snapshot — same guard as the
+    // overwritePartitioned/foldCommit empty cases
+    val newEntries =
+      if (newEntries0.isEmpty && carry.isEmpty)
+        Seq((writeDataDir(packed.drop("__bucket")
+          .filter(org.apache.spark.sql.functions.lit(false)), sized = false),
+          Option.empty[String]))
+      else newEntries0
+    val next = carried(prev, carry, newEntries,
+      stats.map(_._1).find(_.nonEmpty).getOrElse(Seq.empty),
+      stats.flatMap(_._2).toMap,
+      uuids.map(bloomsFor(_, prev.colMap)).foldLeft(
+        Map.empty[(String, String), String])(_ ++ _))
+    val checks = mergedChecks(prev.checks)
+    enforceChecksOnDirs(uuids, checks, prev.colMap)
+    enforceChecks(entryTagSets(carry, prev.partCol), prev.partCol,
+      addedChecks(prev.checks), next.tombstones, prev.colMap)
+    Some(next.copy(checks = checks))
   }
 
   /** Range-CLUSTERED compaction — the 1-D Z-ORDER move: rewrite the
@@ -3849,22 +3661,12 @@ final case class TxLog(spark: SparkSession, root: String,
     val blooms = uuids.map(bloomsFor(_)).foldLeft(
       Map.empty[(String, String), String])(_ ++ _)
     val header = stats.map(_._1).find(_.nonEmpty).getOrElse(Seq.empty)
-    var attempt = 0
-    while (attempt < MaxRaceRetries) {
-      val cur = currentVersion()
-      val prev =
-        if (cur >= 0) readManifestFull(cur)
-        else Manifest(None, Seq.empty, Seq.empty, Map.empty)
+    commit(op.toUpperCase) { (_, prev) =>
       val checks = mergedChecks(prev.checks)
       enforceChecksOnDirs(uuids, checks)
-      val m = Manifest(None, header,
-        uuids.map(u => (u, None)), stats.flatMap(_._2).toMap, prev.txns,
-        blooms, checks, props = prev.props)
-      if (tryCommitManifest(cur + 1, manifestLines(m), op.toUpperCase)) return cur + 1
-      attempt += 1
+      Some(rewritten(prev, None, uuids.map(u => (u, None)), header,
+        stats.flatMap(_._2).toMap, blooms).copy(checks = checks))
     }
-    throw new java.io.IOException(
-      s"TxLog $op lost $MaxRaceRetries optimistic races at $root")
   }
 
   /** Garbage-collect data dirs unreferenced by any of the newest
@@ -3944,22 +3746,17 @@ final case class TxLog(spark: SparkSession, root: String,
       require(fs.exists(new Path(dirPath(d))),
         s"cannot restore $root to v$version: data dir $d was vacuumed")
     }
-    var attempt = 0
-    while (attempt < MaxRaceRetries) {
-      val cur = currentVersion()
-      if (cur == version) return cur // restoring to the present: no-op
-      // constraints roll back WITH the restored metadata (the restored
-      // data was validated against them); a writer-declared constraint
-      // new to that version still gates the restored dirs first
-      val checks = mergedChecks(m.checks)
-      enforceChecksOnEntries(m, addedChecks(m.checks))
-      val lines = manifestLines(m.copy(txns = readManifestFull(cur).txns,
-        checks = checks))
-      if (tryCommitManifest(cur + 1, lines, s"RESTORE v$version")) return cur + 1
-      attempt += 1
+    commit(s"RESTORE v$version") { (cur, _) =>
+      if (cur == version) None // restoring to the present: no-op
+      else {
+        // constraints roll back WITH the restored metadata (the restored
+        // data was validated against them); a writer-declared constraint
+        // new to that version still gates the restored dirs first. The
+        // txn marks are the head's: commit stamps them over `m`'s
+        enforceChecksOnEntries(m, addedChecks(m.checks))
+        Some(m.copy(checks = mergedChecks(m.checks)))
+      }
     }
-    throw new java.io.IOException(
-      s"TxLog restore lost $MaxRaceRetries optimistic races at $root")
   }
 
   /** SHALLOW CLONE: create a new table at `destRoot` whose v0 manifest
@@ -4071,6 +3868,10 @@ object TxLog {
     * sidecar refresh/spot-checks) — test instrumentation for the
     * checkpoint-sidecar read-count contract. */
   private[graft] val headerReads = new java.util.concurrent.atomic.AtomicLong
+
+  /** Lost optimistic races after which a commit gives up (see
+    * [[TxLog!.commit]]). */
+  private[pipeline] final val MaxRaceRetries = 5
 
   /** History-checkpoint refresh cadence: every N-th winning commit
     * extends `_txlog/_history` (see [[TxLog!.maybeRefreshHistorySidecar]]). */

@@ -38,6 +38,14 @@ class BenchCalibrationSpec extends AnyFunSuite {
     assert(Bench.loadReference("/root/repo/tools/__no_such_file__.txt") === Map.empty)
   }
 
+  test("SPARK_GRAFT_CPUS must be a positive integer") {
+    assert(Bench.cpuCount("4") === 4 && Bench.cpuCount(" 16 ") === 16)
+    // `*` used to reach the bench JSON as "cpus":* — unparseable
+    Seq("*", "0", "-2", "", "four").foreach(bad =>
+      assert(intercept[IllegalArgumentException](Bench.cpuCount(bad))
+        .getMessage.contains("SPARK_GRAFT_CPUS"), bad))
+  }
+
   test("flags rank worst-first and round to 2dp") {
     val cur = Seq("q_mid" -> 2.0, "q_heavy" -> 30.0)
     val flags = Bench.flaggedRegressions(cur, calib = 0.5, ref = ref)

@@ -20,8 +20,11 @@ trait SparkTestBase extends AnyFunSuite {
       .getOrElse(fail(s"car-sales fixture $file is not on the test classpath"))
     new java.io.File(url.toURI).getPath
   }
+  /** Root of every test's scratch tables (see [[SparkTestBase.scratchRoot]]). */
+  def scratchRoot: String = SparkTestBase.scratchRoot
+
   def tmpDir(name: String): String = {
-    val d = s"/root/repo/target/tmp/test_$name"
+    val d = s"$scratchRoot/test_$name"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d))
     d
   }
@@ -40,6 +43,12 @@ trait SparkTestBase extends AnyFunSuite {
 }
 
 object SparkTestBase {
+  /** `target/tmp` under the test JVM's working directory — sbt forks
+    * the test JVM in the checkout it runs from, so two checkouts'
+    * concurrent runs never create or delete each other's tables. */
+  val scratchRoot: String =
+    new java.io.File(sys.props("user.dir"), "target/tmp").getAbsolutePath
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[8]")

@@ -187,7 +187,7 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("point lookup on a partitioned gold table prunes partitions at the scan") {
-    val gold = "/root/repo/target/tmp/planspec_gold/hourly"
+    val gold = s"$scratchRoot/planspec_gold/hourly"
     org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(gold).getParentFile)
     graft.streaming.EventStreams.hourlyMergeToGold(spark, sf("0.001"), gold)

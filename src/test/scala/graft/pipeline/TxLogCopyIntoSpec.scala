@@ -90,6 +90,32 @@ class TxLogCopyIntoSpec extends SparkTestBase {
     assert(t.snapshot().filter(col("id") === 2L).count() === 1L)
   }
 
+  test("every OPTIMIZE form carries the registry: a re-run loads nothing") {
+    // compactSmallFiles, purgeDeletes and the clustered / z-order
+    // rewrites must keep the #copied lines like compact() does —
+    // losing them makes the next COPY INTO load every file again
+    val optimizers: Seq[(String, TxLog => Long)] = Seq(
+      "compactSmallFiles" -> (_.compactSmallFiles(1L << 30)),
+      "purgeDeletes" -> (_.purgeDeletes()),
+      "compactClustered" -> (_.compactClustered(2)),
+      "compactZOrder" -> (_.compactZOrder(Seq("id", "v"), 2)))
+    optimizers.foreach { case (name, optimize) =>
+      val src = tmpDir(s"copy_opt_src_$name")
+      val t = TxLog(spark, tmpDir(s"copy_opt_tbl_$name"), statsCols = Seq("id", "v"))
+      stageFile(src, "a.parquet", Seq((1L, "a"), (2L, "b")))
+      stageFile(src, "b.parquet", Seq((3L, "c"), (4L, "d")))
+      t.copyInto(src, pattern = "a*")
+      t.copyInto(src, pattern = "b*")
+      t.deleteWhere("id = 4") // deletion-vector debt for purgeDeletes
+      val rows = t.snapshot().count()
+      val before = t.currentVersion()
+      assert(optimize(t) === before + 1, s"$name committed nothing")
+      assert(t.copiedFiles().count() === 2L, s"$name dropped the registry")
+      assert(t.copyInto(src) === (before + 1, 0L), s"$name: re-run loaded files")
+      assert(t.snapshot().count() === rows, name)
+    }
+  }
+
   test("SQL statement: COPY INTO with PATTERN and COPY_OPTIONS force") {
     val src = tmpDir("copy_sql_src")
     val t = TxLog(spark, tmpDir("copy_sql_tbl"))

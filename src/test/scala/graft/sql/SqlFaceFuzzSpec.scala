@@ -127,7 +127,7 @@ class SqlFaceFuzzSpec extends SparkTestBase {
     (1 to 80).foreach { trial =>
       val id = ident(rnd)
       val ifNot = rnd.nextBoolean()
-      val loc = s"/root/repo/target/tmp/fuzz_${rnd.nextInt(1 << 20)}"
+      val loc = s"$scratchRoot/fuzz_${rnd.nextInt(1 << 20)}"
       val keys = if (rnd.nextBoolean()) Seq("id") else Seq("id", "seg")
       val owner = s"team-${rnd.nextInt(100)}"
       val toks =
@@ -164,7 +164,7 @@ class SqlFaceFuzzSpec extends SparkTestBase {
     val rnd = new Random(8128)
     (1 to 90).foreach { trial =>
       val id = ident(rnd)
-      val path = s"/root/repo/target/tmp/fz_${rnd.nextInt(1 << 20)}"
+      val path = s"$scratchRoot/fz_${rnd.nextInt(1 << 20)}"
       val (toks, check): (Seq[Tok], LogicalPlan => Unit) = rnd.nextInt(4) match {
         case 0 =>
           val pb = if (rnd.nextBoolean()) Some(("day", "DATE")) else None
@@ -298,7 +298,7 @@ class SqlFaceFuzzSpec extends SparkTestBase {
     (1 to 60).foreach { trial =>
       val v = Seq("it''s", "a''b''c", "x,(y)=z''", "''lead", "trail''")(rnd.nextInt(5))
       val expected = v.replace("''", "'")
-      val loc = s"/root/repo/target/tmp/fz_esc_${rnd.nextInt(1 << 20)}"
+      val loc = s"$scratchRoot/fz_esc_${rnd.nextInt(1 << 20)}"
       val sql = render(Seq(K("CREATE"), K("TABLE"), T(s"t_esc$trial"),
         T("(id BIGINT)"), K("USING"), K("graft"),
         K("TBLPROPERTIES"), T(s"('note' = '$v', 'keys' = 'id')"),
