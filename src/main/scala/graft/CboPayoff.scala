@@ -98,7 +98,7 @@ object CboPayoff {
     // .abs-of-MinValue pitfall the clf_weights root fixed)
     val sfDigest = java.security.MessageDigest.getInstance("MD5")
       .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val root = s"/root/repo/target/tmp/cbo_payoff_$sfDigest"
+    val root = s"${graft.ops.SessionScopedCache.scratchRoot}/cbo_payoff_$sfDigest"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
     // three incarnations of each table, one per stats condition, so
     // the timed loop never mutates statistics: *_ns (never analyzed),

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.ops.SessionScopedCache
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -23,30 +24,19 @@ import org.apache.spark.sql.functions._
   */
 object DedupClusters {
 
-  /** Session cache for resolved component frames, keyed on the pair
-    * graph's analyzed plan (the [[graft.ops.SessionScopedCache]]
-    * pattern — same scope and same immutable-corpus assumption as
-    * `ExactJaccard`'s postings/pairs caches one layer down). Two
+  /** Connected components of the pair graph, memoized per (session,
+    * pair-graph plan, config) in [[graft.ops.SessionScopedCache.memo]]. Two
     * declared operators (`dedup_clusters`, `dedup_survivor_quality`)
-    * resolve components of the IDENTICAL cached pair graph; without
+    * resolve components of the IDENTICAL memoized pair graph; without
     * this the second runs the whole label-propagation loop — its
     * per-round driver actions included — again for the same answer.
-    * The cached value is the loop's final `localCheckpoint`ed label
-    * frame, so a hit is a cached-RDD scan, not a lineage replay.
+    * The memoized value is the loop's final `localCheckpoint`ed label
+    * frame, so a hit is a cached-RDD scan, not a lineage replay. As
+    * with every memo here, the inputs are assumed immutable within a
+    * session (a deployment over mutating inputs keys by table VERSION
+    * instead, as the TxLog-backed caches do).
     *
-    * KEY-COLLISION EXPOSURE (r18 ADVICE): the key carries the pair
-    * graph's 32-bit `semanticHash`, so two DIFFERENT pair graphs
-    * colliding within one session would serve the wrong component
-    * frame — the same accepted exposure as the ExactJaccard and
-    * VectorQueries caches one layer down, and the same immutable-corpus
-    * assumption (a deployment over mutating inputs keys by table
-    * VERSION instead, as the TxLog-backed caches do). In this engine a
-    * session resolves components of a handful of pair graphs, so the
-    * birthday bound is ~n²/2³³ ≈ 10⁻⁸ per session at n = 10. */
-  private val ccCache =
-    new graft.ops.SessionScopedCache[(String, Int, String), DataFrame](8)
-
-  /** @param pairs edge list (undirected, one row per pair)
+    * @param pairs edge list (undirected, one row per pair)
     * @param numPartitions parallelism for the iteration; 0 → derive
     *        from the session's shuffle partitions. The pair graph is
     *        orders of magnitude smaller than the corpus, so this stays
@@ -63,11 +53,8 @@ object DedupClusters {
   def components(pairs: DataFrame, aCol: String, bCol: String,
                  maxIter: Int = 20, numPartitions: Int = 0,
                  maxBroadcastNodes: Long = 2000000L): DataFrame = {
-    val spark = pairs.sparkSession
-    val key = (s"${spark.sparkContext.applicationId}@${System.identityHashCode(spark)}",
-      pairs.queryExecution.analyzed.semanticHash(),
-      s"$aCol|$bCol|$maxIter|$numPartitions|$maxBroadcastNodes")
-    ccCache.getOrCompute(key, graft.ops.SessionScopedCache.aliveProbe(spark)) {
+    SessionScopedCache.memo(pairs.sparkSession, "components", (SessionScopedCache.plan(pairs),
+        s"$aCol|$bCol|$maxIter|$numPartitions|$maxBroadcastNodes")) {
       components0(pairs, aCol, bCol, maxIter, numPartitions, maxBroadcastNodes)
     }
   }

@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.functions.TextFunctions
+import graft.ops.SessionScopedCache
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -23,8 +24,11 @@ object ExactJaccard {
 
   /** The materialized (id, blk, shingle) posting list of a corpus —
     * the inverted index every exact-similarity operator here joins on.
-    * Cached per (corpus plan, config) via [[postingsCache]], so every
-    * caller in a session shares one build.
+    * Memoized per (session, corpus plan, config) in
+    * [[graft.ops.SessionScopedCache.memo]], so every caller in a
+    * session shares one checkpointed build instead of re-shingling the
+    * corpus (pair detection at 0.5, cluster edges, 0.3 Levenshtein
+    * candidates).
     *
     * The index is stored HASH-PARTITIONED on the join keys (blk, s) at
     * a CORPUS-DERIVED partition count ([[postingParts]]) before the
@@ -52,9 +56,8 @@ object ExactJaccard {
     * session's 32, so committed pins and plans are unchanged. */
   def postings(docs: DataFrame, idCol: String, textCol: String,
                blockCol: String, shingleN: Int = 3): DataFrame = {
-    val cacheKey = (cacheScope(docs), docs.queryExecution.analyzed.semanticHash(),
-      s"$idCol|$textCol|$blockCol|$shingleN")
-    postingsCache.computeIfAbsent(cacheKey, _ => {
+    SessionScopedCache.memo(docs.sparkSession, "postings",
+        (SessionScopedCache.plan(docs), s"$idCol|$textCol|$blockCol|$shingleN")) {
       val toks = docs.select(col(idCol).as("id"), col(blockCol).as("blk"),
         TextFunctions.tokens(col(textCol)).as("toks"))
       val d = toks.select(col("id"), col("blk"),
@@ -62,7 +65,7 @@ object ExactJaccard {
       d.select(col("id"), col("blk"), explode(col("sh")).as("s"))
         .repartition(postingParts(docs), col("blk"), col("s"))
         .localCheckpoint(true)
-    })
+    }
   }
 
   /** Partition count for a corpus's posting index: one partition per
@@ -113,53 +116,23 @@ object ExactJaccard {
     *        shingles. This bounds the worst bucket of the join at scale;
     *        `None` (default) keeps exact full-set semantics.
     * @return (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ threshold,
-    *         pairs restricted to equal values of `blockCol` (e.g. lang). */
-  /** Materialized-postings cache, keyed by the source plan's semantic
-    * hash + column/shingle config: distinct queries over the same
-    * corpus (pair detection at 0.5, cluster edges, 0.3 Levenshtein
-    * candidates) share ONE checkpointed inverted index per JVM instead
-    * of re-shingling the corpus each time. Bounded: entries are tiny
-    * (id, blk, shingle) frames and the key space is the handful of
-    * distinct (corpus, config) combinations a session touches. */
-  private val postingsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, String), DataFrame]()
-
-  /** Cache scope: the owning SparkSession's UUID. A checkpointed frame
-    * is bound to the session that materialized it — a restarted or
-    * concurrent second session hashing to the same plan must NOT be
-    * handed a frame whose RDD blocks belong to a stopped/foreign
-    * session. */
-  private def cacheScope(df: DataFrame): String = {
-    val s = df.sparkSession
-    s"${s.sparkContext.applicationId}@${System.identityHashCode(s)}"
-  }
-
-  /** Drop every cached frame (e.g. between sessions in a long-lived
-    * JVM — checkpointed blocks otherwise pin executor storage for the
-    * JVM's lifetime). */
-  private[graft] def clearCaches(): Unit = {
-    postingsCache.clear(); pairsCache.clear()
-  }
-
-  /** Thresholded-pairs cache, same keying discipline as
-    * [[postingsCache]] plus the pair-space config. Four operators run
-    * the IDENTICAL pair detection (near-dup report, cluster edges,
-    * survivor election, duplicate-graph PageRank); the candidate join +
-    * Jaccard filter is the expensive part, so the checkpointed RESULT
-    * is what they must share — caching only the postings still re-ran
-    * the join per caller. Entries are small by construction (only
-    * pairs above threshold survive). */
-  private val pairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, String), DataFrame]()
-
+    *         pairs restricted to equal values of `blockCol` (e.g. lang).
+    *
+    * Memoized like [[postings]], plus the pair-space config. Four
+    * operators run the IDENTICAL pair detection (near-dup report,
+    * cluster edges, survivor election, duplicate-graph PageRank); the
+    * candidate join + Jaccard filter is the expensive part, so the
+    * checkpointed RESULT is what they must share — memoizing only the
+    * postings still re-ran the join per caller. Entries are small by
+    * construction (only pairs above threshold survive). */
   def pairs(docs: DataFrame, idCol: String, textCol: String, blockCol: String,
             shingleN: Int = 3, threshold: Double = 0.5,
             maxShingleDf: Option[Int] = None): DataFrame = {
-    val cacheKey = (cacheScope(docs), docs.queryExecution.analyzed.semanticHash(),
-      s"$idCol|$textCol|$blockCol|$shingleN|$threshold|$maxShingleDf")
-    pairsCache.computeIfAbsent(cacheKey, _ =>
+    SessionScopedCache.memo(docs.sparkSession, "pairs", (SessionScopedCache.plan(docs),
+        s"$idCol|$textCol|$blockCol|$shingleN|$threshold|$maxShingleDf")) {
       pairsUncached(docs, idCol, textCol, blockCol, shingleN, threshold,
-        maxShingleDf).localCheckpoint(true))
+        maxShingleDf).localCheckpoint(true)
+    }
   }
 
   private def pairsUncached(docs: DataFrame, idCol: String, textCol: String,

@@ -46,10 +46,6 @@ object CurationQueries {
       .select(col("doc_id"), col("source"), col("b"))
   }
 
-  /** Trained-weights cache: root path per (session, corpus) — the
-    * `sim_ivf_served` discipline for model artifacts. */
-  private val clfWeightsCache = new SessionScopedCache[(String, Int), String](32)
-
   /** Untimed warm-touch of the persisted classifier-weights table —
     * the same FS-latency treatment as
     * [[VectorQueries.warmServedIndexes]] (build if absent, billed to
@@ -59,7 +55,7 @@ object CurationQueries {
   private[graft] def warmPersistedModels(spark: org.apache.spark.sql.SparkSession,
                                          dir: String): Unit = {
     val docs = load(spark, dir, "documents")
-    graft.pipeline.TxLog(spark, clfWeightsRoot(spark, dir, docs))
+    graft.pipeline.TxLog(spark, clfWeightsRoot(spark, docs))
       .snapshot().count()
     ()
   }
@@ -77,22 +73,8 @@ object CurationQueries {
     * billed to [[Scale.layoutNanos]]; headroom: cp·1e6 stays in int64
     * to ~9·10¹² train-split feature instances per bucket. */
   private def clfWeightsRoot(spark: org.apache.spark.sql.SparkSession,
-                             dir: String,
-                             docs: org.apache.spark.sql.DataFrame): String = {
-    val key = (s"${spark.sparkContext.applicationId}@${System.identityHashCode(spark)}",
-      docs.queryExecution.analyzed.semanticHash())
-    clfWeightsCache.getOrCompute(key, SessionScopedCache.aliveProbe(spark)) {
-      // collision-resistant on-disk root matching the FULL cache key
-      // (session identity + corpus): Int.hashCode roots could silently
-      // collide across corpora (and .abs of Int.MinValue is negative),
-      // and a path without the session identity lets a second session
-      // over the same corpus clobber a directory the first session's
-      // cached root still points at
-      val digest = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"${key._1}|${key._2}|$dir".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(16)
-      val root = s"/root/repo/target/tmp/clf_weights_$digest"
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+                             docs: org.apache.spark.sql.DataFrame): String =
+    SessionScopedCache.memoDir(spark, "clf_weights", SessionScopedCache.plan(docs)) { root =>
       val t0 = System.nanoTime()
       val tr = clfFeats(docs.filter(col("doc_id") % 5 === 0))
         .withColumn("is_pos", col("source").isin(clfPosSources: _*))
@@ -108,7 +90,6 @@ object CurationQueries {
       Scale.layoutNanos.addAndGet(System.nanoTime() - t0)
       root
     }
-  }
 
   /** Distributed prefix-sum sharding over (doc_id, n): bucket by an
     * ARITHMETIC doc_id range (pid = doc_id div ceil(range/numParts) —
@@ -981,7 +962,7 @@ object CurationQueries {
     // end-to-end, so the oracle retrains AND rescores bit-exactly.
     Q("curate_classifier_score", (spark, dir) => {
       val docs = load(spark, dir, "documents")
-      val root = clfWeightsRoot(spark, dir, docs)
+      val root = clfWeightsRoot(spark, docs)
       val w = graft.pipeline.TxLog(spark, root).snapshot()
       val sc = clfFeats(docs)
         .join(broadcast(w), Seq("b"))
@@ -1015,7 +996,7 @@ object CurationQueries {
     // beyond the doc-keyed score.
     Q("curate_classifier_eval", (spark, dir) => {
       val docs = load(spark, dir, "documents")
-      val root = clfWeightsRoot(spark, dir, docs)
+      val root = clfWeightsRoot(spark, docs)
       val w = graft.pipeline.TxLog(spark, root).snapshot()
       // score only the held-out split: the doc_id predicate cannot be
       // pushed through the LEFT join below, so filtering before the
@@ -1175,7 +1156,7 @@ object CurationQueries {
                          dir: String): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     val docs = load(spark, dir, "documents")
-    val root = clfWeightsRoot(spark, dir, docs)
+    val root = clfWeightsRoot(spark, docs)
     val w = graft.pipeline.TxLog(spark, root).snapshot()
     val held = docs.filter(col("doc_id") % 5 =!= 0)
     val sc = clfFeats(held)

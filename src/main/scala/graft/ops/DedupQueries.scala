@@ -12,6 +12,7 @@ import org.apache.spark.sql.functions._
   * asserting they recover the exact-Jaccard truth on the test corpus.
   */
 object DedupQueries {
+  import SessionScopedCache.scratchRoot
   import Tables.load
 
   val all: Seq[Q] = Seq(
@@ -109,11 +110,11 @@ object DedupQueries {
     // documented trade of per-commit ingest.
     Q("dedup_stream_ingest", (spark, dir) => {
       val tag = dir.hashCode.abs
-      val stagingR = s"/root/repo/target/tmp/dedup_sing_stage_$tag"
-      val corpusR = s"/root/repo/target/tmp/dedup_sing_corpus_$tag"
-      val idxR = s"/root/repo/target/tmp/dedup_sing_idx_$tag"
-      val quarR = s"/root/repo/target/tmp/dedup_sing_quar_$tag"
-      val ckpt = s"/root/repo/target/tmp/dedup_sing_ckpt_$tag"
+      val stagingR = s"$scratchRoot/dedup_sing_stage_$tag"
+      val corpusR = s"$scratchRoot/dedup_sing_corpus_$tag"
+      val idxR = s"$scratchRoot/dedup_sing_idx_$tag"
+      val quarR = s"$scratchRoot/dedup_sing_quar_$tag"
+      val ckpt = s"$scratchRoot/dedup_sing_ckpt_$tag"
       Seq(stagingR, corpusR, idxR, quarR, ckpt).foreach(d =>
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
       val docs = load(spark, dir, "documents")
@@ -815,27 +816,16 @@ object DedupQueries {
     * with the run length and its first seed position in the lower doc.
     * A shared run of L tokens has run = L − 7 and starts at
     * `pa0` / `pa0 − diag` in the lower/higher doc respectively. */
-  private val runsCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), org.apache.spark.sql.DataFrame]()
-
-  /** Session-cached: the spans report and the removal step both read
-    * the same islands — one gram join pays for both (the checkpointed
-    * frame is islands-sized, tiny next to the corpus). BOUNDED: the
-    * cache holds at most [[RunsCacheMax]] (session, dir) entries —
-    * beyond that the whole map clears before inserting, dropping the
-    * references so the checkpointed blocks become ContextCleaner-
-    * collectable instead of pinning block-manager memory for the
-    * session's lifetime. (The documents table under a test-data `dir`
-    * is immutable; a deployment caching over mutable inputs would key
-    * by table VERSION, as the TxLog-backed caches do.) */
-  private final val RunsCacheMax = 4
+  /** Memoized per (session, dir): the spans report and the removal
+    * step both read the same islands — one gram join pays for both (the
+    * checkpointed frame is islands-sized, tiny next to the corpus).
+    * (The documents table under a test-data `dir` is immutable; a
+    * deployment caching over mutable inputs would key by table VERSION,
+    * as the TxLog-backed caches do.) */
   private def substringRuns(spark: org.apache.spark.sql.SparkSession,
-                            dir: String): org.apache.spark.sql.DataFrame = {
-    if (runsCache.size() >= RunsCacheMax) runsCache.clear()
-    runsCache.computeIfAbsent(
-      (s"${spark.sparkContext.applicationId}@${System.identityHashCode(spark)}",
-        dir), _ => substringRuns0(spark, dir).localCheckpoint(true))
-  }
+                            dir: String): org.apache.spark.sql.DataFrame =
+    SessionScopedCache.memo(spark, "substring_runs", dir)(
+      substringRuns0(spark, dir).localCheckpoint(true))
 
   private def substringRuns0(spark: org.apache.spark.sql.SparkSession,
                              dir: String): org.apache.spark.sql.DataFrame = {

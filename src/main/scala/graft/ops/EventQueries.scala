@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
   * convention of [[Tables.loadEvents]].
   */
 object EventQueries {
+  import SessionScopedCache.scratchRoot
 
   val all: Seq[Q] = Seq(
 
@@ -406,7 +407,7 @@ object EventQueries {
 
     Q("events_stream_merge_gold", (spark, dir) =>
       graft.streaming.EventStreams.hourlyMergeToGold(spark, dir,
-        s"/root/repo/target/tmp/stream_gold_${dir.hashCode.abs}/hourly"),
+        s"$scratchRoot/stream_gold_${dir.hashCode.abs}/hourly"),
       oracle = Some("""
       SELECT time_bucket(INTERVAL '1 hour', ts) AS hour_start, event_type,
              count(*) AS n_events,
@@ -419,7 +420,7 @@ object EventQueries {
     // the one-shot batch aggregation — same oracle as merge_gold.
     Q("events_stream_txlog_gold", (spark, dir) =>
       graft.streaming.EventStreams.hourlyMergeToTxLog(spark, dir,
-        s"/root/repo/target/tmp/stream_txlog_${dir.hashCode.abs}/hourly"),
+        s"$scratchRoot/stream_txlog_${dir.hashCode.abs}/hourly"),
       oracle = Some("""
       SELECT time_bucket(INTERVAL '1 hour', ts) AS hour_start, event_type,
              count(*) AS n_events,
@@ -558,7 +559,7 @@ object EventQueries {
     // accounting must equal the one-shot batch split.
     Q("events_stream_quarantine", (spark, dir) =>
       graft.streaming.EventStreams.quarantineIngest(spark, dir,
-        s"/root/repo/target/tmp/stream_quar_${dir.hashCode.abs}"),
+        s"$scratchRoot/stream_quar_${dir.hashCode.abs}"),
       oracle = Some("""
       SELECT CASE WHEN value <= 400 AND event_type <> 'error'
                   THEN 'main' ELSE 'quarantine' END AS sink,

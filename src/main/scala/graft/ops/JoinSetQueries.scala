@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.DecimalType
   * the relational algebra surface beyond the reference's left joins.
   */
 object JoinSetQueries {
+  import SessionScopedCache.scratchRoot
   import Tables.load
 
   private val dec = DecimalType(18, 2)
@@ -511,7 +512,7 @@ object JoinSetQueries {
       // regenerated events corpus at the same path invalidates the
       // materialized fact instead of silently serving stale gold
       val src = new java.io.File(s"$dir/events.parquet")
-      val gold = s"/root/repo/target/tmp/dpp_gold_${dir.hashCode.abs}_" +
+      val gold = s"$scratchRoot/dpp_gold_${dir.hashCode.abs}_" +
         s"${src.length}_${src.lastModified}/events_by_date"
       if (!new java.io.File(s"$gold/_SUCCESS").exists()) {
         // one-time layout build bills to layout_sec like every other

@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions._
   * unmatched target rows persist, unmatched source rows insert.
   */
 object MergeQueries {
+  import SessionScopedCache.scratchRoot
   import Tables.load
 
   /** The shared CDF commit history — orders seeded at v0 (%3≠0), a
@@ -22,13 +23,9 @@ object MergeQueries {
     * consumers are the operators under test — rebuilding the table per
     * query would triple-bill the writes without changing any result
     * (the `events_state_store_audit` shared-replay pattern). */
-  private val cdfScenarioBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def cdfScenarioRoot(spark: org.apache.spark.sql.SparkSession,
                               dir: String): String =
-    cdfScenarioBuilt.computeIfAbsent(dir, _ => {
-      val root = s"/root/repo/target/tmp/txlog_cdf_${dir.hashCode.abs}"
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+    SessionScopedCache.memoDir(spark, "txlog_cdf", dir) { root =>
       val t = graft.pipeline.TxLog(spark, root)
       val base = load(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
@@ -42,7 +39,7 @@ object MergeQueries {
         Seq("o_orderkey"))                                           // v1
       t.deleteWhere("o_totalprice < 50000")                          // v2
       root
-    })
+    }
 
   val all: Seq[Q] = Seq(
 
@@ -138,7 +135,7 @@ object MergeQueries {
     // protocol itself (not just its end state) under the driver's
     // hash gate. Doubling is exact in doubles, so values hash-match.
     Q("txlog_change_feed", (spark, dir) => {
-      val root = s"/root/repo/target/tmp/txlog_cf_${dir.hashCode.abs}"
+      val root = s"$scratchRoot/txlog_cf_${dir.hashCode.abs}"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       val t = graft.pipeline.TxLog(spark, root)
       val orders = load(spark, dir, "orders")
@@ -179,7 +176,7 @@ object MergeQueries {
     // plus a ghost key that hits nothing on either side. This is the
     // 100 TB needle shape: manifest-level filter pruning, no full scan.
     Q("txlog_point_lookup", (spark, dir) => {
-      val root = s"/root/repo/target/tmp/txlog_pt_${dir.hashCode.abs}"
+      val root = s"$scratchRoot/txlog_pt_${dir.hashCode.abs}"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       val t = graft.pipeline.TxLog(spark, root, bloomCols = Seq("o_orderkey"))
       val orders = load(spark, dir, "orders")
@@ -201,7 +198,7 @@ object MergeQueries {
     // two-phase rank, committed across TWO appends — ids must be the
     // global 0-based rank of s_suppkey regardless of the batch split.
     Q("txlog_identity_ids", (spark, dir) => {
-      val root = s"/root/repo/target/tmp/txlog_id_${dir.hashCode.abs}"
+      val root = s"$scratchRoot/txlog_id_${dir.hashCode.abs}"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       val t = graft.pipeline.TxLog(spark, root, statsCols = Seq("row_id"))
       val sup = load(spark, dir, "supplier").select(col("s_suppkey"), col("s_name"))
@@ -225,7 +222,7 @@ object MergeQueries {
     // source keeps evolving — and the clone's own merge must not touch
     // the source. Final read: the clone after its own local merge.
     Q("txlog_clone_snapshot", (spark, dir) => {
-      val root = s"/root/repo/target/tmp/txlog_clone_${dir.hashCode.abs}"
+      val root = s"$scratchRoot/txlog_clone_${dir.hashCode.abs}"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       val src = graft.pipeline.TxLog(spark, s"$root/src")
       val nat = load(spark, dir, "nation")
@@ -255,7 +252,7 @@ object MergeQueries {
     // the hash proves packing preserved both content and skipping
     // metadata.
     Q("txlog_optimize_pack", (spark, dir) => {
-      val root = s"/root/repo/target/tmp/txlog_opt_${dir.hashCode.abs}"
+      val root = s"$scratchRoot/txlog_opt_${dir.hashCode.abs}"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       val t = graft.pipeline.TxLog(spark, root, statsCols = Seq("p_partkey"))
       val part = load(spark, dir, "part")
@@ -285,7 +282,7 @@ object MergeQueries {
     // SQL face (`OPTIMIZE t WHERE p = 'v'`) to keep the statement form
     // under the oracle gate too.
     Q("txlog_optimize_where", (spark, dir) => {
-      val root = s"/root/repo/target/tmp/txlog_optw_${dir.hashCode.abs}"
+      val root = s"$scratchRoot/txlog_optw_${dir.hashCode.abs}"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       val t = graft.pipeline.TxLog(spark, root)
       val part = load(spark, dir, "part")
@@ -323,7 +320,7 @@ object MergeQueries {
     // MergeIntoTable into TxLog.merge. Same oracle as o1: the SQL face
     // must be semantically invisible.
     Q("txlog_sql_merge", (spark, dir) => {
-      val root = s"/root/repo/target/tmp/txlog_sqlmerge_${dir.hashCode.abs}"
+      val root = s"$scratchRoot/txlog_sqlmerge_${dir.hashCode.abs}"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       val sup = load(spark, dir, "supplier")
         .select(col("s_suppkey"), col("s_name"),
@@ -373,7 +370,7 @@ object MergeQueries {
     // by plain SQL strings; the oracle derives the end state
     // relationally.
     Q("txlog_sql_update_delete", (spark, dir) => {
-      val root = s"/root/repo/target/tmp/txlog_sqlud_${dir.hashCode.abs}"
+      val root = s"$scratchRoot/txlog_sqlud_${dir.hashCode.abs}"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       val t = graft.pipeline.TxLog(spark, root)
       t.overwrite(load(spark, dir, "customer")
@@ -413,7 +410,7 @@ object MergeQueries {
     // The final content is identical to the copy-on-write result,
     // which the oracle derives relationally.
     Q("txlog_update_mor", (spark, dir) => {
-      val root = s"/root/repo/target/tmp/txlog_updmor_${dir.hashCode.abs}"
+      val root = s"$scratchRoot/txlog_updmor_${dir.hashCode.abs}"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       val t = graft.pipeline.TxLog(spark, root)
       t.overwrite(load(spark, dir, "customer")
@@ -456,7 +453,7 @@ object MergeQueries {
     // per-version state the library snapshot() serves, with zero data
     // copies — each branch is the manifest-addressed parquet dirs.
     Q("txlog_sql_time_travel", (spark, dir) => {
-      val root = s"/root/repo/target/tmp/txlog_sqltt_${dir.hashCode.abs}"
+      val root = s"$scratchRoot/txlog_sqltt_${dir.hashCode.abs}"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       val sup = load(spark, dir, "supplier")
         .select(col("s_suppkey"), col("s_name"),
@@ -516,7 +513,7 @@ object MergeQueries {
     // snapshot read anti-joins both vectors; the oracle recomputes the
     // surviving set from the raw table.
     Q("txlog_mor_delete", (spark, dir) => {
-      val root = s"/root/repo/target/tmp/txlog_mor_${dir.hashCode.abs}"
+      val root = s"$scratchRoot/txlog_mor_${dir.hashCode.abs}"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       val t = graft.pipeline.TxLog(spark, root)
       val orders = load(spark, dir, "orders")
@@ -540,7 +537,7 @@ object MergeQueries {
     // relational projection — proving the mapping layer is invisible
     // to query semantics.
     Q("txlog_column_mapping", (spark, dir) => {
-      val root = s"/root/repo/target/tmp/txlog_colmap_${dir.hashCode.abs}"
+      val root = s"$scratchRoot/txlog_colmap_${dir.hashCode.abs}"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       val t = graft.pipeline.TxLog(spark, root)
       val orders = load(spark, dir, "orders")
@@ -564,7 +561,7 @@ object MergeQueries {
     // (TxLogSpec). The oracle derives the same expressions
     // relationally — generation must be invisible to query semantics.
     Q("txlog_generated_cols", (spark, dir) => {
-      val root = s"/root/repo/target/tmp/txlog_gen_${dir.hashCode.abs}"
+      val root = s"$scratchRoot/txlog_gen_${dir.hashCode.abs}"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       val t = graft.pipeline.TxLog(spark, root, generatedCols = Seq(
         ("ship_year", "year(l_shipdate)"),
@@ -600,7 +597,7 @@ object MergeQueries {
     // the plain relational result of the same three upserts — which
     // is exactly what the oracle computes from the raw table.
     Q("txlog_partition_evolution", (spark, dir) => {
-      val root = s"/root/repo/target/tmp/txlog_evo_${dir.hashCode.abs}"
+      val root = s"$scratchRoot/txlog_evo_${dir.hashCode.abs}"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       val t = graft.pipeline.TxLog(spark, root)
       val orders = load(spark, dir, "orders").select(
@@ -633,7 +630,7 @@ object MergeQueries {
     // self-mergeable, so partials from each append combine exactly;
     // the result must equal the from-scratch aggregate.
     Q("txlog_incremental_mv", (spark, dir) => {
-      val root = s"/root/repo/target/tmp/txlog_mv_${dir.hashCode.abs}"
+      val root = s"$scratchRoot/txlog_mv_${dir.hashCode.abs}"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       val t = graft.pipeline.TxLog(spark, root)
       val orders = load(spark, dir, "orders")
@@ -705,7 +702,7 @@ object MergeQueries {
       val cust = load(spark, dir, "customer")
         .select(col("c_custkey"), col("c_nationkey"), col("c_name"),
           col("c_acctbal").cast("decimal(18,2)").as("bal"))
-      val path = "/root/repo/target/tmp/o5_cdc_part/customer"
+      val path = s"$scratchRoot/o5_cdc_part/customer"
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(path).getParentFile)
       val t = graft.pipeline.TxLog(spark, path)
@@ -802,7 +799,7 @@ object MergeQueries {
         .unionByName(load(spark, dir, "part").filter(col("p_partkey") % 6 === 0)
           .select((col("p_partkey") + 500000L).as("p_partkey"),
             col("p_name"), lit("B").as("grade")))
-      val path = "/root/repo/target/tmp/o6_evolve/part"
+      val path = s"$scratchRoot/o6_evolve/part"
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(path).getParentFile)
       val t = graft.pipeline.TxLog(spark, path)
@@ -888,7 +885,7 @@ object MergeQueries {
     // this is the ops-mistake recovery path: an errant overwrite costs
     // one manifest write to undo, not a restore-from-backup.
     Q("txlog_restore_vacuum", (spark, dir) => {
-      val root = s"/root/repo/target/tmp/txlog_rst_${dir.hashCode.abs}"
+      val root = s"$scratchRoot/txlog_rst_${dir.hashCode.abs}"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       val t = graft.pipeline.TxLog(spark, root)
       val cust = load(spark, dir, "customer")
@@ -1096,9 +1093,9 @@ object MergeQueries {
     // dropped microbatch both break it).
     Q("txlog_stream_source", (spark, dir) => {
       val tag = dir.hashCode.abs
-      val root = s"/root/repo/target/tmp/txlog_stream_src_$tag"
-      val sinkRoot = s"/root/repo/target/tmp/txlog_stream_sink_$tag"
-      val ckpt = s"/root/repo/target/tmp/txlog_stream_ckpt_$tag"
+      val root = s"$scratchRoot/txlog_stream_src_$tag"
+      val sinkRoot = s"$scratchRoot/txlog_stream_sink_$tag"
+      val ckpt = s"$scratchRoot/txlog_stream_ckpt_$tag"
       Seq(root, sinkRoot, ckpt).foreach(d =>
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
       val base = load(spark, dir, "orders")
@@ -1144,9 +1141,9 @@ object MergeQueries {
     // dropped microbatch both break the hash.
     Q("txlog_stream_sink", (spark, dir) => {
       val tag = dir.hashCode.abs
-      val root = s"/root/repo/target/tmp/txlog_nsink_src_$tag"
-      val sinkRoot = s"/root/repo/target/tmp/txlog_nsink_dst_$tag"
-      val ckpt = s"/root/repo/target/tmp/txlog_nsink_ckpt_$tag"
+      val root = s"$scratchRoot/txlog_nsink_src_$tag"
+      val sinkRoot = s"$scratchRoot/txlog_nsink_dst_$tag"
+      val ckpt = s"$scratchRoot/txlog_nsink_ckpt_$tag"
       Seq(root, sinkRoot, ckpt).foreach(d =>
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
       val base = load(spark, dir, "orders")
@@ -1183,8 +1180,8 @@ object MergeQueries {
     // `changes()` reconstruction (same oracle, same hash).
     Q("txlog_stream_cdf", (spark, dir) => {
       val tag = dir.hashCode.abs
-      val ckpt = s"/root/repo/target/tmp/txlog_scdf_ckpt_$tag"
-      val out = s"/root/repo/target/tmp/txlog_scdf_out_$tag"
+      val ckpt = s"$scratchRoot/txlog_scdf_ckpt_$tag"
+      val out = s"$scratchRoot/txlog_scdf_out_$tag"
       Seq(ckpt, out).foreach(d =>
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
       val root = cdfScenarioRoot(spark, dir)
@@ -1255,7 +1252,7 @@ object MergeQueries {
     // final-state aggregate, so the hash proves every intermediate
     // fold composed exactly.
     Q("txlog_stream_mv", (spark, dir) => {
-      val ckpt = s"/root/repo/target/tmp/txlog_smv_ckpt_${dir.hashCode.abs}"
+      val ckpt = s"$scratchRoot/txlog_smv_ckpt_${dir.hashCode.abs}"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
       val t = graft.pipeline.TxLog(spark, cdfScenarioRoot(spark, dir))
       val g = Seq("o_orderstatus"); val s = Seq("o_totalprice")
@@ -1324,7 +1321,7 @@ object MergeQueries {
     // of the 100 TB skipping story: ad-hoc queries touch the dirs the
     // WHERE names, not the table.
     Q("txlog_sql_auto_skipping", (spark, dir) => {
-      val root = s"/root/repo/target/tmp/txlog_autoskip_${dir.hashCode.abs}"
+      val root = s"$scratchRoot/txlog_autoskip_${dir.hashCode.abs}"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       val t = graft.pipeline.TxLog(spark, root, statsCols = Seq("o_orderkey"))
       val o = load(spark, dir, "orders")
@@ -1367,7 +1364,7 @@ object MergeQueries {
     // VACUUM DRY RUN (physical-layout outputs, not SQL-expressible)
     // are spec-gated in TxLogSqlDdlSpec instead.
     Q("txlog_sql_show_partitions", (spark, dir) => {
-      val root = s"/root/repo/target/tmp/txlog_showp_${dir.hashCode.abs}"
+      val root = s"$scratchRoot/txlog_showp_${dir.hashCode.abs}"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       val t = graft.pipeline.TxLog(spark, root)
       t.overwritePartitioned(load(spark, dir, "customer")
@@ -1391,7 +1388,7 @@ object MergeQueries {
     // graft.vacuum.retainVersions (both spec-gated in TxLogSqlDdlSpec).
     Q("txlog_sql_tblproperties", (spark, dir) => {
       val tag = dir.hashCode.abs
-      val root = s"/root/repo/target/tmp/txlog_props_$tag"
+      val root = s"$scratchRoot/txlog_props_$tag"
       val name = s"txlog_props_$tag"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       graft.sql.TxLogSql.unregister(name)
@@ -1433,7 +1430,7 @@ object MergeQueries {
     // and CDF windows intact.
     Q("txlog_ict_time_travel", (spark, dir) => {
       val tag = dir.hashCode.abs
-      val root = s"/root/repo/target/tmp/txlog_ict_$tag"
+      val root = s"$scratchRoot/txlog_ict_$tag"
       val name = s"txlog_ict_$tag"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       graft.sql.TxLogSql.unregister(name)
@@ -1478,7 +1475,7 @@ object MergeQueries {
     // dimension broadcasts because the optimizer KNOWS it is small.
     Q("txlog_sql_analyze_cbo", (spark, dir) => {
       val tag = dir.hashCode.abs
-      val root = s"/root/repo/target/tmp/txlog_cbo_$tag"
+      val root = s"$scratchRoot/txlog_cbo_$tag"
       val name = s"txlog_cbo_$tag"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       graft.sql.TxLogSql.unregister(name)
@@ -1520,7 +1517,7 @@ object MergeQueries {
     Q("txlog_sql_ddl", (spark, dir) => {
       import spark.implicits._
       val tag = dir.hashCode.abs
-      val root = s"/root/repo/target/tmp/txlog_ddl_$tag"
+      val root = s"$scratchRoot/txlog_ddl_$tag"
       val name = s"txlog_ddl_parts_$tag"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       graft.sql.TxLogSql.unregister(name)
@@ -1571,8 +1568,8 @@ object MergeQueries {
     Q("txlog_sql_evolution", (spark, dir) => {
       import spark.implicits._
       val tag = dir.hashCode.abs
-      val root = s"/root/repo/target/tmp/txlog_evo_$tag"
-      val cloneRoot = s"/root/repo/target/tmp/txlog_evo_clone_$tag"
+      val root = s"$scratchRoot/txlog_evo_$tag"
+      val cloneRoot = s"$scratchRoot/txlog_evo_clone_$tag"
       val name = s"txlog_evo_$tag"
       val cname = s"txlog_evo_cl_$tag"
       Seq(root, cloneRoot).foreach(r =>
@@ -1634,7 +1631,7 @@ object MergeQueries {
     // CONVERT is how such a lake adopts the log without a rewrite.
     Q("txlog_convert_inplace", (spark, dir) => {
       val tag = dir.hashCode.abs
-      val src = s"/root/repo/target/tmp/txlog_conv_$tag"
+      val src = s"$scratchRoot/txlog_conv_$tag"
       val name = s"txlog_conv_$tag"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src))
       graft.sql.TxLogSql.unregister(name)
@@ -1667,7 +1664,7 @@ object MergeQueries {
     // clause with plain joins. Reference: `gold_dim_branch.ipynb:88166`
     // is the unconditional upsert subset of this statement.
     Q("txlog_sql_merge_full", (spark, dir) => {
-      val root = s"/root/repo/target/tmp/txlog_mergefull_${dir.hashCode.abs}"
+      val root = s"$scratchRoot/txlog_mergefull_${dir.hashCode.abs}"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       val sup = load(spark, dir, "supplier")
         .select(col("s_suppkey"), col("s_name"),
@@ -1721,8 +1718,8 @@ object MergeQueries {
     Q("txlog_copy_into", (spark, dir) => {
       import spark.implicits._
       val tag = dir.hashCode.abs
-      val stage = s"/root/repo/target/tmp/copyinto_stage_$tag"
-      val root = s"/root/repo/target/tmp/copyinto_tbl_$tag"
+      val stage = s"$scratchRoot/copyinto_stage_$tag"
+      val root = s"$scratchRoot/copyinto_tbl_$tag"
       Seq(stage, root, s"${stage}_late").foreach(r =>
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(r)))
       val sup = load(spark, dir, "supplier")
@@ -1766,7 +1763,7 @@ object MergeQueries {
     // oracle rebuilds the same final state with plain set ops.
     Q("txlog_sql_replace_partition", (spark, dir) => {
       val tag = dir.hashCode.abs
-      val root = s"/root/repo/target/tmp/txlog_replpart_$tag"
+      val root = s"$scratchRoot/txlog_replpart_$tag"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       graft.sql.TxLogSql.unregister("txlog_replpart_tgt")
       val li = load(spark, dir, "lineitem")
@@ -1808,7 +1805,7 @@ object MergeQueries {
     // counts, the non-NULL-name counts AND the exact balance sums, so
     // it pins all four row provenances at once.
     Q("txlog_sql_merge_evolve", (spark, dir) => {
-      val root = s"/root/repo/target/tmp/txlog_mergeevo_${dir.hashCode.abs}"
+      val root = s"$scratchRoot/txlog_mergeevo_${dir.hashCode.abs}"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       graft.sql.TxLogSql.unregister("txlog_mergeevo_tgt")
       val cust = load(spark, dir, "customer")

@@ -13,6 +13,7 @@ import org.apache.spark.sql.types.DecimalType
   * aggregation order, while `sum(double)` is not (order-dependent ULPs).
   */
 object ParityQueries {
+  import SessionScopedCache.scratchRoot
   import Tables.load
 
   private val dec = DecimalType(18, 2)
@@ -24,7 +25,7 @@ object ParityQueries {
     // reads it back with the univocity parser; the oracle recomputes the
     // same projection (incl. a comma-bearing derived string) from parquet.
     Q("s1_csv_source", (spark, dir) => {
-      val out = "/root/repo/target/tmp/s1_csv/nation"
+      val out = s"$scratchRoot/s1_csv/nation"
       val df = load(spark, dir, "nation")
         .select(col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"),
           concat(col("n_name"), lit(", region "), col("n_regionkey")).as("quoted"))

@@ -12,6 +12,7 @@ import org.apache.spark.sql.functions._
   * to the DuckDB oracle (verified empirically on all sf0.01 pairs).
   */
 object VectorQueries {
+  import SessionScopedCache.scratchRoot
   import Tables.load
 
   /** Oracle fragment: cosine of two float lists in double, between
@@ -96,47 +97,27 @@ object VectorQueries {
     b
   }
 
-  /** Corpus-size cache: ONE count job per (session, corpus). The LSH
-    * queries need N at plan-BUILD time to derive [[srpBits]]; without
-    * this each invocation re-ran a full-table count eagerly inside the
-    * query builder (an uncached scan billed to planning — flagged in
-    * the r16 ADVICE). Keyed and lifetime-bounded exactly like
-    * [[nnTopCache]].
+  /** Corpus size, ONE count job per (session, corpus plan) through
+    * [[SessionScopedCache.memo]]. The LSH queries need N at plan-BUILD
+    * time to derive [[srpBits]]; without this each invocation re-ran a
+    * full-table count eagerly inside the query builder (an uncached
+    * scan billed to planning — flagged in the r16 ADVICE).
     *
     * IMMUTABLE-CORPUS ASSUMPTION (r17 ADVICE): the key is the analyzed
-    * plan's semanticHash — a PLAN identity, not a DATA identity — so
-    * mutating the files behind an identical plan in-session would
-    * serve a stale N. Every call site reads the driver's read-only
-    * parquet corpora (`load(spark, dir, "embeddings")`), which never
-    * mutate within a session; that is the same contract the
-    * [[nnTopCache]]d neighbor frames and the [[servedCache]]d index
-    * roots already rely on (a mutated corpus would invalidate THEIR
-    * entries too, not just N). A mutable-table caller must key on a
-    * snapshot identity (e.g. TxLog version) instead — see
-    * `txlog_stream_ivf_maintain` for the mutable-corpus pattern, which
-    * derives everything from explicit versions and bypasses these
-    * caches entirely. */
-  private val corpusCountCache =
-    new SessionScopedCache[(String, Int), Long](64)
-
+    * plan — a PLAN identity, not a DATA identity — so mutating the
+    * files behind an identical plan in-session would serve a stale N.
+    * Every call site reads the driver's read-only parquet corpora
+    * (`load(spark, dir, "embeddings")`), which never mutate within a
+    * session; that is the same contract the memoized neighbor frames
+    * ([[nnTop3]]) and served index roots ([[servedIvfRoot]]) already
+    * rely on (a mutated corpus would invalidate THEIR entries too, not
+    * just N). A mutable-table caller must key on a snapshot identity
+    * (e.g. TxLog version) instead — see `txlog_stream_ivf_maintain`
+    * for the mutable-corpus pattern, which derives everything from
+    * explicit versions and bypasses the memo entirely. */
   private[graft] def corpusCount(spark: org.apache.spark.sql.SparkSession,
-                                 e0: org.apache.spark.sql.DataFrame): Long = {
-    val key = (s"${spark.sparkContext.applicationId}@${System.identityHashCode(spark)}",
-      e0.queryExecution.analyzed.semanticHash())
-    corpusCountCache.getOrCompute(key, SessionScopedCache.aliveProbe(spark))(
-      e0.count())
-  }
-
-  /** Shared 3-NN neighbor-list cache for the NN-graph family: ONE
-    * build per (session, corpus). `sim_nn_graph` (top-1 = rn 1),
-    * `sim_nn_pagerank` (edges = rn 1) and `sim_label_consensus`
-    * (votes over rn ≤ 3) all start from the identical
-    * bucket-join + cosine + constant-cap rank — re-running it three
-    * times was 3× the family's dominant cost (the dedup family's
-    * shared-pair-index lesson applied here). Entries are node-sized
-    * checkpointed frames, session-scoped and LRU-bounded. */
-  private val nnTopCache =
-    new SessionScopedCache[(String, Int), (Long, org.apache.spark.sql.DataFrame)](32)
+                                 e0: org.apache.spark.sql.DataFrame): Long =
+    SessionScopedCache.memo(spark, "corpus_count", SessionScopedCache.plan(e0))(e0.count())
 
   /** The un-checkpointed 3-NN builder — exposed for plan pinning
     * (PlanSpec asserts the bucket equi-join + WindowGroupLimit on the
@@ -167,13 +148,18 @@ object VectorQueries {
     * ranked (score DESC, nbr_id ASC) among scaled-SRP bucket peers.
     * The rn ≤ 3 constant cap executes as WindowGroupLimit (map-side
     * heap); localCheckpoint makes the one build durable so the three
-    * consumers never re-run the bucket join. */
+    * consumers never re-run the bucket join.
+    *
+    * Shared by the NN-graph family: `sim_nn_graph` (top-1 = rn 1),
+    * `sim_nn_pagerank` (edges = rn 1) and `sim_label_consensus` (votes
+    * over rn ≤ 3) all start from the identical bucket-join + cosine +
+    * constant-cap rank — re-running it three times was 3× the family's
+    * dominant cost (the dedup family's shared-pair-index lesson applied
+    * here). */
   private def nnTop3(spark: org.apache.spark.sql.SparkSession,
                      dir: String): (Long, org.apache.spark.sql.DataFrame) = {
     val e0 = load(spark, dir, "embeddings")
-    val key = (s"${spark.sparkContext.applicationId}@${System.identityHashCode(spark)}",
-      e0.queryExecution.analyzed.semanticHash())
-    nnTopCache.getOrCompute(key, SessionScopedCache.aliveProbe(spark)) {
+    SessionScopedCache.memo(spark, "nn_top3", SessionScopedCache.plan(e0)) {
       graft.plans.VectorHofRewrite.install(spark)
       val n = corpusCount(spark, e0)
       (n, nnTop3Build(spark, e0, srpBits(n)).localCheckpoint(true))
@@ -516,7 +502,7 @@ object VectorQueries {
     // clustered write) bills to layoutNanos like every index layout.
     Q("sim_ivf_served", (spark, dir) => {
       val e = load(spark, dir, "embeddings")
-      val root = servedIvfRoot(spark, dir, e)
+      val root = servedIvfRoot(spark, e)
       val quantizer = graft.pipeline.TxLog(spark, s"$root/quantizer").snapshot()
       val postings = graft.pipeline.TxLog(spark, s"$root/postings",
         statsCols = Seq("cent_id"))
@@ -560,7 +546,7 @@ object VectorQueries {
     // Hash-matches the session multiprobe's oracle.
     Q("sim_ivf_served_multiprobe", (spark, dir) => {
       val e = load(spark, dir, "embeddings")
-      val root = servedIvfRoot(spark, dir, e)
+      val root = servedIvfRoot(spark, e)
       val quantizer = graft.pipeline.TxLog(spark, s"$root/quantizer").snapshot()
       val postings = graft.pipeline.TxLog(spark, s"$root/postings",
         statsCols = Seq("cent_id"))
@@ -616,7 +602,7 @@ object VectorQueries {
     // every query still serves up to 5 passing neighbors.
     Q("sim_ivf_served_filtered", (spark, dir) => {
       val e = load(spark, dir, "embeddings")
-      val root = servedIvfRoot(spark, dir, e)
+      val root = servedIvfRoot(spark, e)
       val quantizer = graft.pipeline.TxLog(spark, s"$root/quantizer").snapshot()
       val postings = graft.pipeline.TxLog(spark, s"$root/postings",
         statsCols = Seq("cent_id"))
@@ -818,9 +804,9 @@ object VectorQueries {
     // from-scratch index rebuild after all inserts AND deletes.
     Q("txlog_stream_ivf_maintain", (spark, dir) => {
       val tag = dir.hashCode.abs
-      val root = s"/root/repo/target/tmp/txlog_sivf_$tag"
-      val sinkRoot = s"/root/repo/target/tmp/txlog_sivf_idx_$tag"
-      val ckpt = s"/root/repo/target/tmp/txlog_sivf_ckpt_$tag"
+      val root = s"$scratchRoot/txlog_sivf_$tag"
+      val sinkRoot = s"$scratchRoot/txlog_sivf_idx_$tag"
+      val ckpt = s"$scratchRoot/txlog_sivf_ckpt_$tag"
       Seq(root, sinkRoot, ckpt).foreach(d =>
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
       val e = load(spark, dir, "embeddings")
@@ -1432,7 +1418,7 @@ object VectorQueries {
     // like every index layout.
     Q("sim_pq_served", (spark, dir) => {
       val e = load(spark, dir, "embeddings")
-      val root = servedPqRoot(spark, dir, e)
+      val root = servedPqRoot(spark, e)
       val books = graft.pipeline.TxLog(spark, s"$root/codebooks").snapshot()
       val stored = graft.pipeline.TxLog(spark, s"$root/codes").snapshot()
       val codes = stored.select(col("vec_id"), posexplode(col("codes")))
@@ -1566,11 +1552,11 @@ object VectorQueries {
       val residCol = ivfResidCol
       // resid stays LAZY: its one consumer is pqTrainedCodes, whose
       // `subs` checkpoint materializes this plan exactly once — and a
-      // lazy plan keeps a stable semanticHash, so the session trainer
-      // cache is SHARED with servedIvfPqRoot's identical residual frame
-      // (the sim_pq family already shares its trainer this way; the
-      // old eager checkpoint minted a fresh RDD id per call and broke
-      // the key)
+      // lazy plan canonicalizes to an equal plan on every build, so the
+      // memoized trainer is SHARED with servedIvfPqRoot's identical
+      // residual frame (the sim_pq family already shares its trainer
+      // this way; the old eager checkpoint minted a fresh RDD per call
+      // and broke the key)
       val resid = ivfAssign(spark, e, cents)
         .join(broadcast(cents), Seq("cent_id"))
         .select(col("vec_id"), col("cent_id").as("cell"),
@@ -1630,7 +1616,7 @@ object VectorQueries {
     // bills to layoutNanos.
     Q("sim_ivfpq_served", (spark, dir) => {
       val e = load(spark, dir, "embeddings")
-      val root = servedIvfPqRoot(spark, dir, e)
+      val root = servedIvfPqRoot(spark, e)
       val cents = graft.pipeline.TxLog(spark, s"$root/quantizer").snapshot()
       val books = graft.pipeline.TxLog(spark, s"$root/codebooks").snapshot()
       val codesT = graft.pipeline.TxLog(spark, s"$root/codes",
@@ -1850,21 +1836,13 @@ object VectorQueries {
         x => x.getField("m").cast("float")).as("cv"))
       .localCheckpoint(true)
 
-  /** Trained-centroid cache: the k-means index TRAINING (2 Lloyd
-    * iterations = 2 full corpus passes) is shared per (session,
-    * corpus) — the probe and the SemDeDup queries then each pay one
-    * assignment pass over the same index, which is exactly how a
-    * production ANN index amortizes its build. Entries are tiny
-    * (nlist-row checkpointed frames) and session-scoped (a frame
-    * checkpointed by a stopped session must never be served to a new
-    * one — same discipline as [[graft.dedup.ExactJaccard]]). */
-  private val centsCache =
-    new SessionScopedCache[(String, Int), org.apache.spark.sql.DataFrame](32)
-
   /** Trained coarse quantizer centroids: every-25th-vector seeds
-    * CAPPED at nlist=64, 2 Lloyd iterations, cached per (session,
-    * corpus). The cap makes the index build linear in the corpus:
-    * uncapped nlist∝N made every assignment pass N·nlist = quadratic
+    * CAPPED at nlist=64, 2 Lloyd iterations, memoized per (session,
+    * corpus). The k-means TRAINING (2 full corpus passes) is thus
+    * shared — the probe and the SemDeDup queries then each pay one
+    * assignment pass over the same index, which is exactly how a
+    * production ANN index amortizes its build. The cap makes the
+    * index build linear in the corpus: uncapped nlist∝N made every assignment pass N·nlist = quadratic
     * (measured 70× time at 10× data in the sf1 scaling run — the same
     * defect the PQ codebook cap already fixed for subspace training).
     * nlist is an index-format parameter, not a corpus property; cells
@@ -1872,18 +1850,12 @@ object VectorQueries {
     * standard IVF trade a deployment tunes via nlist. */
   private def ivfTrainedCents(spark: org.apache.spark.sql.SparkSession,
                               e: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val key = (s"${spark.sparkContext.applicationId}@${System.identityHashCode(spark)}",
-      e.queryExecution.analyzed.semanticHash())
-    centsCache.getOrCompute(key, SessionScopedCache.aliveProbe(spark)) {
+    SessionScopedCache.memo(spark, "ivf_cents", SessionScopedCache.plan(e)) {
       val cents0 = e.filter(col("vec_id") % 25 === 0 && col("vec_id") < 25L * 64)
         .select(col("vec_id").as("cent_id"), col("embedding").as("cv"))
       ivfRetrain(ivfAssign(spark, e, ivfRetrain(ivfAssign(spark, e, cents0))))
     }
   }
-
-  /** Persisted-served-index cache: root path per (session, corpus). */
-  private val servedCache =
-    new SessionScopedCache[(String, Int), String](32)
 
   /** Build (once per session+corpus) the PERSISTED serving form of the
     * IVF index: a TxLog pair under one root —
@@ -1902,13 +1874,8 @@ object VectorQueries {
     * serving queries measure SERVING. Incremental freshness of exactly
     * this layout is what `txlog_stream_ivf_maintain` proves. */
   private[graft] def servedIvfRoot(spark: org.apache.spark.sql.SparkSession,
-                                   dir: String,
                                    e: org.apache.spark.sql.DataFrame): String = {
-    val key = (s"${spark.sparkContext.applicationId}@${System.identityHashCode(spark)}",
-      e.queryExecution.analyzed.semanticHash())
-    servedCache.getOrCompute(key, SessionScopedCache.aliveProbe(spark)) {
-      val root = s"/root/repo/target/tmp/ivf_served_${dir.hashCode.abs}_${key._2.abs}"
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+    SessionScopedCache.memoDir(spark, "ivf_served", SessionScopedCache.plan(e)) { root =>
       val t0 = System.nanoTime()
       val cents = ivfTrainedCents(spark, e)
       graft.pipeline.TxLog(spark, s"$root/quantizer").overwrite(cents)
@@ -1947,13 +1914,8 @@ object VectorQueries {
     * OFFLINE cost, billed to [[graft.ops.Scale.layoutNanos]] like the
     * other index layouts — serving queries measure SERVING. */
   private[graft] def servedPqRoot(spark: org.apache.spark.sql.SparkSession,
-                                  dir: String,
                                   e: org.apache.spark.sql.DataFrame): String = {
-    val key = (s"${spark.sparkContext.applicationId}@${System.identityHashCode(spark)}",
-      e.queryExecution.analyzed.semanticHash())
-    servedPqCache.getOrCompute(key, SessionScopedCache.aliveProbe(spark)) {
-      val root = s"/root/repo/target/tmp/pq_served_${dir.hashCode.abs}_${key._2.abs}"
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+    SessionScopedCache.memoDir(spark, "pq_served", SessionScopedCache.plan(e)) { root =>
       val t0 = System.nanoTime()
       val (codes, cents) = pqTrainedCodes(spark, e)
       graft.pipeline.TxLog(spark, s"$root/codebooks").overwrite(cents)
@@ -1969,9 +1931,6 @@ object VectorQueries {
       root
     }
   }
-
-  private val servedPqCache =
-    new SessionScopedCache[(String, Int), String](32)
 
   /** Build (once per session+corpus) the PERSISTED serving form of the
     * IVF-PQ index — the production composition of both layouts under
@@ -1990,19 +1949,14 @@ object VectorQueries {
     * Build = coarse train + assignment + residual PQ train + encode +
     * three writes; billed to [[graft.ops.Scale.layoutNanos]]. */
   private[graft] def servedIvfPqRoot(spark: org.apache.spark.sql.SparkSession,
-                                     dir: String,
                                      e: org.apache.spark.sql.DataFrame): String = {
-    val key = (s"${spark.sparkContext.applicationId}@${System.identityHashCode(spark)}",
-      e.queryExecution.analyzed.semanticHash())
-    servedIvfPqCache.getOrCompute(key, SessionScopedCache.aliveProbe(spark)) {
-      val root = s"/root/repo/target/tmp/ivfpq_served_${dir.hashCode.abs}_${key._2.abs}"
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+    SessionScopedCache.memoDir(spark, "ivfpq_served", SessionScopedCache.plan(e)) { root =>
       val t0 = System.nanoTime()
       val cents = ivfTrainedCents(spark, e)
       // lazy, single-consumer, and STRUCTURALLY IDENTICAL to
       // sim_ivfpq_adc's residual frame (same cached `cents` RDD, same
-      // source relation) — so both share one pqCache training entry
-      // per session instead of training twice
+      // source relation) — so both share one memoized pq_codes
+      // training entry per session instead of training twice
       val resid = ivfAssign(spark, e, cents)
         .join(broadcast(cents), Seq("cent_id"))
         .select(col("vec_id"), col("cent_id").as("cell"),
@@ -2025,9 +1979,6 @@ object VectorQueries {
       root
     }
   }
-
-  private val servedIvfPqCache =
-    new SessionScopedCache[(String, Int), String](32)
 
   /** Untimed warm-touch of every PERSISTED serving index (IVF, PQ,
     * IVF-PQ roots): build if absent (billed to
@@ -2052,9 +2003,9 @@ object VectorQueries {
                                        dir: String): Unit = {
     val e = load(spark, dir, "embeddings")
     val roots = Seq(
-      servedIvfRoot(spark, dir, e) -> Seq("quantizer", "postings"),
-      servedPqRoot(spark, dir, e) -> Seq("codebooks", "codes"),
-      servedIvfPqRoot(spark, dir, e) -> Seq("quantizer", "codebooks", "codes"))
+      servedIvfRoot(spark, e) -> Seq("quantizer", "postings"),
+      servedPqRoot(spark, e) -> Seq("codebooks", "codes"),
+      servedIvfPqRoot(spark, e) -> Seq("quantizer", "codebooks", "codes"))
     roots.foreach { case (root, tables) =>
       tables.foreach { t =>
         graft.pipeline.TxLog(spark, s"$root/$t").snapshot().count()
@@ -2328,15 +2279,11 @@ object VectorQueries {
         x => x.getField("m").cast("float")).as("cv"))
       .localCheckpoint(true)
 
-  /** PQ index cache per (session, corpus): (codes, codebooks). The
-    * codes frame IS the compressed index — 4 small ints per vector —
-    * and is checkpointed so consumers scan it without replaying
-    * training; the codebook frame is a broadcast-size lookup. */
-  private val pqCache =
-    new SessionScopedCache[(String, Int),
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](32)
-
-  /** Train per-subspace codebooks and encode `e`. When `e` carries a
+  /** Train per-subspace codebooks and encode `e`, memoized per
+    * (session, corpus) as (codes, codebooks). The codes frame IS the
+    * compressed index — 4 small ints per vector — and is checkpointed
+    * so consumers scan it without replaying training; the codebook
+    * frame is a broadcast-size lookup. When `e` carries a
     * `cell` column (the IVF-PQ residual path), the codes frame keeps
     * it — (vec_id, cell, s, cent_id) — so consumers that need the
     * coarse cell per code NEVER join the N-sized codes table back to
@@ -2347,9 +2294,7 @@ object VectorQueries {
     * with or without the carry. */
   private[graft] def pqTrainedCodes(spark: org.apache.spark.sql.SparkSession,
                                     e: org.apache.spark.sql.DataFrame): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val key = (s"${spark.sparkContext.applicationId}@${System.identityHashCode(spark)}",
-      e.queryExecution.analyzed.semanticHash())
-    pqCache.getOrCompute(key, SessionScopedCache.aliveProbe(spark)) {
+    SessionScopedCache.memo(spark, "pq_codes", SessionScopedCache.plan(e)) {
       // the training set is read 3× (2 Lloyd passes + final encoding):
       // materialize it once — it is the corpus re-shaped, not a copy
       // per pass

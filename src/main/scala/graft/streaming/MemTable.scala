@@ -25,8 +25,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Small control-sized sinks (per-user totals, quarantine counts) may
   * skip draining when the table is deliberately SHARED across
-  * queries (see RunningTotals.tableFor — dropping it would silently
-  * re-run the shared replay on the next reader).
+  * queries (see RunningTotals.replay — dropping it would break the
+  * next reader of the memoized replay).
   */
 object MemTable {
   def drain(spark: SparkSession, name: String): DataFrame = {

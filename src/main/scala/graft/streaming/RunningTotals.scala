@@ -41,22 +41,19 @@ class RunningTotalsProcessor
 
 object RunningTotals {
 
-  /** One CHECKPOINTED replay per (JVM, source dir), shared by the
+  /** One CHECKPOINTED replay per (session, source dir), shared by the
     * running-totals query and the state audit: the replay emits its
-    * per-batch snapshots into a memory table AND persists its RocksDB
-    * state under the returned checkpoint path. Sharing is not just a
-    * cost save — it is the audit's semantics: an operator audits the
-    * state of a job that ALREADY RAN, not a private re-execution. */
-  private val replayed =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def tableFor(dir: String) = s"graft_running_totals_${dir.hashCode.abs}"
-
-  private def replay(spark: SparkSession, dir: String): String =
-    replayed.computeIfAbsent(dir, _ => {
+    * per-batch snapshots into a memory table of the session AND
+    * persists its RocksDB state under its memo directory. Returns
+    * (memory table, checkpoint path). Sharing is not just a cost save —
+    * it is the audit's semantics: an operator audits the state of a job
+    * that ALREADY RAN, not a private re-execution. */
+  private def replay(spark: SparkSession, dir: String): (String, String) =
+    graft.ops.SessionScopedCache.memoDir(spark, "running_totals", dir) { cp =>
       import spark.implicits._
-      val cp = s"/root/repo/target/tmp/tws_state_cp_${dir.hashCode.abs}"
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(cp))
+      // the memory table is named after the entry's own directory, so
+      // no two replays in one session share a name
+      val table = "graft_" + new java.io.File(cp).getName.replaceAll("\\W", "_")
       val stagePath = SessionizeStream.stageWithSentinels(spark, dir, "tws",
         splitEvents = 4)
       val stream = spark.readStream
@@ -93,7 +90,7 @@ object RunningTotals {
         val q = out.toDF().writeStream
           .outputMode("update")
           .format("memory")
-          .queryName(tableFor(dir))
+          .queryName(table)
           .option("checkpointLocation", cp)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
@@ -102,16 +99,15 @@ object RunningTotals {
         prev.fold(spark.conf.unset(confKey))(spark.conf.set(confKey, _))
         prevCl.fold(spark.conf.unset(clKey))(spark.conf.set(clKey, _))
       }
-      cp
-    })
+      (table, cp)
+    }
 
   /** Runs the processor over the finite events replay (4 real
     * microbatches) and folds the emitted snapshots to each user's
     * final state: `n` is strictly increasing per user, so
     * max(struct(n, cents)) picks the last emission deterministically. */
   def perUser(spark: SparkSession, dir: String): DataFrame = {
-    replay(spark, dir)
-    spark.table(tableFor(dir))
+    spark.table(replay(spark, dir)._1)
       .groupBy(col("user_id"))
       .agg(max(struct(col("n"), col("cents"))).as("s"))
       .select(col("user_id"), col("s.n").as("n_events"),
@@ -125,7 +121,7 @@ object RunningTotals {
     * batch aggregate: at 100 TB this is how an operator audits state
     * size/skew and debugs a stateful job without replaying it. */
   def stateAudit(spark: SparkSession, dir: String): DataFrame = {
-    val cp = replay(spark, dir)
+    val cp = replay(spark, dir)._2
     // the state source addresses a (checkpoint, operator, state
     // variable); transformWithState value state reads back as
     // (key struct, value struct) rows

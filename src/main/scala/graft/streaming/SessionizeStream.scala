@@ -66,13 +66,6 @@ object SessionizeStream {
     closed.result().iterator
   }
 
-  /** Staged-dir cache: the sentinel protocol stages identical content
-    * for every streaming query over the same source dir, so stage once
-    * per JVM and share (each query still streams it independently —
-    * only the file copies + sentinel writes are saved). */
-  private val stagedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Run `f` with the session's shuffle partitions temporarily set to
     * `n`: a streaming query pins its state-store partition count from
     * the conf at first start, and for these finite micro-demos 32
@@ -129,17 +122,20 @@ object SessionizeStream {
     * `splitEvents > 1` splits the events across that many part files so
     * `maxFilesPerTrigger=1` yields multiple REAL microbatches (needed
     * to exercise per-batch sinks like the foreachBatch merge).
-    * Returns the staging dir to stream from. */
+    * Returns the staging dir to stream from. The sentinel protocol
+    * stages identical content for every streaming query over the same
+    * source dir, so the staged dir is memoized per (session, dir, split)
+    * and shared (each query still streams it independently — only the
+    * file copies + sentinel writes are saved). */
   private[graft] def stageWithSentinels(spark: SparkSession, dir: String,
                                         tag: String, splitEvents: Int = 1): String =
-    stagedDirs.computeIfAbsent(s"$dir|$splitEvents",
-      _ => stage0(spark, dir, splitEvents))
+    graft.ops.SessionScopedCache.memoDir(spark, "stream_stage", (dir, splitEvents))(
+      stage0(spark, dir, splitEvents, _))
 
-  private def stage0(spark: SparkSession, dir: String, splitEvents: Int): String = {
+  private def stage0(spark: SparkSession, dir: String, splitEvents: Int,
+                     stageDir: String): String = {
     import spark.implicits._
-    val stage = new java.io.File(
-      s"/root/repo/target/tmp/stream_shared_${dir.hashCode.abs}_$splitEvents")
-    org.apache.commons.io.FileUtils.deleteDirectory(stage)
+    val stage = new java.io.File(stageDir)
     stage.mkdirs()
     // Normalize ts to epoch-MICROS longs in the staged files (the
     // rawSchema convention): the driver's physical timestamp type has

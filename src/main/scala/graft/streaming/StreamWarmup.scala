@@ -23,20 +23,14 @@ import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
   * one-time class/JNI loading being moved out of the timed region. */
 object StreamWarmup {
 
-  private val done = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  def run(spark: SparkSession): Unit =
+    graft.ops.SessionScopedCache.memoDir(spark, "stream_warmup", ()) { base =>
+      try warm(spark, base)
+      catch { case _: Throwable => () } // advisory: a failed warm-up must never fail a query
+    }
 
-  def run(spark: SparkSession): Unit = {
-    val key = s"${spark.sparkContext.applicationId}@${System.identityHashCode(spark)}"
-    if (!done.add(key)) return
-    try warm(spark)
-    catch { case _: Throwable => () } // advisory: a failed warm-up must never fail a query
-  }
-
-  private def warm(spark: SparkSession): Unit = {
+  private def warm(spark: SparkSession, base: String): Unit = {
     import spark.implicits._
-    val base = "/root/repo/target/tmp/stream_warmup_" +
-      spark.sparkContext.applicationId.replaceAll("[^\\w-]", "_")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
     val src = spark.range(0, 200)
       .selectExpr("id % 10 AS user_id", "id AS cents",
         "timestamp_millis(1700000000000 + id * 1000) AS ts")

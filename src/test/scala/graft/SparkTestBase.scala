@@ -43,11 +43,10 @@ trait SparkTestBase extends AnyFunSuite {
 }
 
 object SparkTestBase {
-  /** `target/tmp` under the test JVM's working directory — sbt forks
-    * the test JVM in the checkout it runs from, so two checkouts'
-    * concurrent runs never create or delete each other's tables. */
-  val scratchRoot: String =
-    new java.io.File(sys.props("user.dir"), "target/tmp").getAbsolutePath
+  /** The engine's scratch root ([[graft.ops.SessionScopedCache.scratchRoot]]):
+    * `target/tmp` under the test JVM's working directory — sbt forks
+    * the test JVM in the checkout it runs from. */
+  val scratchRoot: String = graft.ops.SessionScopedCache.scratchRoot
 
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
