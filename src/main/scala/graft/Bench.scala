@@ -1,6 +1,20 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
+/** The engine's one bench runner.
+  *
+  *   runMain graft.Bench              # every query, sorted by name
+  *   runMain graft.Bench q1 q2 ...    # only these, in the order given
+  *
+  * Both forms run the same untimed warm-ups, per-query GC, layout
+  * billing, resource counters and interleaved calibration probes
+  * (`SPARK_GRAFT_CALIB_EVERY`, default 32; 1 probes after every
+  * query), so a named run's readings compare with a full run's. Every
+  * run writes `target/bench.json` and `target/bench_metrics.json`
+  * under the working directory; only a full run also writes the
+  * committed `tools/bench_full.json`, its archive copy and, with
+  * `SPARK_GRAFT_WRITE_REF=1`, `tools/bench_reference.txt` — a named
+  * run's partial map would drop every other pin. */
 object Bench {
 
   /** Fixed CPU-bound calibration probe: 128M xxhash64 folds across all
@@ -65,7 +79,9 @@ object Bench {
   /** Committed per-query reference map (`tools/bench_reference.txt`,
     * lines `name seconds`, probe under `__calib__`). Written by a
     * clean run with SPARK_GRAFT_WRITE_REF=1. */
-  def loadReference(path: String = "/root/repo/tools/bench_reference.txt"): Map[String, Double] = {
+  val ReferencePath = "tools/bench_reference.txt"
+
+  def loadReference(path: String = ReferencePath): Map[String, Double] = {
     val p = java.nio.file.Paths.get(path)
     if (!java.nio.file.Files.exists(p)) Map.empty
     else scala.jdk.CollectionConverters.ListHasAsScala(
@@ -105,27 +121,17 @@ object Bench {
       (shuffleRead.get, shuffleWrite.get, memSpill.get, diskSpill.get)
   }
 
-  /** `SPARK_GRAFT_CPUS` (default 32) as a positive integer — it sizes
-    * `local[n]` and the shuffle width, and lands unquoted in the bench
-    * JSON, so any other value (say `*`) fails here rather than as an
-    * unparseable result line. */
-  def cpuCount(raw: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): Int =
-    scala.util.Try(raw.trim.toInt).toOption.filter(_ > 0).getOrElse(
-      throw new IllegalArgumentException(
-        s"SPARK_GRAFT_CPUS must be a positive integer, got '$raw'"))
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = cpuCount()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toLong)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val named = args.distinct.toSeq
+    val full = named.isEmpty
+    val unknown = named.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val writeRef = sys.env.get("SPARK_GRAFT_WRITE_REF").contains("1")
+    require(full || !writeRef,
+      "SPARK_GRAFT_WRITE_REF=1 needs a full run: a named run's map would drop every other pin")
+    val cpus = GraftSession.cpuCount()
+    val spark = GraftSession.local(cpus)
     // Warm global JVM/codegen/parquet-footer paths once, untimed: the
     // first heavy query otherwise absorbs process-wide JIT + FS warmup
     // (observed 12 s on a 0.4 s query when it happened to run first).
@@ -176,8 +182,10 @@ object Bench {
     calibWindows += 0 -> calibFirst
     // deterministic (sorted) order: stable round-over-round per-query
     // comparison, and cache-sharing families (dedup_*) run adjacently
-    val sortedQueries = SparkEntry.queries.toSeq.sortBy(_._1)
-    val results = sortedQueries.zipWithIndex.map { case ((name, fn), qi) =>
+    val runQueries =
+      if (full) SparkEntry.queries.toSeq.sortBy(_._1)
+      else named.map(n => n -> SparkEntry.queries(n))
+    val results = runQueries.zipWithIndex.map { case ((name, fn), qi) =>
       // Collect the PREVIOUS query's garbage outside the timing window:
       // heavy queries (streaming state stores, graph iterations) leave
       // multi-GB young-gen debt, and without this the full-GC pause
@@ -200,12 +208,12 @@ object Bench {
       // the query's reading is the steady-state cost of the READ plan
       val layout = ops.Scale.layoutNanos.get() - l0
       // interior probe OUTSIDE any timing window, billed to nothing
-      if ((qi + 1) % calibEvery == 0 && (qi + 1) < sortedQueries.size)
+      if ((qi + 1) % calibEvery == 0 && (qi + 1) < runQueries.size)
         calibWindows += (qi + 1) -> calibrate(spark)
       name -> (elapsed - layout).max(0L) / 1e9
     }
     val calibLast = calibrate(spark)
-    calibWindows += sortedQueries.size -> calibLast
+    calibWindows += runQueries.size -> calibLast
     // run-average contention = mean over ALL probes (the endpoint mean
     // under-weights a mid-run wave the interior probes now see)
     val calib = calibWindows.map(_._2).sum / calibWindows.size
@@ -217,7 +225,7 @@ object Bench {
       val after = winSeq.find(_._1 > i).map(_._2).getOrElse(before)
       (before + after) / 2
     }
-    val nameCalib: Map[String, Double] = sortedQueries.zipWithIndex
+    val nameCalib: Map[String, Double] = runQueries.zipWithIndex
       .map { case ((n, _), i) => n -> localCalib(i) }.toMap
     val layoutSec = ops.Scale.layoutNanos.get() / 1e9
     val reference = loadReference()
@@ -246,7 +254,7 @@ object Bench {
           else (ratios(ratios.size / 2 - 1) + ratios(ratios.size / 2)) / 2
         val refSha = scala.util.Try(java.security.MessageDigest.getInstance("SHA-256")
           .digest(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get("/root/repo/tools/bench_reference.txt")))
+            java.nio.file.Paths.get(ReferencePath)))
           .map("%02x".format(_)).mkString.take(16)).getOrElse("absent")
         def r3(x: Double) = math.rint(x * 1000) / 1000
         s""""vs_ref":{"total_ratio":${r3(totalRatio)},""" +
@@ -275,25 +283,30 @@ object Bench {
       vsRef.fold("")(v => v + ",") + s""""regressions":$regs"""
     val json = s"""{"metric":"total","value":$total,"unit":"sec","count":${results.size},$extras,"queries":$qs,"sf":"$sfDir"}"""
     println(json)
+    // paths resolve under the working directory (the checkout root
+    // under sbt), like SessionScopedCache.scratchRoot
+    def write(path: String, text: String): Unit = {
+      val p = java.nio.file.Paths.get(path)
+      java.nio.file.Files.createDirectories(p.toAbsolutePath.getParent)
+      java.nio.file.Files.write(p, text.getBytes)
+    }
     // land the FULL per-query line in files: target/ for local loops,
-    // tools/ so the map is COMMITTED each round (the driver's tail
-    // capture is 2000 chars — the ~10 KB full line physically cannot
-    // ride it; round 9's BENCH artifact came back `parsed: null`)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("/root/repo/target/bench.json"), json.getBytes)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("/root/repo/tools/bench_full.json"), json.getBytes)
-    // tools/bench_full.json is overwritten IN PLACE each run, so a
-    // round's BENCH artifact (which carries only the compact tail +
-    // the map's sha16) would stop being matchable to its full map one
-    // run later. Archive a content-addressed copy keyed by that same
-    // sha16 — each round's artifact stands alone against its archive.
+    // tools/ so a full run's map is COMMITTED each round (the driver's
+    // tail capture is 2000 chars — the ~10 KB full line physically
+    // cannot ride it; round 9's BENCH artifact came back `parsed: null`)
+    val fullMap = if (full) "tools/bench_full.json" else "target/bench.json"
+    write("target/bench.json", json)
     val mapSha = java.security.MessageDigest.getInstance("SHA-256")
       .digest(json.getBytes).map("%02x".format(_)).mkString.take(16)
-    val archive = java.nio.file.Paths.get("/root/repo/tools/bench_archive")
-    java.nio.file.Files.createDirectories(archive)
-    java.nio.file.Files.write(
-      archive.resolve(s"bench_full_$mapSha.json"), json.getBytes)
+    if (full) {
+      write(fullMap, json)
+      // tools/bench_full.json is overwritten IN PLACE each run, so a
+      // round's BENCH artifact (which carries only the compact tail +
+      // the map's sha16) would stop being matchable to its full map one
+      // run later. Archive a content-addressed copy keyed by that same
+      // sha16 — each round's artifact stands alone against its archive.
+      write(s"tools/bench_archive/bench_full_$mapSha.json", json)
+    }
     // per-query resource map (MB, 2dp): shuffle volumes + spill — the
     // scale-evidence sidecar BASELINE.md's scaling tables read
     val mb = 1024.0 * 1024.0
@@ -303,17 +316,11 @@ object Bench {
         s"\"shuffle_write_mb\":${r2(sw / mb)}," +
         s"\"spill_mem_mb\":${r2(ms / mb)},\"spill_disk_mb\":${r2(ds / mb)}}"
     }.mkString("{", ",", "}")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("/root/repo/target/bench_metrics.json"),
-      resJson.getBytes)
+    write("target/bench_metrics.json", resJson)
     // refresh the committed reference map on request (clean-host runs)
-    if (sys.env.get("SPARK_GRAFT_WRITE_REF").contains("1")) {
-      val lines = (s"__calib__ $calib" +:
-        results.map { case (k, v) => s"$k $v" }).mkString("\n") + "\n"
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("/root/repo/tools/bench_reference.txt"),
-        lines.getBytes)
-    }
+    if (writeRef)
+      write(ReferencePath, (s"__calib__ $calib" +:
+        results.map { case (k, v) => s"$k $v" }).mkString("\n") + "\n")
     // The very LAST stdout line must survive the driver's 2000-char
     // tail capture intact or the round's BENCH artifact is unusable
     // (round 9 printed the full ~10 KB map last → `parsed: null`,
@@ -321,11 +328,10 @@ object Bench {
     // COMPACT digest-bearing summary: totals, calibration, the FULL
     // regression-flag map (the actionable part), the sha256 of the
     // full map, and the heaviest queries that fit a fixed budget.
-    // The full map is NOT truncated data — it is committed verbatim
-    // as tools/bench_full.json (sha256 below proves identity) and
-    // printed in full above; parsers must treat `queries` here as
-    // the top-N subset marked by `queries_truncated`.
-    val sha = mapSha
+    // The full map is NOT truncated data — it is written verbatim to
+    // `full_map` (sha256 below proves identity) and printed in full
+    // above; parsers must treat `queries` here as the top-N subset
+    // marked by `queries_truncated`.
     def r3(x: Double) = math.rint(x * 1000) / 1000
     val heavy = results.sortBy(-_._2).take(10)
       .map { case (k, v) => s"\"" + k + "\":" + r3(v) }
@@ -338,7 +344,7 @@ object Bench {
       s""""layout_sec":${r3(layoutSec)},""" +
       vsRef.fold("")(v => v + ",") +
       s""""n_flagged":${regressions.size},"regressions":$regsCapped"""
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","count":${results.size},$extrasCompact,"queries":$heavy,"queries_truncated":true,"full_map":"tools/bench_full.json","full_map_sha256_16":"$sha","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","count":${results.size},$extrasCompact,"queries":$heavy,"queries_truncated":true,"full_map":"$fullMap","full_map_sha256_16":"$mapSha","sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan capture for the optimization rounds: write
   * `.explain("formatted")` of the named queries (or every declared
-  * query with no args) to `<outDir>/<name>.txt`, under the same confs
-  * as [[Bench]] so the captured plan is the plan the bench runs.
+  * query with no args) to `<outDir>/<name>.txt`, in the
+  * [[GraftSession]] the bench runs in, so the captured plan is the
+  * plan the bench runs.
   *
   *   runMain graft.ExplainDump <outDir> [query ...]
   *
@@ -22,16 +21,7 @@ object ExplainDump {
     val outDir = java.nio.file.Paths.get(args.head)
     java.nio.file.Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpuCount())
     val names =
       if (args.length > 1) args.tail.toSeq
       else SparkEntry.queries.keys.toSeq.sorted

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-factor multiplier for the driver's test tables: builds an
@@ -53,22 +53,15 @@ import org.apache.spark.sql.functions._
   *     noise.
   *
   * Usage: runMain graft.ScaleUp [srcDir] [dstDir] [copies]
+  * (`dstDir` defaults to `target/sf1` under the working directory)
   */
 object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val dst = args.lift(1).getOrElse("/root/repo/target/sf1")
+    val dst = args.lift(1).getOrElse("target/sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpuCount())
 
     def read(name: String) = spark.read.parquet(s"$src/$name.parquet")
     // driver layout: ONE parquet FILE per table named <name>.parquet —

@@ -134,10 +134,10 @@ object DedupQueries {
       val stage = graft.pipeline.TxLog(spark, stagingR)
       stage.overwrite(docs.filter(col("doc_id") % 10 === 0)) // v0: batch 1
       stage.append(docs.filter(col("doc_id") % 10 === 5))    // v1: batch 2
-      val q = spark.readStream.format("graft-txlog").option("path", stagingR)
+      graft.streaming.StreamRun.toEnd(spark, spark.readStream
+        .format("graft-txlog").option("path", stagingR)
         .option("maxVersionsPerTrigger", "1").load()
         .writeStream.option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
           val b = batch.select(col("doc_id"), col("text"), col("lang"))
             .localCheckpoint(true)
@@ -165,8 +165,7 @@ object DedupQueries {
           idx.append(shingleEx(clean), txn = Some(("dedup_sing_idx", id)))
           quar.append(best, txn = Some(("dedup_sing_quar", id)))
           ()
-        }.start()
-      try q.awaitTermination() finally q.stop()
+        })
       corpus.snapshot().select(col("doc_id"), lit("kept").as("status"),
           lit(null).cast("long").as("match_id"),
           lit(null).cast("double").as("jaccard"))

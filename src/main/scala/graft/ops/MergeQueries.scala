@@ -1106,15 +1106,14 @@ object MergeQueries {
       t.append(base.filter(col("o_orderkey") % 3 === 2))             // v1
       val sink = graft.pipeline.TxLog(spark, sinkRoot)
       def drain(): Unit = {
-        val q = spark.readStream.format("graft-txlog").option("path", root)
+        graft.streaming.StreamRun.toEnd(spark, spark.readStream
+          .format("graft-txlog").option("path", root)
           .load()
           .writeStream.option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
             sink.append(batch, txn = Some(("txlog_stream_source", id)))
             ()
-          }.start()
-        try q.awaitTermination() finally q.stop()
+          })
       }
       drain()                                  // snapshot batch through v1
       t.append(base.filter(col("o_orderkey") % 6 === 0))             // v2
@@ -1153,13 +1152,11 @@ object MergeQueries {
       t.overwrite(base.filter(col("o_orderkey") % 3 === 1))          // v0
       t.append(base.filter(col("o_orderkey") % 3 === 2))             // v1
       def drain(): Unit = {
-        val q = spark.readStream.format("graft-txlog").option("path", root)
+        graft.streaming.StreamRun.toEnd(spark, spark.readStream
+          .format("graft-txlog").option("path", root)
           .load()
           .writeStream.format("graft-txlog").option("path", sinkRoot)
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
+          .option("checkpointLocation", ckpt))
       }
       drain()                                  // snapshot batch through v1
       t.append(base.filter(col("o_orderkey") % 6 === 0))             // v2
@@ -1185,16 +1182,15 @@ object MergeQueries {
       Seq(ckpt, out).foreach(d =>
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
       val root = cdfScenarioRoot(spark, dir)
-      val q = spark.readStream.format("graft-txlog").option("path", root)
+      graft.streaming.StreamRun.toEnd(spark, spark.readStream
+        .format("graft-txlog").option("path", root)
         .option("readChangeFeed", "true").option("keys", "o_orderkey")
         .load()
         .writeStream.option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
           batch.write.mode("append").parquet(out)
           ()
-        }.start()
-      try q.awaitTermination() finally q.stop()
+        })
       spark.read.parquet(out)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice").cast("double").as("o_totalprice"),
@@ -1259,18 +1255,17 @@ object MergeQueries {
       val mv = new java.util.concurrent.atomic.AtomicReference(
         graft.pipeline.IncrementalMV.recompute(t.snapshot(0), g, s)
           .localCheckpoint())
-      val q = spark.readStream.format("graft-txlog").option("path", t.root)
+      graft.streaming.StreamRun.toEnd(spark, spark.readStream
+        .format("graft-txlog").option("path", t.root)
         .option("readChangeFeed", "true").option("keys", "o_orderkey")
         .option("maxVersionsPerTrigger", "1")
         .load()
         .writeStream.option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
           mv.set(graft.pipeline.IncrementalMV.applyDelta(mv.get, batch, g, s)
             .localCheckpoint())
           ()
-        }.start()
-      try q.awaitTermination() finally q.stop()
+        })
       mv.get.select(col("o_orderstatus"),
         col("o_totalprice").cast("double").as("o_totalprice"), col("cnt"))
     }, oracle = Some("""

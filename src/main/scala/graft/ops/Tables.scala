@@ -21,8 +21,8 @@ object Tables {
     * UTC-micros TimestampType column DuckDB and Arrow see, so oracle
     * comparisons line up regardless of the file's vintage.
     *
-    * `nanosAsLong` is SESSION setup (set by the engine's entry-point
-    * builders — `Verify`/`Bench`/`BenchOne`/the test base), NOT
+    * `nanosAsLong` is SESSION setup (set by [[graft.GraftSession]],
+    * which every main and the test base build through), NOT
     * mutated here: a conf write inside a query body is a global side
     * effect on shared sessions (r6 verdict item 6). On a nanos-vintage
     * file under a session missing the conf, Spark's own

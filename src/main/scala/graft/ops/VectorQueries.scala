@@ -833,7 +833,8 @@ object VectorQueries {
         ivfAssign(spark, base, cents).select(col("vec_id"), col("cent_id"))
           .withColumn("cent_bucket", pmod(col("cent_id"), lit(8L))),
         "cent_bucket")
-      val q = spark.readStream.format("graft-txlog").option("path", root)
+      graft.streaming.StreamRun.toEnd(spark, spark.readStream
+        .format("graft-txlog").option("path", root)
         .option("readChangeFeed", "true").option("keys", "vec_id")
         // startingVersion=1 (inclusive, Delta semantics): v0 is the
         // offline build's input, so the stream starts at the first
@@ -843,7 +844,6 @@ object VectorQueries {
         .option("startingVersion", "1")
         .option("maxVersionsPerTrigger", "1").load()
         .writeStream.option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
           val rel = batch
             .filter(col("_change_type").isin("insert", "delete"))
@@ -857,8 +857,7 @@ object VectorQueries {
           index.applyChangesPartitioned(ops, Seq("vec_id"), "cent_bucket",
             txn = Some(("txlog_sivf", id)))
           ()
-        }.start()
-      try q.awaitTermination() finally q.stop()
+        })
       index.snapshot().groupBy(col("cent_id"))
         .agg(count(lit(1)).as("n_vectors"), sum(col("vec_id")).as("vec_id_sum"))
     }, oracle = Some(s"""

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types._
   * state store; keys are (window, event_type) so state cardinality is
   * #types × #open-windows regardless of input rate. For local
   * verification the memory sink in complete mode is driven to the end
-  * of the (finite) input with `processAllAvailable()` — the batch
-  * window() aggregation over the same files is the oracle.
+  * of the (finite) input by [[StreamRun]] — the batch window()
+  * aggregation over the same files is the oracle.
   */
 object EventStreams {
 
@@ -94,16 +94,8 @@ object EventStreams {
         sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
       .select(col("window.start").as("hour_start"), col("event_type"),
         col("n_events"), col("total_value"))
-    SessionizeStream.withStatePartitions(spark,
-        SessionizeStream.statePartitionsFor(spark, stagePath)) {
-      val q = agg.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    MemTable.drain(spark, queryName).filter(col("event_type") =!= "sentinel")
+    StreamRun.drain(spark, agg, "append", queryName, stagePath)
+      .filter(col("event_type") =!= "sentinel")
   }
 
   /** CHAINED stateful operators (Spark ≥ 3.4 multi-stateful support):
@@ -135,16 +127,8 @@ object EventStreams {
         sum(col("v_hour")).cast("double").as("total_value"))
       .select(col("window.start").as("day_start"), col("event_type"),
         col("n_events"), col("total_value"))
-    SessionizeStream.withStatePartitions(spark,
-        SessionizeStream.statePartitionsFor(spark, stagePath)) {
-      val q = daily.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    MemTable.drain(spark, queryName).filter(col("event_type") =!= "sentinel")
+    StreamRun.drain(spark, daily, "append", queryName, stagePath)
+      .filter(col("event_type") =!= "sentinel")
   }
 
   /** Streaming → gold MERGE: the production stream-to-star pattern.
@@ -190,25 +174,20 @@ object EventStreams {
       .select(col("window.start").as("hour_start"), col("event_type"),
         col("n_events"), col("total_value"),
         to_date(col("window.start")).as("event_date"))
-    SessionizeStream.withStatePartitions(spark,
-        SessionizeStream.statePartitionsFor(spark, stagePath)) {
-      val q = agg.writeStream
-        .outputMode("update")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val b = batch.filter(col("event_type") =!= "sentinel")
-          if (!b.isEmpty) {
-            if (new java.io.File(goldPath).exists())
-              // strict=false: update-mode groupBy output is unique per
-              // (hour_start, event_type) within a batch by construction,
-              // so the Delta-parity duplicate probe would only burn a job.
-              graft.pipeline.Upsert.mergeIntoPartitionedPath(spark, goldPath, b,
-                Seq("hour_start", "event_type"), "event_date", strict = false)
-            else b.write.mode("overwrite").partitionBy("event_date").parquet(goldPath)
-          }
+    StreamRun.toEnd(spark, agg.writeStream
+      .outputMode("update")
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val b = batch.filter(col("event_type") =!= "sentinel")
+        if (!b.isEmpty) {
+          if (new java.io.File(goldPath).exists())
+            // strict=false: update-mode groupBy output is unique per
+            // (hour_start, event_type) within a batch by construction,
+            // so the Delta-parity duplicate probe would only burn a job.
+            graft.pipeline.Upsert.mergeIntoPartitionedPath(spark, goldPath, b,
+              Seq("hour_start", "event_type"), "event_date", strict = false)
+          else b.write.mode("overwrite").partitionBy("event_date").parquet(goldPath)
         }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
+      }, Some(stagePath))
     spark.read.parquet(goldPath).drop("event_date")
   }
 
@@ -243,13 +222,7 @@ object EventStreams {
       col("ts").as("v_ts"), col("event_id").as("view_id"))
     val joined = p.join(v, expr(
       "p_user = v_user AND v_ts BETWEEN p_ts - INTERVAL 30 MINUTES AND p_ts"))
-    SessionizeStream.withStatePartitions(spark,
-        SessionizeStream.statePartitionsFor(spark, stagePath)) {
-      val q = joined.writeStream
-        .outputMode("append").format("memory").queryName(queryName).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    MemTable.drain(spark, queryName)
+    StreamRun.drain(spark, joined, "append", queryName, stagePath)
       .filter(col("p_user") >= 0)
       .select(col("purchase_id"), col("view_id"))
   }
@@ -287,16 +260,11 @@ object EventStreams {
       .select(col("window.start").as("hour_start"), col("event_type"),
         col("n_events"), col("total_value"),
         to_date(col("window.start")).as("event_date"))
-    SessionizeStream.withStatePartitions(spark,
-        SessionizeStream.statePartitionsFor(spark, stagePath)) {
-      val q = agg.writeStream
-        .outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          commitHourlyBatch(log, batch, batchId)
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    StreamRun.toEnd(spark, agg.writeStream
+      .outputMode("update")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        commitHourlyBatch(log, batch, batchId)
+      }, Some(stagePath))
     log.snapshot().drop("event_date")
   }
 
@@ -341,13 +309,8 @@ object EventStreams {
       .withColumn("ts", timestamp_micros(col("ts")))
       .select(col("user_id"), col("event_type"))
       .dropDuplicates("user_id", "event_type")
-    SessionizeStream.withStatePartitions(spark,
-        SessionizeStream.statePartitionsFor(spark, stagePath)) {
-      val q = stream.writeStream
-        .outputMode("append").format("memory").queryName(queryName).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    MemTable.drain(spark, queryName).filter(col("user_id") >= 0)
+    StreamRun.drain(spark, stream, "append", queryName, stagePath)
+      .filter(col("user_id") >= 0)
   }
 
   /** Streaming dedup with BOUNDED state: `dropDuplicatesWithinWatermark`
@@ -373,13 +336,8 @@ object EventStreams {
       .select(col("ts"), col("user_id"), col("event_type"), col("hour_start"))
       .dropDuplicatesWithinWatermark("user_id", "event_type", "hour_start")
       .select(col("user_id"), col("event_type"), col("hour_start"))
-    SessionizeStream.withStatePartitions(spark,
-        SessionizeStream.statePartitionsFor(spark, stagePath)) {
-      val q = stream.writeStream
-        .outputMode("append").format("memory").queryName(queryName).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    MemTable.drain(spark, queryName).filter(col("user_id") >= 0)
+    StreamRun.drain(spark, stream, "append", queryName, stagePath)
+      .filter(col("user_id") >= 0)
   }
 
   /** STREAM-STATIC enrichment — the canonical "join the firehose to a
@@ -404,16 +362,7 @@ object EventStreams {
       .agg(
         count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
-    SessionizeStream.withStatePartitions(spark,
-        SessionizeStream.statePartitionsFor(spark, s"$dir/events.parquet")) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    MemTable.drain(spark, queryName)
+    StreamRun.drain(spark, agg, "complete", queryName, s"$dir/events.parquet")
   }
 
   /** Per-user sessions via Spark's BUILT-IN `session_window` — the
@@ -445,13 +394,8 @@ object EventStreams {
         col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
         col("n_events"), col("session_value"))
-    SessionizeStream.withStatePartitions(spark,
-        SessionizeStream.statePartitionsFor(spark, stagePath)) {
-      val q = agg.writeStream
-        .outputMode("append").format("memory").queryName(queryName).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    MemTable.drain(spark, queryName).filter(col("user_id") >= 0)
+    StreamRun.drain(spark, agg, "append", queryName, stagePath)
+      .filter(col("user_id") >= 0)
   }
 
   /** Stream-stream LEFT OUTER interval join — the semantic the inner
@@ -480,13 +424,7 @@ object EventStreams {
     val joined = p.join(v, expr(
       "p_user = v_user AND v_ts BETWEEN p_ts - INTERVAL 30 MINUTES AND p_ts"),
       "leftOuter")
-    SessionizeStream.withStatePartitions(spark,
-        SessionizeStream.statePartitionsFor(spark, stagePath)) {
-      val q = joined.writeStream
-        .outputMode("append").format("memory").queryName(queryName).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    MemTable.drain(spark, queryName)
+    StreamRun.drain(spark, joined, "append", queryName, stagePath)
       .filter(col("p_user") >= 0)
       .select(col("purchase_id"), col("view_id"))
   }
@@ -516,13 +454,7 @@ object EventStreams {
     val joined = p.join(v, expr(
       "p_user = v_user AND v_ts BETWEEN p_ts - INTERVAL 30 MINUTES AND p_ts"),
       "fullOuter")
-    SessionizeStream.withStatePartitions(spark,
-        SessionizeStream.statePartitionsFor(spark, stagePath)) {
-      val q = joined.writeStream
-        .outputMode("append").format("memory").queryName(queryName).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    MemTable.drain(spark, queryName)
+    StreamRun.drain(spark, joined, "append", queryName, stagePath)
       .filter(coalesce(col("p_user"), col("v_user")) >= 0)
       .select(col("purchase_id"), col("view_id"))
   }
@@ -553,18 +485,13 @@ object EventStreams {
       .parquet(stagePath)
       .filter(col("event_type") =!= "sentinel")
       .select(col("event_id"), col("event_type"), col("value"))
-    SessionizeStream.withStatePartitions(spark,
-        SessionizeStream.statePartitionsFor(spark, stagePath)) {
-      val q = stream.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.pipeline.Expectations.appendWithQuarantine(
-            main, quar, batch, rules, txn = Some(("graft_quar_ingest", batchId)))
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    StreamRun.toEnd(spark, stream.writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        graft.pipeline.Expectations.appendWithQuarantine(
+          main, quar, batch, rules, txn = Some(("graft_quar_ingest", batchId)))
+        ()
+      }, Some(stagePath))
     val tagged = main.snapshot().select(col("event_type"), lit("main").as("sink"))
       .unionByName(quar.snapshot().select(col("event_type"), lit("quarantine").as("sink")))
     tagged.groupBy(col("sink"), col("event_type"))
@@ -584,16 +511,7 @@ object EventStreams {
         sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
       .select(col("window.start").as("hour_start"), col("event_type"),
         col("n_events"), col("total_value"))
-    SessionizeStream.withStatePartitions(spark,
-        SessionizeStream.statePartitionsFor(spark, s"$dir/events.parquet")) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    MemTable.drain(spark, queryName)
+    StreamRun.drain(spark, agg, "complete", queryName, s"$dir/events.parquet")
   }
 
   /** UNION of two INDEPENDENT streaming sources feeding one stateful
@@ -624,15 +542,6 @@ object EventStreams {
         sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
       .select(col("window.start").as("hour_start"), col("event_type"),
         col("n_events"), col("total_value"))
-    SessionizeStream.withStatePartitions(spark,
-        SessionizeStream.statePartitionsFor(spark, s"$dir/events.parquet")) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    MemTable.drain(spark, queryName)
+    StreamRun.drain(spark, agg, "complete", queryName, s"$dir/events.parquet")
   }
 }

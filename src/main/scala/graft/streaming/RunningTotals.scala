@@ -69,35 +69,21 @@ object RunningTotals {
       // changelog checkpointing uploads per-batch DELTAS instead of a
       // full RocksDB snapshot per commit — the production setting for
       // large state (restart-equivalence proven in
-      // TransformWithStateSpec's changelog variant)
-      val confKey = "spark.sql.streaming.stateStore.providerClass"
-      val clKey =
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-      val prev = spark.conf.getOption(confKey)
-      val prevCl = spark.conf.getOption(clKey)
-      spark.conf.set(confKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark.conf.set(clKey, "true")
-      try SessionizeStream.withStatePartitions(spark,
-          SessionizeStream.statePartitionsFor(spark, stagePath)) {
+      // TransformWithStateSpec's changelog variant). The memory table
+      // is NOT drained: the audit and every later perUser call of the
+      // session read it.
+      graft.ops.Q.withConf(spark,
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true") {
         val out = stream.groupByKey(_._1)
           .transformWithState(new RunningTotalsProcessor,
             TimeMode.None(), OutputMode.Update())
-        // Trigger.AvailableNow — the production drain mode: process
-        // everything currently available as rate-limited microbatches,
-        // then terminate on its own (vs processAllAvailable, a test
-        // hook; vs Trigger.Once, one giant unbounded batch)
-        val q = out.toDF().writeStream
+        StreamRun.toEnd(spark, out.toDF().writeStream
           .outputMode("update")
           .format("memory")
           .queryName(table)
-          .option("checkpointLocation", cp)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-      } finally {
-        prev.fold(spark.conf.unset(confKey))(spark.conf.set(confKey, _))
-        prevCl.fold(spark.conf.unset(clKey))(spark.conf.set(clKey, _))
+          .option("checkpointLocation", cp), Some(stagePath))
       }
       (table, cp)
     }

@@ -117,20 +117,13 @@ object SessionTimers {
         col("event_id"), round(col("value") * 100).cast("long").as("cents"))
       .as[SessionizeStream.Ev]
     // transformWithState requires the RocksDB state store provider
-    val confKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(confKey)
-    spark.conf.set(confKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try SessionizeStream.withStatePartitions(spark,
-        SessionizeStream.statePartitionsFor(spark, stagePath)) {
+    graft.ops.Q.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val out = stream.groupByKey(_.user_id)
         .transformWithState(new SessionTimeoutProcessor,
           TimeMode.EventTime(), OutputMode.Append())
-      val q = out.toDF().writeStream
-        .outputMode("append").format("memory").queryName(queryName).start()
-      try q.processAllAvailable() finally q.stop()
-    } finally prev.fold(spark.conf.unset(confKey))(spark.conf.set(confKey, _))
-    MemTable.drain(spark, queryName)
+      StreamRun.drain(spark, out.toDF(), "append", queryName, stagePath)
+    }
       .filter(col("user_id") >= 0)
       .withColumn("session_id",
         row_number().over(Window.partitionBy(col("user_id"))

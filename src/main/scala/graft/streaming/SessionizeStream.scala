@@ -66,54 +66,6 @@ object SessionizeStream {
     closed.result().iterator
   }
 
-  /** Run `f` with the session's shuffle partitions temporarily set to
-    * `n`: a streaming query pins its state-store partition count from
-    * the conf at first start, and for these finite micro-demos 32
-    * state stores per microbatch are pure commit overhead. At
-    * production rates you size this UP to the state volume instead. */
-  private[graft] def withStatePartitions[A](spark: SparkSession, n: Int)(f: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try f finally spark.conf.set(key, prev)
-  }
-
-  /** State-store partition count AUTOSIZED from the source volume
-    * (guide §2: derive partitioning from input size, never a constant
-    * tuned for one deployment). A streaming query pins its state
-    * partition count from `spark.sql.shuffle.partitions` at FIRST
-    * start, and every microbatch then pays one state-store commit per
-    * partition per stateful operator (stream-stream joins keep FOUR
-    * stores per partition), whatever the data volume — so the count
-    * must track the volume: for these finite demo replays (a few MB of
-    * staged events across 4–6 microbatches) 8 stores per batch were
-    * pure commit overhead, while a production-rate stream needs the
-    * session's full parallelism and beyond.
-    *
-    * Sizing rule: one state partition per
-    * `graft.streaming.statePartitionBytes` (conf, default 64 MiB —
-    * the guide §2.2 advisory-partition scale) of source bytes, clamped
-    * to [2, session shuffle partitions]. The floor of 2 keeps every
-    * demo exercising genuinely partitioned state; the ceiling is the
-    * session knob a cluster deployment already sizes to its cores.
-    * Partition count only shards keys across stores — it is invisible
-    * in any query's RESULT (the memory sink drains all partitions and
-    * every consumer aggregates or sorts by key), which is what makes
-    * this a pure §2 overhead cut. */
-  private[graft] def statePartitionsFor(spark: SparkSession, srcPath: String): Int = {
-    val f = new java.io.File(srcPath)
-    val bytes =
-      if (f.isDirectory)
-        Option(f.listFiles()).fold(0L)(
-          _.filter(x => x.isFile && !x.getName.startsWith(".")).map(_.length).sum)
-      else f.length()
-    val per = spark.conf.getOption("graft.streaming.statePartitionBytes")
-      .flatMap(s => scala.util.Try(s.toLong).toOption).filter(_ > 0)
-      .getOrElse(64L << 20)
-    val want = math.ceil(bytes.toDouble / per).toInt
-    math.max(2, math.min(spark.sessionState.conf.numShufflePartitions, want))
-  }
-
   /** Stage the finite events file plus three far-future sentinel files
     * (flat siblings — the file-stream source does not list nested
     * dirs; staggered mod-times fix the processing order). The sentinel
@@ -213,13 +165,7 @@ object SessionizeStream {
       .flatMapGroupsWithState[SessState, SessOut](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(fn)
 
-    withStatePartitions(spark, statePartitionsFor(spark, stagePath)) {
-      val q = sessions.toDF().writeStream
-        .outputMode("append").format("memory").queryName(queryName).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-
-    MemTable.drain(spark, queryName)
+    StreamRun.drain(spark, sessions.toDF(), "append", queryName, stagePath)
       .filter(col("user_id") >= 0)
       .withColumn("session_id",
         row_number().over(Window.partitionBy(col("user_id")).orderBy(col("start_us")))

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 /** One-time-per-session streaming warm-up: a tiny synthetic replay
   * through the SAME machinery the streaming queries exercise — the
@@ -15,8 +15,8 @@ import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
   * and lands on whichever streaming query happens to run FIRST — the
   * round-14 driver bench billed ~+2.7 s of it to
   * `events_state_store_audit` two rounds running, producing flags
-  * that needed hand adjudication. Bench and BenchOne invoke this in
-  * their UNTIMED warm-up section, so every streaming entry measures
+  * that needed hand adjudication. Bench invokes this in its UNTIMED
+  * warm-up section, so every streaming entry measures
   * its steady-state cost, the same discipline as the batch JIT
   * warm-up and the layout-billed bucketed writes. ~200 synthetic rows
   * in 2 microbatches — milliseconds of data, the cost is exactly the
@@ -46,36 +46,28 @@ object StreamWarmup {
     graft.ops.Q.withConf(spark,
       confKey -> "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       clKey -> "true") {
-      SessionizeStream.withStatePartitions(spark, 4) {
-        val q = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$base/src")
-          .select(col("user_id"), col("cents")).as[(Long, Long)]
-          .groupByKey(_._1)
-          .transformWithState(new RunningTotalsProcessor,
-            TimeMode.None(), OutputMode.Update())
-          .toDF().writeStream.outputMode("update")
-          .format("memory").queryName("graft_stream_warmup_tws")
-          .option("checkpointLocation", s"$base/cp_tws")
-          .trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination() finally q.stop()
-      }
+      StreamRun.toEnd(spark, spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(s"$base/src")
+        .select(col("user_id"), col("cents")).as[(Long, Long)]
+        .groupByKey(_._1)
+        .transformWithState(new RunningTotalsProcessor,
+          TimeMode.None(), OutputMode.Update())
+        .toDF().writeStream.outputMode("update")
+        .format("memory").queryName("graft_stream_warmup_tws")
+        .option("checkpointLocation", s"$base/cp_tws"), Some(s"$base/src"))
     }
     spark.read.format("statestore").option("stateVarName", "totals")
       .load(s"$base/cp_tws").count()
 
     // leg 2: watermark + bounded-state dedup on the default provider
     // (the dropDuplicatesWithinWatermark stack)
-    SessionizeStream.withStatePartitions(spark, 4) {
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$base/src")
-        .withWatermark("ts", "10 seconds")
-        .dropDuplicatesWithinWatermark(Seq("user_id"))
-        .writeStream.format("memory")
-        .queryName("graft_stream_warmup_dd")
-        .option("checkpointLocation", s"$base/cp_dd")
-        .trigger(Trigger.AvailableNow()).start()
-      try q.awaitTermination() finally q.stop()
-    }
+    StreamRun.toEnd(spark, spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).parquet(s"$base/src")
+      .withWatermark("ts", "10 seconds")
+      .dropDuplicatesWithinWatermark(Seq("user_id"))
+      .writeStream.format("memory")
+      .queryName("graft_stream_warmup_dd")
+      .option("checkpointLocation", s"$base/cp_dd"), Some(s"$base/src"))
     spark.sql("DROP TABLE IF EXISTS graft_stream_warmup_tws")
     spark.sql("DROP TABLE IF EXISTS graft_stream_warmup_dd")
   }

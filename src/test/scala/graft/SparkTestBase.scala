@@ -23,6 +23,12 @@ trait SparkTestBase extends AnyFunSuite {
   /** Root of every test's scratch tables (see [[SparkTestBase.scratchRoot]]). */
   def scratchRoot: String = SparkTestBase.scratchRoot
 
+  /** Managed-table dir of table `t` in this session's
+    * `spark.sql.warehouse.dir` (resolved against the working directory):
+    * a previous JVM's dirs survive DROP TABLE in a new session. */
+  def warehouseDir(t: String): java.io.File =
+    new java.io.File(new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath, t)
+
   def tmpDir(name: String): String = {
     val d = s"$scratchRoot/test_$name"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d))
@@ -48,28 +54,6 @@ object SparkTestBase {
     * the test JVM in the checkout it runs from. */
   val scratchRoot: String = graft.ops.SessionScopedCache.scratchRoot
 
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // session setup, not per-query mutation: legacy nanos-vintage
-      // events.parquet reads as raw long (see Tables.loadEvents)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the engine's own extensions: native functions, as-of planning,
-      // HOF rewrite, TxLog SQL DML — the production session shape
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // TypedImperativeAggregate heaps/sketches carry O(k) state per
-      // group: the default 128-group fallback to SORT-based
-      // aggregation re-introduces exactly the per-group sort the
-      // bounded-heap operators exist to avoid (measured 2x on
-      // sim_knn_classify at sf1 with 800 query groups)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The production session shape ([[graft.GraftSession]]) on 8 cores. */
+  lazy val session: SparkSession = graft.GraftSession.local(8)
 }

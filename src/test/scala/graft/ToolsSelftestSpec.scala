@@ -4,11 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.sys.process._
 
-/** The two measurement scripts that REWRITE or SCREEN the committed
-  * grading reference (`tools/bench_reference.txt` pins, the scaling
-  * decade tables) carry `--selftest` round-trips of synthetic
-  * captures — normal medians, aborted legs, empty intersections,
-  * calib-less files. Wiring them into `sbt test` means a parser or
+/** The bench-leg reader that REWRITES or SCREENS the committed grading
+  * reference (`tools/legs.py`: `tools/bench_reference.txt` pins, the
+  * scaling decade tables, before/after comparisons) carries a
+  * `--selftest` round-trip of synthetic legs per subcommand — normal
+  * medians, aborted legs, empty intersections, calib-less files. Wiring them into `sbt test` means a parser or
   * normalization regression in the pinning pipeline fails the build,
   * not the next round's grading (r15 verdict item 7). The car-sales
   * fixture generator's selftest rides along: the committed CSVs under
@@ -22,8 +22,8 @@ class ToolsSelftestSpec extends AnyFunSuite {
   private lazy val repoRoot: java.io.File = {
     val cwd = new java.io.File(sys.props.getOrElse("user.dir", "."))
     Iterator.iterate(cwd)(_.getParentFile).takeWhile(_ != null)
-      .find(d => new java.io.File(d, "tools/decade_median.py").isFile)
-      .getOrElse(cancel(s"repo root (tools/decade_median.py) not found above $cwd"))
+      .find(d => new java.io.File(d, "tools/legs.py").isFile)
+      .getOrElse(cancel(s"repo root (tools/legs.py) not found above $cwd"))
   }
 
   /** python3 is an environment prerequisite, not a code-under-test
@@ -42,27 +42,32 @@ class ToolsSelftestSpec extends AnyFunSuite {
     if (code != 0) cancel(s"python3 cannot import $module — the selftest needs it")
   }
 
-  private def selftest(script: String): Unit = {
+  private def selftest(script: String, args: String*): Unit = {
     val out = new StringBuilder
     val logger = ProcessLogger(l => out.append(l).append('\n'),
       l => out.append(l).append('\n'))
+    val cmd = (s"tools/$script" +: args :+ "--selftest").mkString(" ")
     val code = Process(
-      Seq(python3, new java.io.File(repoRoot, s"tools/$script").getPath,
-        "--selftest")).!(logger)
-    assert(code === 0, s"$script --selftest exited $code:\n$out")
-    assert(out.toString.contains("PASS"), s"$script --selftest output:\n$out")
+      Seq(python3, new java.io.File(repoRoot, s"tools/$script").getPath) ++ args :+
+        "--selftest").!(logger)
+    assert(code === 0, s"$cmd exited $code:\n$out")
+    assert(out.toString.contains("PASS"), s"$cmd output:\n$out")
   }
 
-  test("decade_median.py --selftest round-trips synthetic captures") {
-    selftest("decade_median.py")
+  test("legs.py decade --selftest round-trips synthetic legs") {
+    selftest("legs.py", "decade")
   }
 
-  test("optleg_compare.py --selftest round-trips local calibration and medians") {
-    selftest("optleg_compare.py")
+  test("legs.py compare --selftest round-trips local calibration and medians") {
+    selftest("legs.py", "compare")
   }
 
-  test("pin_streaming_median.py --selftest round-trips synthetic pins") {
-    selftest("pin_streaming_median.py")
+  test("legs.py pin --selftest round-trips synthetic pins") {
+    selftest("legs.py", "pin")
+  }
+
+  test("legs.py scale --selftest round-trips a paired-scale table") {
+    selftest("legs.py", "scale")
   }
 
   test("carsales_fixture.py --selftest regenerates the committed car-sales CSVs and rechecks them in DuckDB") {

@@ -44,8 +44,7 @@ class PlanSpec extends SparkTestBase {
     spark.sql("DROP TABLE IF EXISTS b_orders")
     // a previous JVM's managed-table dirs survive DROP in a new session
     Seq("b_lineitem", "b_orders").foreach(t =>
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(s"/root/repo/spark-warehouse/$t")))
+      org.apache.commons.io.FileUtils.deleteDirectory(warehouseDir(t)))
     val li = spark.read.parquet(sf("0.001") + "/lineitem.parquet")
       .select(col("l_orderkey"), col("l_quantity"))
     val o = spark.read.parquet(sf("0.001") + "/orders.parquet")

@@ -20,20 +20,20 @@ class StatePartitionsSpec extends SparkTestBase {
   }
 
   test("tiny source floors at 2 partitions (the multi-partition demo floor)") {
-    assert(SessionizeStream.statePartitionsFor(spark, fileOf(1024)) == 2)
+    assert(StreamRun.statePartitionsFor(spark, fileOf(1024)) == 2)
   }
 
   test("partition count scales with source bytes at the configured target") {
     withConf("graft.streaming.statePartitionBytes" -> "512") {
-      assert(SessionizeStream.statePartitionsFor(spark, fileOf(2048)) == 4)
-      assert(SessionizeStream.statePartitionsFor(spark, fileOf(1537)) == 4) // ceil
-      assert(SessionizeStream.statePartitionsFor(spark, fileOf(1536)) == 3)
+      assert(StreamRun.statePartitionsFor(spark, fileOf(2048)) == 4)
+      assert(StreamRun.statePartitionsFor(spark, fileOf(1537)) == 4) // ceil
+      assert(StreamRun.statePartitionsFor(spark, fileOf(1536)) == 3)
     }
   }
 
   test("ceiling is the session's shuffle partitions (the cluster-sized knob)") {
     withConf("graft.streaming.statePartitionBytes" -> "1") {
-      assert(SessionizeStream.statePartitionsFor(spark, fileOf(4096)) ==
+      assert(StreamRun.statePartitionsFor(spark, fileOf(4096)) ==
         spark.sessionState.conf.numShufflePartitions)
     }
   }
@@ -45,9 +45,18 @@ class StatePartitionsSpec extends SparkTestBase {
       new Array[Byte](1500))
     java.nio.file.Files.write(new java.io.File(d, "b.parquet").toPath,
       new Array[Byte](1500))
-    withConf("graft.streaming.statePartitionBytes" -> "1000") {
-      assert(SessionizeStream.statePartitionsFor(spark, d.getAbsolutePath) == 3)
+    // a partitioned source keeps its files one level down
+    val nested = new java.io.File(tmpDir("state_parts_nested"))
+    Seq("event_date=1", "event_date=2").foreach { p =>
+      val part = new java.io.File(nested, p)
+      part.mkdirs()
+      java.nio.file.Files.write(new java.io.File(part, "a.parquet").toPath,
+        new Array[Byte](1500))
     }
-    assert(SessionizeStream.statePartitionsFor(spark, "/nonexistent/nope") == 2)
+    withConf("graft.streaming.statePartitionBytes" -> "1000") {
+      assert(StreamRun.statePartitionsFor(spark, d.getAbsolutePath) == 3)
+      assert(StreamRun.statePartitionsFor(spark, nested.getAbsolutePath) == 3)
+    }
+    assert(StreamRun.statePartitionsFor(spark, "/nonexistent/nope") == 2)
   }
 }

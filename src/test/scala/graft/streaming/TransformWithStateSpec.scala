@@ -43,7 +43,7 @@ class TransformWithStateSpec extends SparkTestBase {
   private def withRocksDb[A](f: => A): A = {
     val prev = spark.conf.getOption(RocksKey)
     spark.conf.set(RocksKey, Rocks)
-    try SessionizeStream.withStatePartitions(spark, 2)(f)
+    try StreamRun.withStatePartitions(spark, 2)(f)
     finally prev.fold(spark.conf.unset(RocksKey))(spark.conf.set(RocksKey, _))
   }
 
