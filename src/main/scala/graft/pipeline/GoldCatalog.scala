@@ -18,10 +18,11 @@ import org.apache.hadoop.fs.Path
   * commit protocol (rename-if-absent manifests, snapshot isolation,
   * time travel, vacuum) the reference gets from Delta
   * (`gold_dim_branch.ipynb:88162-88175` writes `format('delta')`).
-  * The initial load and every SCD1 merge commit a fresh single-dir
-  * snapshot, so each version is simultaneously compacted; SQL
-  * registration points `gold.<table>` at the current snapshot's data
-  * dir and is re-pointed after each commit.
+  * The initial load commits a single-dir snapshot; each SCD1 merge
+  * rewrites only the dirs holding matched rows, adds one dir, and
+  * commits nothing when its batch is empty (a watermark-filtered
+  * replay). SQL registration points `gold.<table>` at the current
+  * snapshot and is re-pointed after each commit.
   */
 final case class GoldCatalog(spark: SparkSession, warehouse: String) {
 
@@ -58,12 +59,12 @@ final case class GoldCatalog(spark: SparkSession, warehouse: String) {
     register(db, table)
   }
 
-  /** Register `db.table` over the CURRENT snapshot. Pipeline commits
-    * are single-dir snapshots (overwrite + merge both rewrite), which
-    * register as a plain parquet LOCATION table; a MULTI-dir snapshot
-    * (someone called `append`/`mergePartitioned` on a gold table)
-    * registers as a catalog VIEW over [[TxLog.snapshotSql]] — SQL
-    * keeps resolving either way instead of silently vanishing. */
+  /** Register `db.table` over the CURRENT snapshot. A single-dir
+    * snapshot (the initial load) registers as a plain parquet LOCATION
+    * table; a MULTI-dir snapshot (after a merge that inserted rows, or
+    * an `append`) registers as a catalog VIEW over
+    * [[TxLog.snapshotSql]] — SQL keeps resolving either way instead of
+    * silently vanishing. */
   def register(db: String, table: String): Unit = {
     val log = txlog(db, table)
     val dirs = log.snapshotDataDirs()

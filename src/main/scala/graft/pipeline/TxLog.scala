@@ -19,7 +19,8 @@ import org.apache.spark.sql.types.StructType
   * Each manifest is a SNAPSHOT (the full list of live data dirs), not a
   * delta of actions — O(versions) storage for the tiny manifests buys
   * O(1) snapshot resolution and inherent compaction on overwrite-style
-  * commits (merge rewrites produce a single-dir snapshot).
+  * commits (an overwrite produces a single-dir snapshot; merges, updates
+  * and deletes rewrite only the dirs they touch and carry the rest).
   *
   * Commit protocol: write the manifest to a temp name, then RENAME to
   * `<version>.json`. Rename-if-absent is the atomic primitive (true on
@@ -1160,7 +1161,7 @@ final case class TxLog(spark: SparkSession, root: String,
     * that version's own names. Stats/bloom skipping survives (keyed by
     * the physical name); the partition column and CHECK-referenced
     * columns are refused (their machinery binds by name). A full
-    * rewrite ([[compact]]/[[merge]]/[[overwrite]]) later MATERIALIZES
+    * rewrite ([[compact]]/[[overwrite]]) later MATERIALIZES
     * the mapping — logical names become physical, the map resets. */
   def renameColumn(oldName: String, newName: String): Long = {
     require(oldName != newName, s"rename to the same name '$oldName'")
@@ -2863,9 +2864,8 @@ final case class TxLog(spark: SparkSession, root: String,
     * pruning: only the partitions present in the change batch are read,
     * folded, and rewritten; untouched partitions' manifest lines carry
     * over. DELETE-aware at the manifest level: a partition whose every
-    * row was deleted simply gets no line in the new snapshot — no dir
-    * removal dance (contrast [[Upsert.applyChangesPartitionedPath]],
-    * which must delete emptied Hive dirs). Same functional-dependence
+    * row was deleted simply gets no line in the new snapshot — no
+    * emptied Hive dir to remove. Same functional-dependence
     * PRECONDITION and optimistic transaction protocol as the merge. */
   def applyChangesPartitioned(changes: DataFrame, keys: Seq[String],
                               partCol: String, opCol: String = "op",
@@ -2988,37 +2988,26 @@ final case class TxLog(spark: SparkSession, root: String,
     }
   }
 
-  /** SCD1 MERGE commit: upsert `src` by `keys` against the current
-    * snapshot (same semantics as [[Upsert.merge]]) and commit the
-    * merged relation as a fresh single-dir snapshot — the rewrite
-    * doubles as compaction, exactly what `DeltaTable.merge` +
-    * OPTIMIZE achieve on the reference's gold tables.
-    *
-    * Optimistic TRANSACTION, not just an optimistic rename: the merge
-    * result depends on the snapshot it read, so on losing the version
-    * race the whole merge recomputes against the new snapshot (the
-    * stale merged dir is abandoned to vacuum). Committing the stale
-    * result at a later version would undo the winner's changes —
-    * Delta raises ConcurrentModification here; we re-merge, which is
-    * equivalent to retrying the transaction. */
+  /** SCD1 MERGE — the reference's `whenMatchedUpdateAll()
+    * .whenNotMatchedInsertAll()` on key equality, with [[Upsert.merge]]'s
+    * semantics ([[Upsert.mergeEvolve]]'s under `evolve`), committed by
+    * [[mergeInto]]'s `UPDATE SET *` / `INSERT *`. Checks first identical
+    * column sets (unless `evolve`) and Delta's one-source-row-per-key
+    * rule, which also refuses duplicate keys that match nothing. */
   def merge(src: DataFrame, keys: Seq[String],
             txn: Option[(String, Long)] = None,
-            evolve: Boolean = false): Long =
-    commit("MERGE", txn) { (base, prev) =>
-      require(base >= 0, s"TxLog table at $root has no commits to merge into")
-      // materialize before the commit swaps the snapshot out from
-      // under the plan (merged reads the base snapshot's files);
-      // evolve = Delta's withSchemaEvolution (additive, target-only
-      // columns survive UPDATE *)
-      val merged = (if (evolve) Upsert.mergeEvolve(snapshot(base), src, keys)
-        else Upsert.merge(snapshot(base), src, keys)).localCheckpoint(true)
-      val uuid = writeDataDir(merged)
-      val (hdr, ranges) = statsFor(uuid)
-      val checks = mergedChecks(prev.checks)
-      enforceChecksOnDirs(Seq(uuid), checks)
-      Some(rewritten(prev, None, Seq((uuid, None)), hdr, ranges, bloomsFor(uuid))
-        .copy(checks = checks))
+            evolve: Boolean = false): Long = {
+    if (!evolve) {
+      val tgt = snapshot().columns
+      require(tgt.sorted.sameElements(src.columns.sorted),
+        s"merge requires identical column sets; got target=${tgt.toSeq} src=${src.columns.toSeq}")
     }
+    Upsert.requireUniqueKeys(src, keys, "MERGE source")
+    mergeInto(src, keys.map(k => s"t.`$k` = s.`$k`").mkString(" AND "),
+      matched = Seq(MergeInto.When(None, MergeInto.UpdateAll)),
+      notMatched = Seq(MergeInto.When(None, MergeInto.InsertAll)),
+      txn = txn, evolve = evolve)
+  }
 
   /** Full conditional MERGE — Delta's complete clause surface (see
     * [[MergeInto]] for the model): matched rows update or delete under
@@ -3048,7 +3037,8 @@ final case class TxLog(spark: SparkSession, root: String,
     * behavior); a MERGE where no clause fires anywhere is a no-op
     * (current version stands, no churn). `UPDATE SET *` / `INSERT *`
     * require every target column on the source by name. Optimistic
-    * TRANSACTION like [[merge]]; `txn` gives streaming exactly-once.
+    * TRANSACTION: a lost race re-runs the merge against the new head;
+    * `txn` gives streaming exactly-once.
     * `evolve` is Delta's `WITH SCHEMA EVOLUTION` on this path:
     * source-only columns join the target schema additively (nullable;
     * rows the merge does not touch read NULL for them, including every
@@ -3066,7 +3056,7 @@ final case class TxLog(spark: SparkSession, root: String,
                 txn: Option[(String, Long)] = None,
                 evolve: Boolean = false): Long = {
     import MergeInto._
-    import org.apache.spark.sql.functions.{col, expr, lit, when}
+    import org.apache.spark.sql.functions.{col, expr, lit, max, when}
     require(matched.nonEmpty || notMatched.nonEmpty ||
       notMatchedBySource.nonEmpty, "MERGE requires at least one WHEN clause")
     def checkClauses(ws: Seq[When], who: String)(ok: Action => Boolean): Unit = {
@@ -3168,23 +3158,22 @@ final case class TxLog(spark: SparkSession, root: String,
             col(s"$targetAlias.$DvRow").as(DvRow), col(ActCol)) ++
           outSchema.fields.toSeq.map(f => valueChain(f).as(f.name)): _*)
         .localCheckpoint(true) // ∝ touched + inserted rows, not table
-      if (fired.isEmpty) None // nothing fired anywhere: no-op
+      // one driver round-trip, bounded metadata (≤ table dir count + 1):
+      // per touched dir (NULL = the inserts), the most fired rows on one
+      // target row — more than one can only be two MATCHED source rows
+      val perDir = fired.groupBy(col(DvDir), col(DvFile), col(DvRow)).count()
+        .groupBy(col(DvDir)).agg(max(col("count"))).collect()
+      if (perDir.isEmpty) None // nothing fired anywhere: no-op
       else {
         // SQL MERGE cardinality contract: a target row modified by two
         // source matches fails the statement, not last-writer-wins
-        if (mActs.nonEmpty &&
-            fired.filter(col(ActCol).isin(mActs.map(_._1): _*))
-              .groupBy(col(DvDir), col(DvFile), col(DvRow)).count()
-              .filter(col("count") > 1).limit(1).count() > 0)
+        if (perDir.exists(r => !r.isNullAt(0) && r.getLong(1) > 1))
           throw new IllegalStateException("MERGE cardinality violation: " +
             "multiple source rows matched and attempted to modify the same " +
             s"target row at $root — deduplicate the source on the merge keys")
         val deleteActs = (mActs ++ nActs).collect {
           case (g, When(_, Delete)) => g }
-        // affected dirs: bounded metadata (≤ table dir count) — the
-        // sanctioned driver round-trip
-        val affected = fired.filter(col(DvDir).isNotNull).select(col(DvDir))
-          .distinct().collect().map(_.getString(0)).toSeq.sorted
+        val affected = perDir.filterNot(_.isNullAt(0)).map(_.getString(0)).toSeq.sorted
         val outCols = outSchema.fields.toSeq.map(f => col(f.name))
         val survivors = addressed.filter(col(DvDir).isin(affected: _*))
           .join(fired.select(col(DvDir), col(DvFile), col(DvRow)),
@@ -3197,17 +3186,18 @@ final case class TxLog(spark: SparkSession, root: String,
         val (hdr, newRanges) = statsFor(uuid, fullMap)
         val newBlooms = bloomsFor(uuid, fullMap)
         val carry = prev.entries.filterNot(e => affected.contains(e._1))
-        val newEntries = prev.partCol match {
-          case Some(pc) =>
-            val ps = partValues(newData, pc)
-            if (ps.isEmpty && carry.isEmpty) Seq((uuid, Option.empty[String]))
-            else ps.map(p => (uuid, Option(p)))
-          case None => Seq((uuid, Option.empty[String]))
+        // a NULL partition value leaves the new dir untagged, as on UPDATE
+        val newEntries = prev.partCol.flatMap(pc => partValuesOpt(newData, pc)) match {
+          case Some(ps) if ps.nonEmpty || carry.nonEmpty => ps.map(p => (uuid, Option(p)))
+          case _ => Seq((uuid, Option.empty[String]))
         }
+        val next = carried(prev, carry, newEntries, hdr, newRanges, newBlooms)
+        // carried dirs are new only to the constraints THIS writer adds
         val checks = mergedChecks(prev.checks)
         enforceChecksOnDirs(Seq(uuid), checks, colMap = fullMap)
-        Some(carried(prev, carry, newEntries, hdr, newRanges, newBlooms)
-          .copy(checks = checks, colMap = fullMap))
+        enforceChecks(entryTagSets(carry, prev.partCol), prev.partCol,
+          addedChecks(prev.checks), next.tombstones, fullMap)
+        Some(next.copy(checks = checks, colMap = fullMap))
       }
     }
   }

@@ -36,6 +36,16 @@ import org.apache.hadoop.fs.Path
   */
 object Upsert {
 
+  /** Delta parity: more than one `src` row per merge key is an error
+    * (NULL keys group together), reported as `<what> has multiple rows
+    * for key …` with the first offending group. */
+  private[pipeline] def requireUniqueKeys(src: DataFrame, keys: Seq[String],
+                                          what: String): Unit = {
+    val d = src.groupBy(keys.map(col): _*).count()
+      .filter(col("count") > 1).limit(1).collect()
+    require(d.isEmpty, s"$what has multiple rows for key ${keys.mkString(",")}: ${d.head}")
+  }
+
   /** Pure merge: returns the post-merge relation. Column sets of target
     * and src must match (SCD1 "UpdateAll" semantics need all columns).
     */
@@ -43,13 +53,7 @@ object Upsert {
             strict: Boolean = true): DataFrame = {
     require(target.columns.sorted.sameElements(src.columns.sorted),
       s"merge requires identical column sets; got target=${target.columns.toSeq} src=${src.columns.toSeq}")
-    if (strict) {
-      // Delta parity: >1 source row per merge key is an error.
-      val dups = src.groupBy(keys.map(col): _*).count().filter(col("count") > 1)
-      val d = dups.limit(1).collect()
-      require(d.isEmpty,
-        s"MERGE source has multiple rows for key ${keys.mkString(",")}: ${d.head}")
-    }
+    if (strict) requireUniqueKeys(src, keys, "MERGE source")
     // Alias-qualified refs: target and src often share lineage (e.g. an
     // incremental batch derived from the target's own source), so plain
     // DataFrame column refs would hit the ambiguous-self-join check.
@@ -88,12 +92,7 @@ object Upsert {
                   strict: Boolean = true): DataFrame = {
     require(keys.forall(k => target.columns.contains(k) && src.columns.contains(k)),
       s"merge keys ${keys.mkString(",")} must exist on both sides")
-    if (strict) {
-      val dups = src.groupBy(keys.map(col): _*).count().filter(col("count") > 1)
-      val d = dups.limit(1).collect()
-      require(d.isEmpty,
-        s"MERGE source has multiple rows for key ${keys.mkString(",")}: ${d.head}")
-    }
+    if (strict) requireUniqueKeys(src, keys, "MERGE source")
     val t = target.alias("__t")
     val s = broadcast(src).alias("__s")
     val cond = keys.map(k => col(s"__t.$k") === col(s"__s.$k")).reduce(_ && _)
@@ -123,23 +122,8 @@ object Upsert {
     updatedOrKept.unionByName(inserts)
   }
 
-  /** Merge into a parquet directory with an atomic-enough commit:
-    * materialize the merged relation into a staging dir (the plan reads
-    * the live dir, so we cannot overwrite in place), then swap.
-    *
-    * On HDFS/local FS the rename is atomic; on object stores it is not —
-    * there a real table format (Delta/Iceberg) supplies the commit
-    * protocol, and this module stays the semantic spec.
-    */
-  def mergeIntoPath(spark: SparkSession, path: String, src: DataFrame,
-                    keys: Seq[String], strict: Boolean = true): Unit = {
-    val target = spark.read.parquet(path)
-    val merged = merge(target, src, keys, strict)
-    overwriteAtomic(spark, merged, path)
-  }
-
   /** Partition-pruned MERGE into a Hive-partitioned parquet table —
-    * the 100 TB shape of [[mergeIntoPath]]. The target is laid out
+    * [[merge]] at 100 TB shape. The target is laid out
     * `path/<partCol>=<v>/part-*.parquet`; the merge
     *
     *   1. collects the DISTINCT partition values present in `src`
@@ -226,12 +210,7 @@ object Upsert {
     val attrs = src.columns.filterNot(keys.contains).toSeq
     require(attrs.nonEmpty && attrs.forall(target.columns.contains),
       s"scd2Merge source attrs $attrs must be target columns")
-    if (strict) {
-      val d = src.groupBy(keys.map(col): _*).count()
-        .filter(col("count") > 1).limit(1).collect()
-      require(d.isEmpty,
-        s"SCD2 source has multiple rows for key ${keys.mkString(",")}: ${d.head}")
-    }
+    if (strict) requireUniqueKeys(src, keys, "SCD2 source")
     val outCols = target.columns.toSeq
     val cur = target.filter(col("is_current")).alias("__t")
     val hist = target.filter(!col("is_current"))
@@ -288,9 +267,8 @@ object Upsert {
     *
     * Scale: identical shape to [[merge]] — one broadcast left join plus
     * one broadcast anti join, no shuffle of the target;
-    * [[applyChangesPartitionedPath]] (Hive layout) and
-    * [[TxLog.applyChangesPartitioned]] (transactional) are the pruned
-    * compositions for partitioned targets.
+    * [[TxLog.applyChangesPartitioned]] is the pruned composition for
+    * partitioned targets.
     * Strict mode enforces one change row per key (a real CDC feed is
     * compacted to final-image-per-key upstream; two ops for one key in
     * one batch would make the fold order-dependent).
@@ -305,10 +283,7 @@ object Upsert {
     if (strict) {
       val bad = changes.filter(!col(opCol).isin("I", "U", "D")).limit(1).collect()
       require(bad.isEmpty, s"applyChanges: unknown op in ${bad.headOption}")
-      val d = changes.groupBy(keys.map(col): _*).count()
-        .filter(col("count") > 1).limit(1).collect()
-      require(d.isEmpty,
-        s"applyChanges batch has multiple rows for key ${keys.mkString(",")}: ${d.head}")
+      requireUniqueKeys(changes, keys, "applyChanges batch")
     }
     val t = target.alias("__t")
     val s = broadcast(changes).alias("__s")
@@ -325,55 +300,6 @@ object Upsert {
         "left_anti")
       .select(target.columns.map(col).toSeq: _*)
     survivors.unionByName(inserts)
-  }
-
-  /** Partition-pruned CDC APPLY into a Hive-partitioned parquet table —
-    * [[applyChanges]] composed with [[mergeIntoPartitionedPath]]'s
-    * pruning, DELETE-aware:
-    *
-    *   1. distinct partition values of the change batch (metadata
-    *      round-trip, bounded by partitions-per-batch),
-    *   2. pruned read of ONLY those target partitions
-    *      (`PartitionFilters` on the scan),
-    *   3. three-clause CDC fold (update/delete/insert), and
-    *   4. dynamic partition overwrite of the affected dirs — PLUS
-    *      explicit removal of affected partitions the fold emptied:
-    *      dynamic overwrite only rewrites partitions PRESENT in the
-    *      output, so a partition whose every row was deleted would
-    *      otherwise silently survive on disk.
-    *
-    * PRECONDITION: as with the partitioned merge, `partCol` must be
-    * functionally dependent on the keys (a change row can never move a
-    * key across partitions), and partition values must be non-null. */
-  def applyChangesPartitionedPath(spark: SparkSession, path: String,
-                                  changes: DataFrame, keys: Seq[String],
-                                  partCol: String, opCol: String = "op",
-                                  strict: Boolean = true): Unit = {
-    require(changes.columns.contains(partCol),
-      s"change feed must carry partition column $partCol")
-    val affected = changes.select(partCol).distinct().collect().map(_.get(0)).toSeq
-    if (affected.isEmpty) return
-    val target = spark.read.parquet(path).filter(col(partCol).isin(affected: _*))
-    val applied = applyChanges(target, changes, keys, opCol, strict)
-      .repartition(math.max(1, affected.length), col(partCol))
-      .localCheckpoint(true)
-    val survivors = applied.select(partCol).distinct().collect().map(_.get(0)).toSet
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try applied.write.mode("overwrite").partitionBy(partCol).parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-    // delete-emptied partitions: remove their dirs outright
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    affected.filterNot(survivors).foreach { v =>
-      val dir = new Path(path,
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .getPartitionPathString(partCol, String.valueOf(v)))
-      fs.delete(dir, true)
-    }
   }
 
   /** Write `df` to `path` via staging-dir + rename swap. Safe when the

@@ -212,8 +212,8 @@ object TxLogSql {
     def equiKeys(cond: Expression): Option[Seq[String]] =
       scala.util.Try(keysOf(cond).distinct).toOption
     (m.matchedActions, m.notMatchedActions, m.notMatchedBySourceActions) match {
-      // the SCD1 upsert keeps its dedicated partition-carrying path
-      // (and is the only shape schema evolution applies to)
+      // the SCD1 upsert goes through TxLog.merge, which adds Delta's
+      // one-source-row-per-key check to the same mergeInto commit
       case (Seq(UpdateStarAction(None)), Seq(InsertStarAction(None)), Seq())
           if equiKeys(m.mergeCondition).isDefined =>
         TxLogMergeCommand(root, m.sourceTable,

@@ -134,7 +134,7 @@ object EventStreams {
   /** Streaming → gold MERGE: the production stream-to-star pattern.
     * UPDATE-mode hourly aggregation, each microbatch upserted into a
     * parquet gold table via `foreachBatch` + the engine's SCD1 merge
-    * ([[graft.pipeline.Upsert.mergeIntoPath]]) keyed on (hour_start,
+    * ([[graft.pipeline.Upsert.merge]]) keyed on (hour_start,
     * event_type). Decimal partial sums make the post-replay table equal
     * the one-shot batch aggregation EXACTLY, however the input was
     * split into microbatches — which is what the batch oracle asserts.

@@ -1,7 +1,8 @@
 package graft.dedup
 
 import graft.SparkTestBase
-import graft.pipeline.Upsert
+import graft.pipeline.{TxLog, Upsert}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import scala.util.Random
@@ -111,6 +112,39 @@ class PropertySpec extends SparkTestBase {
       val ba = Upsert.merge(Upsert.merge(tgt, b2, Seq("k")), b1, Seq("k"))
       assert(ab.exceptAll(ba).isEmpty && ba.exceptAll(ab).isEmpty,
         s"trial $trial not commutative")
+    }
+  }
+
+  test("TxLog.merge's snapshot equals Upsert.merge as a bag (10 random cases)") {
+    val rnd = new Random(41)
+    (1 to 10).foreach { trial =>
+      val keys = if (trial % 2 == 0) Seq("k1", "k2") else Seq("k1")
+      val evolve = trial % 3 == 0
+      // keys from a small range (duplicate target keys), 1 in 8 NULL
+      def key(hi: Int) = if (rnd.nextInt(8) == 0) None else Some(rnd.nextInt(hi).toLong)
+      def rows(n: Int, hi: Int) =
+        Seq.fill(n)((key(hi), key(hi), rnd.nextInt(100), s"w${rnd.nextInt(100)}"))
+      // a multi-dir target: one overwrite, then up to two appends
+      val t = TxLog(spark, tmpDir(s"prop_txmerge_$trial"))
+      t.overwrite(rows(3 + rnd.nextInt(8), 12).toDF("k1", "k2", "v", "w"))
+      (1 to rnd.nextInt(3)).foreach(_ =>
+        t.append(rows(2 + rnd.nextInt(6), 12).toDF("k1", "k2", "v", "w")))
+      // one source row per key tuple (NULL keys group together)
+      val srcRows = rows(2 + rnd.nextInt(10), 18)
+        .distinctBy(r => if (keys.size == 1) Seq(r._1) else Seq(r._1, r._2))
+      // evolve: the source lacks target-only `w` and adds `x`
+      val src =
+        if (evolve) srcRows.map(r => (r._1, r._2, r._3 + 1000, r._4 + "x")).toDF("k1", "k2", "v", "x")
+        else srcRows.map(r => (r._1, r._2, r._3 + 1000, r._4)).toDF("k1", "k2", "v", "w")
+      val v0 = t.currentVersion()
+      t.merge(src, keys, evolve = evolve)
+      val want =
+        if (evolve) Upsert.mergeEvolve(t.snapshot(v0), src, keys)
+        else Upsert.merge(t.snapshot(v0), src, keys)
+      val got = t.snapshot()
+      assert(got.columns.toSeq === want.columns.toSeq, s"trial $trial")
+      def bag(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      assert(bag(got) === bag(want), s"trial $trial")
     }
   }
 }

@@ -118,6 +118,38 @@ class TxLogMergeIntoSpec extends SparkTestBase {
     assert(r.isNullAt(2))
   }
 
+  test("a CHECK constraint a writer introduces is validated on carried dirs") {
+    val root = tmpDir("mi_check_carry")
+    TxLog(spark, root).overwrite(Seq((-1L, "neg")).toDF("id", "v"))
+    val strict = TxLog(spark, root, checkConstraints = Seq("pos" -> "id > 0"))
+    // one valid row, inserted: the dir holding id = -1 only carries
+    val e = intercept[IllegalStateException](
+      strict.mergeInto(Seq((5L, "ok")).toDF("id", "v"), "t.id = s.id",
+        matched = Seq(M.When(None, M.UpdateAll)),
+        notMatched = Seq(M.When(None, M.InsertAll))))
+    assert(e.getMessage.contains("pos"))
+    intercept[IllegalStateException](
+      strict.merge(Seq((5L, "ok")).toDF("id", "v"), Seq("id")))
+    assert(strict.currentVersion() === 0L)
+  }
+
+  test("a NULL partition value leaves the new dir untagged; the table stays partitioned") {
+    val t = TxLog(spark, tmpDir("mi_null_part"))
+    t.overwritePartitioned(Seq((1L, "a", Option("d1")), (2L, "b", Option("d2")))
+      .toDF("k", "v", "day"), "day")
+    t.mergeInto(Seq((3L, "c", Option.empty[String])).toDF("k", "v", "day"), "t.k = s.k",
+      matched = Seq(M.When(None, M.UpdateAll)),
+      notMatched = Seq(M.When(None, M.InsertAll)))
+    assert(t.partitionColumn() === Some("day"))
+    assert(t.snapshot().orderBy("k").collect().map(_.getString(1)).toSeq ===
+      Seq("a", "b", "c"))
+    // the same through the SCD1 merge, updating the NULL-day row
+    t.merge(Seq((3L, "C", Option.empty[String])).toDF("k", "v", "day"), Seq("k"))
+    assert(t.partitionColumn() === Some("day"))
+    assert(t.snapshot().orderBy("k").collect().map(_.getString(1)).toSeq ===
+      Seq("a", "b", "C"))
+  }
+
   test("validation: clause shapes, unknown columns, star coverage") {
     val t = freshTable("mi_validate")
     val src = Seq((1L, "x", 1L)).toDF("k", "v", "amt")

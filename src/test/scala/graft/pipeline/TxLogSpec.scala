@@ -22,7 +22,7 @@ class TxLogSpec extends SparkTestBase {
     assert(t.snapshot(0).count() === 2)
   }
 
-  test("merge commit has SCD1 semantics and compacts to one snapshot dir") {
+  test("merge commit has SCD1 semantics and keeps time travel") {
     val t = fresh("merge")
     t.overwrite(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
     t.merge(Seq((2L, "B"), (3L, "c")).toDF("id", "v"), Seq("id"))
@@ -32,6 +32,35 @@ class TxLogSpec extends SparkTestBase {
     val before = t.snapshot(t.currentVersion() - 1).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(before === Map(1L -> "a", 2L -> "b"))
+  }
+
+  test("merge into a partition-tagged table keeps its partition column") {
+    val t = fresh("merge_part")
+    t.overwritePartitioned(
+      Seq((1L, "a", "d1"), (2L, "b", "d2")).toDF("id", "v", "day"), "day")
+    t.merge(Seq((2L, "B", "d2"), (3L, "c", "d3")).toDF("id", "v", "day"), Seq("id"))
+    assert(t.partitionColumn() === Some("day"))
+    assert(t.partitionValues() === Seq("d1", "d2", "d3"))
+    assert(t.snapshot().orderBy("id").collect().map(_.getString(1)).toSeq ===
+      Seq("a", "B", "c"))
+  }
+
+  test("an insert-only merge carries the pre-merge dir") {
+    val t = fresh("merge_insert_only")
+    t.overwrite(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    val before = t.snapshotDataDirs()
+    t.merge(Seq((3L, "c")).toDF("id", "v"), Seq("id"))
+    val after = t.snapshotDataDirs()
+    assert(after.size === 2 && before.forall(after.contains))
+    assert(t.snapshot().orderBy("id").collect().map(_.getString(1)).toSeq ===
+      Seq("a", "b", "c"))
+  }
+
+  test("an empty-source merge commits no version") {
+    val t = fresh("merge_empty")
+    t.overwrite(Seq((1L, "a")).toDF("id", "v"))
+    val v = t.merge(Seq.empty[(Long, String)].toDF("id", "v"), Seq("id"))
+    assert(v === 0L && t.currentVersion() === 0L)
   }
 
   test("optimistic commit survives a version collision (loser retries)") {

@@ -92,35 +92,6 @@ class UpsertSpec extends SparkTestBase {
     }
   }
 
-  test("partitioned CDC apply equals the unpartitioned fold; untouched dirs untouched; emptied dirs removed") {
-    val days = Seq("2024-01-01", "2024-01-02", "2024-01-03")
-    // day is a function of the key (the documented precondition)
-    def dayOf(k: Long) = java.sql.Date.valueOf(days((k % 3).toInt))
-    val tgt = (0L until 12L).map(k => (k, dayOf(k), s"v$k"))
-      .toDF("k", "day", "v")
-    val path = tmpDir("upsert_cdc_part") + "/t"
-    tgt.write.partitionBy("day").parquet(path)
-    // update one day-2 key, DELETE every day-1 key, insert a day-2 key;
-    // day-0 (keys ≡ 0 mod 3) entirely untouched
-    val changes = (Seq((2L, "V2", "U"), (98L, "v98", "I")) ++
-      Seq(1L, 4L, 7L, 10L).map(k => (k, "", "D")))
-      .map { case (k, v, op) => (k, dayOf(k), v, op) }
-      .toDF("k", "day", "v", "op")
-    val day0Files = new java.io.File(s"$path/day=${days(0)}").list().sorted.toSeq
-    Upsert.applyChangesPartitionedPath(spark, path, changes, Seq("k"), "day")
-    val got = spark.read.parquet(path).collect()
-      .map(r => (r.getAs[Long]("k"), r.getAs[java.sql.Date]("day").toString,
-        r.getAs[String]("v"))).sortBy(_._1)
-    val want = Upsert.applyChanges(tgt, changes, Seq("k")).collect()
-      .map(r => (r.getAs[Long]("k"), r.getAs[java.sql.Date]("day").toString,
-        r.getAs[String]("v"))).sortBy(_._1)
-    assert(got === want)
-    // untouched partition: physically NOT rewritten (same file names)
-    assert(new java.io.File(s"$path/day=${days(0)}").list().sorted.toSeq === day0Files)
-    // fully-deleted partition: its dir is gone, not silently surviving
-    assert(!new java.io.File(s"$path/day=${days(1)}").exists())
-  }
-
   // --- SCD2 ---
 
   private def scd2Target = Seq(
