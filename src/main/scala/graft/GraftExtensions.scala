@@ -36,12 +36,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // MERGE INTO / UPDATE / DELETE / INSERT strings against registered
     // TxLog tables (graft.sql.TxLogSql.register), plus SELECT over them
     // with VERSION AS OF / TIMESTAMP AS OF time travel — the SQL face
-    // of the transaction log
+    // of the transaction log. A registered name has no session-catalog
+    // entry, so the built-in resolver leaves it (time-traveled or not)
+    // unresolved for this rule.
     e.injectResolutionRule(session => graft.sql.TxLogSql.TxLogDmlRule(session))
-    // time travel on registered names must substitute BEFORE the
-    // built-in resolver rejects session-catalog tables
-    e.injectHintResolutionRule(session =>
-      graft.sql.TxLogSql.TxLogTimeTravelRule(session))
     // Delta-shaped CDF + history table-valued functions over registered
     // TxLog tables: table_changes('t', from, to) / txlog_history('t')
     e.injectTableFunction((

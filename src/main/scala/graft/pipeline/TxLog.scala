@@ -385,74 +385,11 @@ final case class TxLog(spark: SparkSession, root: String,
   private def readManifest(v: Long): Seq[String] =
     readManifestFull(v).dirs
 
-  /** Data dirs referenced by `version`'s snapshot (default: latest) —
-    * exposed so a catalog layer can point SQL registrations at a
-    * single-dir snapshot directly. */
+  /** Data dirs referenced by `version`'s snapshot (default: latest). */
   def snapshotDataDirs(version: Long = -1L): Seq[String] = {
     val v = if (version >= 0) version else currentVersion()
     require(v >= 0, s"TxLog table at $root has no commits")
     readManifest(v).map(dirPath)
-  }
-
-  /** SQL text selecting this snapshot — lets a catalog layer register a
-    * VIEW over a MULTI-dir snapshot (append-built tables,
-    * partition-pruned merges) so `db.table` keeps resolving in plain
-    * SQL where a single-LOCATION parquet table cannot. Reproduces
-    * [[snapshot]]'s read semantics exactly: per-dir partition-tag
-    * filters (dead partitions of multi-tagged dirs excluded) and
-    * additive schema evolution (columns absent from an older dir
-    * NULL-filled with the evolved type). */
-  def snapshotSql(version: Long = -1L): String = {
-    val v = if (version >= 0) version else currentVersion()
-    require(v >= 0, s"TxLog table at $root has no commits")
-    val m = readManifestFull(v)
-    val schemas = m.dirs.map(d => d -> spark.read.parquet(dirPath(d)).schema).toMap
-    // merged column list in first-appearance order (additive evolution)
-    val all = m.dirs.flatMap(d => schemas(d).fields)
-      .foldLeft(Vector.empty[org.apache.spark.sql.types.StructField]) {
-        (acc, f) => if (acc.exists(_.name == f.name)) acc else acc :+ f
-      }
-    // column mapping in SQL form: visible = mapped logical names in
-    // line order, each aliasing its physical column (identity when
-    // the table is unmapped)
-    val visible: Seq[(String, String, org.apache.spark.sql.types.DataType)] =
-      if (m.colMap.isEmpty) all.map(f => (f.name, f.name, f.dataType))
-      else m.colMap.flatMap { case (lg, ph) =>
-        all.find(_.name == ph).map(f => (lg, ph, f.dataType)) }
-    def q(s: String) = s.replace("'", "''")
-    m.entries.groupBy(_._1).toSeq.sortBy(_._1).map { case (d, es) =>
-      val have = schemas(d).fieldNames.toSet
-      val cols = visible.map { case (lg, ph, dt) =>
-        if (have(ph)) s"`$ph`" + (if (ph == lg) "" else s" AS `$lg`")
-        else s"CAST(NULL AS ${dt.sql}) AS `$lg`" }.mkString(", ")
-      // per-dir visibility in SQL form — same-scheme tags restrict on
-      // the table partition column, foreign tags (post-evolution) on
-      // their own recorded column; mirrors tagFilter exactly
-      val tags = es.map(_._2)
-      val tagPred =
-        if (tags.isEmpty || tags.exists(_.isEmpty)) Nil
-        else tags.flatten.map(splitTag)
-          .flatMap { case (scheme, v) => scheme.orElse(m.partCol).map(_ -> v) }
-          .groupBy(_._1).toSeq.sortBy(_._1).map { case (c, vs) =>
-            s"CAST(`$c` AS STRING) IN (${vs.map(_._2).distinct
-              .map(t => s"'${q(t)}'").mkString(", ")})"
-          }
-      // merge-on-read deletes in SQL form: the dir's physical row
-      // addresses are projected in a subquery and each tombstone
-      // sidecar subtracts via NOT EXISTS — same semantics as
-      // [[dropTombstoned]]'s anti join
-      val ts = m.tombstones.getOrElse(d, Nil)
-      val from =
-        if (ts.isEmpty) s"parquet.`${dirPath(d)}`"
-        else s"(SELECT *, _metadata.file_path AS __dvf, " +
-          s"_metadata.row_index AS __dvr FROM parquet.`${dirPath(d)}`)"
-      val dvPreds = ts.map(t =>
-        s"NOT EXISTS (SELECT 1 FROM parquet.`${dirPath(t)}` __dv " +
-          "WHERE __dv.file = __dvf AND __dv.row = __dvr)")
-      val preds = tagPred ++ dvPreds
-      val where = if (preds.isEmpty) "" else " WHERE " + preds.mkString(" AND ")
-      s"SELECT $cols FROM $from$where"
-    }.mkString(" UNION ALL ")
   }
 
   /** Snapshot read of `version` (default: latest). Fails on an empty
@@ -1876,7 +1813,7 @@ final case class TxLog(spark: SparkSession, root: String,
         case Some(m) =>
           val txns = txn.fold(prev.txns) { case (app, id) =>
             prev.txns + (app -> math.max(id, prev.txns.getOrElse(app, -1L))) }
-          onCommitAttempt()
+          beforePublish()
           if (tryCommitManifest(head + 1, manifestLines(m.copy(txns = txns)), op)) head + 1
           else attempt(n + 1)
       }
@@ -1887,7 +1824,7 @@ final case class TxLog(spark: SparkSession, root: String,
   /** Test seam: invoked by [[commit]] between building a manifest and
     * publishing it — lets a spec inject a concurrent writer
     * deterministically. No-op in production. */
-  private[pipeline] var onCommitAttempt: () => Unit = () => ()
+  private[pipeline] var beforePublish: () => Unit = () => ()
 
   /** FULL-REWRITE shape: the new dirs ARE the table. Layout —
     * partition column, stats, entries, ranges, Blooms — is the new

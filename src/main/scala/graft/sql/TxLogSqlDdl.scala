@@ -538,7 +538,6 @@ case class TxLogCreateTableCommand(name: String, colsDdl: Option[String],
           " — use ALTER TABLE … SET TBLPROPERTIES to change table configuration")
     }
     TxLogSql.register(name, t, keys)
-    TxLogSql.committed(root)
     Seq.empty
   }
 }
@@ -560,7 +559,6 @@ case class TxLogRestoreCommand(name: String, target: Either[Long, String])
       case Right(ts) => t.versionAsOf(TxLogDdl.tsMillis(ts))
     }
     val nv = t.restoreTo(tv)
-    TxLogSql.committed(root)
     Seq(Row(nv, tv))
   }
 }
@@ -621,7 +619,6 @@ case class TxLogCopyIntoCommand(name: String, path: String, format: String,
     val root = TxLogDdl.rootOf(name)
     val (v, n) = TxLog(session, root).copyInto(path, format,
       pattern.getOrElse("*"), options, force)
-    TxLogSql.committed(root)
     Seq(Row(v, n))
   }
 }
@@ -637,7 +634,6 @@ case class TxLogAddColumnsCommand(name: String, colsDdl: String)
     val root = TxLogDdl.rootOf(name)
     val v = TxLog(session, root).addColumns(
       session.sessionState.sqlParser.parseTableSchema(colsDdl))
-    TxLogSql.committed(root)
     Seq(Row(v))
   }
 }
@@ -651,7 +647,6 @@ case class TxLogRenameColumnCommand(name: String, from: String, to: String)
   override def run(session: SparkSession): Seq[Row] = {
     val root = TxLogDdl.rootOf(name)
     val v = TxLog(session, root).renameColumn(from, to)
-    TxLogSql.committed(root)
     Seq(Row(v))
   }
 }
@@ -665,7 +660,6 @@ case class TxLogDropColumnCommand(name: String, col: String)
   override def run(session: SparkSession): Seq[Row] = {
     val root = TxLogDdl.rootOf(name)
     val v = TxLog(session, root).dropColumn(col)
-    TxLogSql.committed(root)
     Seq(Row(v))
   }
 }
@@ -698,17 +692,11 @@ case class TxLogShowCreateCommand(name: String) extends LeafRunnableCommand {
 /** `DROP TABLE t` on a registered TxLog name: removes the SQL
   * registration; the transaction log and data stay on disk (external
   * -table semantics — Delta keeps data for unmanaged tables too; the
-  * storage-reclaim path is VACUUM + filesystem removal). A name that
-  * ALSO exists in the session catalog (a GoldCatalog-registered
-  * LOCATION table) forwards the drop to Spark after unregistering —
-  * the re-parsed statement delegates now, so the catalog entry goes
-  * too instead of being shadowed. */
+  * storage-reclaim path is VACUUM + filesystem removal). */
 case class TxLogDropTableCommand(name: String) extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq.empty
   override def run(session: SparkSession): Seq[Row] = {
     TxLogSql.unregister(name)
-    if (session.catalog.tableExists(name))
-      session.sql(s"DROP TABLE $name")
     Seq.empty
   }
 }
@@ -947,7 +935,6 @@ case class TxLogAnalyzeCommand(name: String, cols: Seq[String],
       }
     t.updateProperties(fresh, stale,
       op = s"ANALYZE (${targets.sorted.mkString(", ")})")
-    TxLogSql.committed(t.root)
     Seq(Row(t.currentVersion()))
   }
 }
@@ -1060,7 +1047,6 @@ case class TxLogOptimizeCommand(name: String, zorderCols: Seq[String],
         TxLog(session, root, statsCols = zorderCols)
           .compactZOrder(zorderCols, nBuckets = 32)
       else TxLog(session, root).compactSmallFiles(128L << 20, parts)
-    TxLogSql.committed(root)
     Seq(Row(v))
   }
 }
@@ -1139,7 +1125,6 @@ case class TxLogReorgCommand(name: String, where: Option[String] = None)
     val root = TxLogDdl.rootOf(name)
     val parts = TxLogMaintenance.partitionScope(session, root, where, "REORG")
     val v = TxLog(session, root).purgeDeletes(parts)
-    TxLogSql.committed(root)
     Seq(Row(v))
   }
 }

@@ -31,6 +31,13 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   * shape Delta's own analysis rules use. Unregistered names fall
   * through to Spark's normal resolution untouched.
   *
+  * The registry is the only way a registered name resolves (gold
+  * tables included — [[graft.pipeline.GoldCatalog]] keeps no
+  * session-catalog entry), so every read sees the version current at
+  * analysis time and no commit has a registration to re-point. It is
+  * process-wide, like the external catalog every session of a
+  * SparkContext shares: `spark.newSession()` sees the same names.
+  *
   * Reference: `gold_dim_branch.ipynb:88162-88167` (API-form merge) —
   * this is parity-plus: the reference itself never exposes the SQL
   * form.
@@ -45,8 +52,14 @@ object TxLogSql {
   private val tables =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Seq[String])]()
 
-  private def norm(parts: Seq[String]): String =
-    parts.map(_.toLowerCase(java.util.Locale.ROOT)).mkString(".")
+  /** The registry key of a name: lowercased and dot-joined, with a
+    * leading session-catalog name dropped, so `spark_catalog.gold.t`
+    * and `gold.t` address the same table. */
+  private def norm(parts: Seq[String]): String = {
+    val ps = parts.map(_.toLowerCase(java.util.Locale.ROOT))
+    val session = org.apache.spark.sql.graft.GraftSqlBridge.SessionCatalogName
+    (if (ps.length > 2 && ps.head == session) ps.tail else ps).mkString(".")
+  }
 
   /** Make `name` addressable in SQL — as a DML target, a SELECT /
     * time-travel relation, and (when `keys` are declared) the subject
@@ -54,11 +67,8 @@ object TxLogSql {
   def register(name: String, t: TxLog, keys: Seq[String] = Nil): Unit =
     tables.put(norm(name.split('.').toSeq), (t.root, keys))
 
-  def unregister(name: String): Unit = {
-    val k = norm(name.split('.').toSeq)
-    tables.remove(k)
-    commitHooks.remove(k)
-  }
+  def unregister(name: String): Unit =
+    tables.remove(norm(name.split('.').toSeq))
 
   private[sql] def lookup(parts: Seq[String]): Option[String] =
     Option(tables.get(norm(parts))).map(_._1)
@@ -73,87 +83,25 @@ object TxLogSql {
   private[graft] def lookupMeta(name: String): Option[(String, Seq[String])] =
     Option(tables.get(norm(name.split('.').toSeq)))
 
-  /** A registered root owning `paths` — how a DML target that the
-    * analyzer ALREADY resolved to a catalog relation (a
-    * GoldCatalog-registered snapshot-LOCATION table) is traced back to
-    * its transaction log: every scanned path must live under one
-    * registered root. */
-  private[sql] def rootOwning(paths: Seq[String]): Option[String] = {
-    val roots = scala.jdk.CollectionConverters
-      .CollectionHasAsScala(tables.values()).asScala.map(_._1).toSet
-    roots.find(r => paths.nonEmpty && paths.forall(_.startsWith(r + "/")))
-  }
-
-  /** Post-commit hooks, keyed like [[tables]]: a catalog layer whose
-    * SQL registration points at a SNAPSHOT location (GoldCatalog)
-    * re-points it here after a SQL DML commit, so `SELECT * FROM
-    * gold.t` never serves a stale pre-DML snapshot. */
-  private val commitHooks =
-    new java.util.concurrent.ConcurrentHashMap[String, () => Unit]()
-
-  def onCommit(name: String, hook: () => Unit): Unit =
-    commitHooks.put(norm(name.split('.').toSeq), hook)
-
-  private[sql] def committed(root: String): Unit = {
-    val names = scala.jdk.CollectionConverters
-      .SetHasAsScala(tables.entrySet()).asScala
-      .filter(_.getValue._1 == root).map(_.getKey)
-    names.foreach(n => Option(commitHooks.get(n)).foreach(_.apply()))
-  }
-
   private def fail(msg: String): Nothing =
     throw new AnalysisException(
       errorClass = "INTERNAL_ERROR",
       messageParameters = Map("message" -> s"TxLog SQL DML: $msg"))
 
   /** The registered TxLog root a DML target resolves to, unwrapping
-    * the alias the parser adds for `MERGE INTO t AS tgt`. Matches the
-    * target both UNRESOLVED (a name only this registry knows) and
-    * already RESOLVED to a file relation (a catalog-registered
-    * snapshot-LOCATION table — the analyzer's relation resolution runs
-    * before this rule in each iteration, so a cataloged gold table
-    * arrives here as a `LogicalRelation` whose scan paths sit under
-    * the table's TxLog root). Without the path match, UPDATE/DELETE/
-    * MERGE on a cataloged table would fail analysis — and INSERT would
-    * silently write parquet INTO the live snapshot dir, bypassing the
-    * log entirely. */
+    * the alias the parser adds for `MERGE INTO t AS tgt`. */
   private def targetRoot(p: LogicalPlan): Option[String] = p match {
     case SubqueryAlias(_, child) => targetRoot(child)
     case u: UnresolvedRelation => lookup(u.multipartIdentifier)
-    case resolved =>
-      // LOCATION table → one LogicalRelation; a multi-dir snapshot
-      // registered as a VIEW → a Union of per-dir scans. Either way,
-      // every leaf scan path must live under one registered root.
-      val paths = resolved.collect {
-        case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          l.relation match {
-            case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              h.location.rootPaths.map(_.toUri.getPath)
-            case _ => Seq.empty[String]
-          }
-      }.flatten
-      rootOwning(paths)
-  }
-
-  /** Bare column name of an attribute — unresolved (name-registered
-    * targets: the analyzer never touched the DML's expressions) or
-    * resolved (catalog-registered targets: attributes arrive bound to
-    * the catalog relation). */
-  private def colName(e: Expression): Option[String] = e match {
-    case u: UnresolvedAttribute => Some(u.nameParts.last)
-    case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
-      Some(a.name)
     case _ => None
   }
 
-  /** Expression SQL with catalog qualifiers stripped: a condition the
-    * analyzer resolved against `spark_catalog.gold.t` must re-apply to
-    * the bare-named snapshot frame inside the library call. */
-  private def unqualifiedSql(e: Expression): String =
-    e.transform {
-      case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
-        UnresolvedAttribute(Seq(a.name))
-    }.sql
+  /** Bare column name of an attribute: the analyzer never resolves a
+    * registered target, so the DML's expressions arrive unresolved. */
+  private def colName(e: Expression): Option[String] = e match {
+    case u: UnresolvedAttribute => Some(u.nameParts.last)
+    case _ => None
+  }
 
   /** Merge keys from the ON condition: a conjunction of same-named
     * column equalities (`t.k = s.k`) — the SCD1 key shape the library
@@ -181,12 +129,10 @@ object TxLogSql {
   /** Expression SQL re-rendered in the two-alias namespace the library
     * merge evaluates in: qualifiers truncate to their last part
     * (`catalog.db.t.c` → `t.c` — matching [[aliasOf]]'s last-part
-    * rule), resolved attributes re-render with their own alias. */
+    * rule). */
   private def aliasedSql(e: Expression): String = e.transform {
     case ua: UnresolvedAttribute if ua.nameParts.length > 2 =>
       UnresolvedAttribute(ua.nameParts.takeRight(2))
-    case a: AttributeReference =>
-      UnresolvedAttribute(a.qualifier.lastOption.toSeq :+ a.name)
   }.sql
 
   /** One parsed `WHEN ...` action → the library clause model. */
@@ -237,10 +183,10 @@ object TxLogSql {
 
   private[sql] def planUpdate(u: UpdateTable, root: String): LogicalPlan = {
     val sets = u.assignments.map { a =>
-      colName(a.key).map(_ -> unqualifiedSql(a.value))
+      colName(a.key).map(_ -> a.value.sql)
         .getOrElse(fail(s"unsupported UPDATE assignment '${a.sql}'"))
     }
-    TxLogUpdateCommand(root, sets, u.condition.map(unqualifiedSql))
+    TxLogUpdateCommand(root, sets, u.condition.map(_.sql))
   }
 
   private[sql] def planInsert(i: InsertIntoStatement, root: String): LogicalPlan = {
@@ -386,27 +332,6 @@ object TxLogSql {
     case _ => fail("txlog_history takes (name)")
   }
 
-  /** Time-travel rule, injected into the HINTS batch — i.e. BEFORE
-    * relation resolution: `gold.t VERSION AS OF n` on a
-    * catalog-registered name would otherwise hit the built-in
-    * resolver first, which throws UNSUPPORTED_FEATURE.TIME_TRAVEL for
-    * session-catalog tables. Substituting here is precedence-safe:
-    * time travel cannot address temp views, so no shadowing rule is
-    * bypassed. Plain (non-time-traveled) reads stay in the Resolution
-    * batch, where catalog and temp-view precedence applies first. */
-  case class TxLogTimeTravelRule(session: SparkSession) extends Rule[LogicalPlan] {
-    override def apply(plan: LogicalPlan): LogicalPlan =
-      plan.resolveOperatorsUp {
-        case tt: RelationTimeTravel => tt.relation match {
-          case u: UnresolvedRelation =>
-            lookup(u.multipartIdentifier).map(root =>
-              readPlan(session, u.multipartIdentifier.last, root,
-                tt.version, tt.timestamp)).getOrElse(tt)
-          case _ => tt
-        }
-      }
-  }
-
   /** The analyzer rule: DML statements whose target is a registered
     * TxLog table become runnable commands (DML nodes are always plan
     * roots, so a root match suffices), and read references to
@@ -424,7 +349,7 @@ object TxLogSql {
           targetRoot(u.table).map(planUpdate(u, _)).getOrElse(plan)
         case d: DeleteFromTable =>
           targetRoot(d.table)
-            .map(TxLogDeleteCommand(_, unqualifiedSql(d.condition)): LogicalPlan)
+            .map(TxLogDeleteCommand(_, d.condition.sql): LogicalPlan)
             .getOrElse(plan)
         case i: InsertIntoStatement =>
           targetRoot(i.table).map(planInsert(i, _)).getOrElse(plan)
@@ -461,7 +386,6 @@ case class TxLogMergeCommand(root: String, source: LogicalPlan,
   override def run(session: SparkSession): Seq[Row] = {
     val src = org.apache.spark.sql.graft.GraftSqlBridge.ofRows(session, source)
     val v = TxLog(session, root).merge(src, keys, evolve = evolve)
-    TxLogSql.committed(root)
     Seq(Row(v))
   }
 }
@@ -487,7 +411,6 @@ case class TxLogMergeIntoCommand(root: String, source: LogicalPlan,
     val v = TxLog(session, root).mergeInto(src, condition, matched,
       notMatched, notMatchedBySource, targetAlias, sourceAlias,
       evolve = evolve)
-    TxLogSql.committed(root)
     Seq(Row(v))
   }
 }
@@ -541,7 +464,6 @@ case class TxLogInsertPartitionCommand(root: String, source: LogicalPlan,
       // tagging under any other column would hide rows
       else t.append(aligned,
         tagBy = Some(pf.name).filter(t.partitionColumn().contains(_)))
-    TxLogSql.committed(root)
     Seq(Row(ver))
   }
 }
@@ -566,7 +488,6 @@ case class TxLogUpdateCommand(root: String, sets: Seq[(String, String)],
       case other => throw new IllegalArgumentException(
         s"spark.graft.update.mode must be 'cow' or 'mor', got '$other'")
     }
-    TxLogSql.committed(root)
     Seq(Row(v))
   }
 }
@@ -579,7 +500,6 @@ case class TxLogDeleteCommand(root: String, predicate: String)
     AttributeReference("version", LongType, nullable = false)())
   override def run(session: SparkSession): Seq[Row] = {
     val v = TxLog(session, root).deleteWhere(predicate)
-    TxLogSql.committed(root)
     Seq(Row(v))
   }
 }
@@ -627,7 +547,6 @@ case class TxLogInsertCommand(root: String, source: LogicalPlan,
       if (overwrite) pc.fold(t.overwrite(aligned))(c =>
         t.overwritePartitioned(aligned, c))
       else t.append(aligned, tagBy = pc)
-    TxLogSql.committed(root)
     Seq(Row(v))
   }
 }

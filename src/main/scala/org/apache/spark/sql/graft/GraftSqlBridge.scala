@@ -25,6 +25,11 @@ object GraftSqlBridge {
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): org.apache.spark.sql.Column =
     classic.ExpressionUtils.column(e)
 
+  /** `spark_catalog`: the name a 3-part identifier gives the session
+    * catalog. */
+  val SessionCatalogName: String =
+    org.apache.spark.sql.connector.catalog.CatalogManager.SESSION_CATALOG_NAME
+
   /** ANSI-mode cast regardless of the session's `spark.sql.ansi.enabled`
     * — SQL INSERT's store-assignment coercion must FAIL on a value the
     * target type cannot represent ('abc' → INT, numeric overflow), not

@@ -35,6 +35,23 @@ trait SparkTestBase extends AnyFunSuite {
     d
   }
 
+  /** Number of Spark jobs `f` starts (the listener bus is drained on
+    * both sides, so no earlier job is counted and no job of `f` is
+    * missed). */
+  def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.graft.GraftCoreBridge.drainListenerBus(sc)
+    sc.addSparkListener(l)
+    try { f; org.apache.spark.graft.GraftCoreBridge.drainListenerBus(sc) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
+
   /** Scoped session confs: set, run, restore (unset keys restored to
     * unset). The plan-shape pins use this to steer broadcast/CBO
     * selection through the STATISTICS path rather than query hints. */

@@ -83,8 +83,7 @@ class PipelineSpec extends SparkTestBase {
     assert(log.currentVersion() >= 1)
     assert(log.snapshot(log.currentVersion() - 1).count() === 267L)
     assert(log.snapshot().count() === 268L)
-    // and the SQL registration tracks the CURRENT snapshot (S9): the
-    // catalog table must re-point at each commit's data dir
+    // and the SQL name reads the CURRENT snapshot (S9)
     assert(spark.sql("SELECT count(*) FROM gold.dim_dealer").head().getLong(0) === 268L)
   }
 
@@ -130,22 +129,76 @@ class PipelineSpec extends SparkTestBase {
       fresh.run(carsales("SalesData.csv"), RunMode.ForceIncremental))
   }
 
-  test("SQL registration survives multi-dir snapshots (append/mergePartitioned) via a view") {
+  test("SQL registration survives multi-dir snapshots (append/merge) through the name registry") {
     import spark.implicits._
     val cat = GoldCatalog(spark, tmpDir("catalog_multidir"))
     cat.ensureDatabases()
     cat.saveAsTable(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), "gold", "multi_t")
     assert(spark.sql("SELECT count(*) FROM gold.multi_t").head().getLong(0) === 2L)
-    // an append makes the snapshot multi-dir; register must fall back
-    // to a view instead of silently dropping the SQL name
+    // an append makes the snapshot multi-dir; the SQL name must keep
+    // resolving instead of silently dropping rows
     cat.txlog("gold", "multi_t").append(Seq((3L, "c")).toDF("id", "v"))
     cat.register("gold", "multi_t")
     assert(spark.sql("SELECT count(*) FROM gold.multi_t").head().getLong(0) === 3L)
-    // a merge re-points the registration at its new snapshot (still
-    // multi-dir: it rewrote only the dir holding id 3)
+    // a merge's new snapshot (still multi-dir: it rewrote only the dir
+    // holding id 3) is what the next read sees
     cat.mergeInto("gold", "multi_t", Seq((3L, "C")).toDF("id", "v"), Seq("id"))
     assert(spark.sql("SELECT v FROM gold.multi_t WHERE id = 3").head().getString(0) === "C")
     cat.dropTable("gold", "multi_t")
+  }
+
+  test("SQL reads a gold commit made straight through the TxLog, with no re-registration") {
+    import spark.implicits._
+    val cat = GoldCatalog(spark, tmpDir("catalog_stale"))
+    cat.ensureDatabases()
+    cat.saveAsTable(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), "gold", "stale_t")
+    assert(spark.sql("SELECT count(*) FROM gold.stale_t").head().getLong(0) === 2L)
+    cat.txlog("gold", "stale_t").append(Seq((3L, "c")).toDF("id", "v"))
+    assert(spark.sql("SELECT count(*) FROM gold.stale_t").head().getLong(0) === 3L)
+    cat.dropTable("gold", "stale_t")
+  }
+
+  test("a gold commit runs no catalog DDL: GoldCatalog.mergeInto costs what TxLog.merge costs") {
+    import spark.implicits._
+    val cat = GoldCatalog(spark, tmpDir("catalog_noddl"))
+    cat.ensureDatabases()
+    val seed = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    val change = Seq((2L, "B"), (3L, "c")).toDF("id", "v")
+    val plain = TxLog(spark, tmpDir("catalog_noddl_plain"))
+    plain.overwrite(seed)
+    cat.saveAsTable(seed, "gold", "noddl_t")
+    // DDL shows up as a command node: CreateTable / CreateViewCommand /
+    // DropTableCommand / … in the executed query's analyzed plan
+    val ddl = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      private def record(qe: org.apache.spark.sql.execution.QueryExecution): Unit =
+        qe.analyzed.foreach { p =>
+          if (p.nodeName.matches("(Create|Drop).*(Table|View).*")) ddl.add(p.nodeName)
+        }
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit = record(qe)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = record(qe)
+    }
+    val plainJobs = jobsOf(plain.merge(change, Seq("id")))
+    spark.listenerManager.register(listener)
+    val goldJobs = try jobsOf(cat.mergeInto("gold", "noddl_t", change, Seq("id")))
+      finally spark.listenerManager.unregister(listener)
+    assert(goldJobs === plainJobs)
+    assert(ddl.isEmpty, s"catalog DDL during a gold commit: $ddl")
+    assert(spark.sql("SELECT v FROM gold.noddl_t WHERE id = 2").head().getString(0) === "B")
+    cat.dropTable("gold", "noddl_t")
+  }
+
+  test("a new session reads a gold table committed through GoldCatalog") {
+    import spark.implicits._
+    val cat = GoldCatalog(spark, tmpDir("catalog_newsession"))
+    cat.ensureDatabases()
+    cat.saveAsTable(Seq((1L, "a")).toDF("id", "v"), "gold", "newsess_t")
+    cat.mergeInto("gold", "newsess_t", Seq((2L, "b")).toDF("id", "v"), Seq("id"))
+    val other = spark.newSession()
+    assert(other.sql("SELECT count(*) FROM gold.newsess_t").head().getLong(0) === 2L)
+    cat.dropTable("gold", "newsess_t")
   }
 
   test("KeyMode.Faithful: unique keys above maxKey (reference mono-id semantics)") {

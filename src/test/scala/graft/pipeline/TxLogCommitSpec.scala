@@ -143,11 +143,11 @@ class TxLogCommitSpec extends SparkTestBase {
       val head = t.currentVersion()
       val other = TxLog(spark, t.root)
       var fired = false
-      t.onCommitAttempt = () => if (!fired) {
+      t.beforePublish = () => if (!fired) {
         fired = true
         other.append(Seq((winnerId, "winner")).toDF("id", "v"))
       }
-      val out = try run(t) finally t.onCommitAttempt = () => ()
+      val out = try run(t) finally t.beforePublish = () => ()
       assert(fired, s"$name never reached a commit attempt")
       val ids = t.snapshot().select("id").as[Long].collect().toSet
       assert(ids.contains(winnerId), s"$name lost the winner's row")

@@ -551,18 +551,6 @@ class TxLogSpec extends SparkTestBase {
     assert(out.filter(col("score") > 0).count() === 0)
   }
 
-  test("snapshotSql reproduces snapshot semantics: tags filtered, evolution null-filled") {
-    val t = fresh("sql_view")
-    t.overwritePartitioned(Seq(("a", 1L), ("b", 2L)).toDF("day", "id"), "day")
-    // partitioned merge → multi-dir snapshot with per-dir tags, plus a
-    // schema-evolved append
-    t.mergePartitioned(Seq(("a", 3L)).toDF("day", "id"), Seq("id"), "day")
-    val viaSql = spark.sql(t.snapshotSql()).collect()
-      .map(r => r.getLong(1) -> r.getString(0)).toMap
-    assert(viaSql === Map(1L -> "a", 2L -> "b", 3L -> "a"))
-    assert(spark.sql(t.snapshotSql()).count() === t.snapshot().count())
-  }
-
   test("txn-keyed commits are exactly-once: redelivered batches skip, appends never duplicate") {
     val t = fresh("txn")
     val app = Some(("writerA", 0L))
@@ -1356,17 +1344,6 @@ class TxLogSpec extends SparkTestBase {
       === Array(1L, 3L, 4L))
   }
 
-  test("snapshotSql reproduces merge-on-read deletes for the catalog view path") {
-    val t = fresh("mor_sql")
-    t.overwrite((1L to 5L).map(i => (i, i * 10L)).toDF("id", "amt"))
-    t.append((6L to 8L).map(i => (i, i * 10L)).toDF("id", "amt"))
-    t.deleteWhere("amt >= 40 AND amt <= 60")
-    val viaSql = spark.sql(t.snapshotSql()).select("id").as[Long].collect().sorted
-    val viaSnapshot = t.snapshot().select("id").as[Long].collect().sorted
-    assert(viaSql === viaSnapshot)
-    assert(viaSnapshot === Array(1L, 2L, 3L, 7L, 8L))
-  }
-
   test("merge-on-read delete on a schema-evolved table: missing column reads null") {
     val t = fresh("mor_evolve")
     t.overwrite(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
@@ -1420,9 +1397,10 @@ class TxLogSpec extends SparkTestBase {
     // a later append speaks the new schema and lands under the mapping
     t.append(Seq((4L, "d")).toDF("id", "amount"))
     assert(t.snapshot().filter(col("amount") === "d").count() === 1)
-    // snapshotSql exposes the mapped names too
-    assert(spark.sql(t.snapshotSql()).columns.toSeq === Seq("id", "amount"))
-    assert(spark.sql(t.snapshotSql()).count() === 4)
+    // a SQL read of the registered name exposes the mapped names too
+    graft.sql.TxLogSql.register("txlog_colmap_sql", t)
+    assert(spark.table("txlog_colmap_sql").columns.toSeq === Seq("id", "amount"))
+    assert(spark.table("txlog_colmap_sql").count() === 4)
   }
 
   test("column mapping: renaming a STATS column keeps range skipping alive (physical keys)") {
@@ -1556,8 +1534,9 @@ class TxLogSpec extends SparkTestBase {
     assert(t.snapshotDataDirs(vE).sorted === dirsBefore.sorted)
     // reads identical: the v0 dir's dead day=b row must NOT resurrect
     assert(rowsOf(t.snapshot()) === before)
-    // the catalog-SQL read path agrees (scheme-qualified tags in SQL)
-    assert(rowsOf(spark.sql(t.snapshotSql())) === before)
+    // the SQL read of the registered name agrees
+    graft.sql.TxLogSql.register("txlog_evolve_read", t)
+    assert(rowsOf(spark.table("txlog_evolve_read")) === before)
     // time travel: the pre-evolution version still reads its own scheme
     assert(rowsOf(t.snapshot(vE - 1)) === before)
     // guards: same column refused, absent column refused
@@ -1650,7 +1629,7 @@ class TxLogSpec extends SparkTestBase {
     // deterministic race: after t's fold reads day=a and writes its
     // result dir, a concurrent writer merges day=c and wins version 1
     var fired = false
-    t.onCommitAttempt = () => if (!fired) {
+    t.beforePublish = () => if (!fired) {
       fired = true
       other.mergePartitioned(Seq(("c", 3L, "C3"), ("c", 6L, "c6"))
         .toDF("day", "id", "v"), Seq("id"), "day")
@@ -1658,7 +1637,7 @@ class TxLogSpec extends SparkTestBase {
     val before = dataDirCount(t)
     val v = try t.mergePartitioned(Seq(("a", 1L, "A1")).toDF("day", "id", "v"),
       Seq("id"), "day")
-    finally t.onCommitAttempt = () => ()
+    finally t.beforePublish = () => ()
     // the loser REBASED onto the winner's head: version 2, and exactly
     // TWO new data dirs exist (one fold per writer) — a full re-merge
     // retry would have abandoned t's first dir and written a third
@@ -1678,7 +1657,7 @@ class TxLogSpec extends SparkTestBase {
       .toDF("day", "id", "v"), "day")
     val other = TxLog(spark, t.root)
     var fired = false
-    t.onCommitAttempt = () => if (!fired) {
+    t.beforePublish = () => if (!fired) {
       fired = true
       other.mergePartitioned(Seq(("a", 1L, "OTHER")).toDF("day", "id", "v"),
         Seq("id"), "day")
@@ -1686,7 +1665,7 @@ class TxLogSpec extends SparkTestBase {
     val before = dataDirCount(t)
     val v = try t.mergePartitioned(Seq(("a", 5L, "t5")).toDF("day", "id", "v"),
       Seq("id"), "day")
-    finally t.onCommitAttempt = () => ()
+    finally t.beforePublish = () => ()
     assert(v === 2L)
     // same partition touched → the fold re-ran against the winner's
     // snapshot: three new dirs (winner's, t's abandoned first attempt,

@@ -283,21 +283,19 @@ class TxLogSqlSpec extends SparkTestBase {
     assert(e.getMessage.contains("without key columns"))
   }
 
-  test("SQL DML works against a CATALOG-registered gold table and re-points its registration") {
+  test("SQL DML works against a GoldCatalog gold table, and each read sees the latest commit") {
     val cat = GoldCatalog(spark, tmpDir("txsql_gold_wh"))
     cat.ensureDatabases()
     cat.saveAsTable(Seq((1L, "alpha", 10.0), (2L, "beta", 20.0))
       .toDF("id", "name", "bal"), "gold", "dim_txsql")
-    // the analyzer resolves gold.dim_txsql to the catalog LOCATION
-    // table; the DML rule traces the scan path back to the TxLog root
+    // gold.dim_txsql resolves through the name registry to its TxLog
     Seq((2L, "BETA", 99.0), (3L, "gamma", 30.0)).toDF("id", "name", "bal")
       .createOrReplaceTempView("txsql_gold_src")
     spark.sql("""
       MERGE INTO gold.dim_txsql t USING txsql_gold_src s ON t.id = s.id
       WHEN MATCHED THEN UPDATE SET *
       WHEN NOT MATCHED THEN INSERT *""")
-    // SELECT through the CATALOG (not the rule) sees the merged state:
-    // the commit hook re-pointed the registration at the new snapshot
+    // a read after the SQL commit sees the merged state
     val afterMerge = spark.table("gold.dim_txsql").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(afterMerge === Map(1L -> "alpha", 2L -> "BETA", 3L -> "gamma"))
@@ -312,11 +310,73 @@ class TxLogSqlSpec extends SparkTestBase {
     // INSERT routed through the LOG, not into the snapshot dir: the
     // pre-insert version must NOT contain the inserted row
     assert(t.snapshot(2).collect().map(_.getLong(0)).toSet === Set(1L, 2L, 3L))
-    // time travel through the CATALOG name (the hint-batch rule must
-    // substitute before the built-in resolver rejects v1 tables)
+    // time travel through the gold name
     assert(spark.sql("SELECT count(*) FROM gold.dim_txsql VERSION AS OF 0")
       .head().getLong(0) === 2L)
     cat.dropTable("gold", "dim_txsql")
+  }
+
+  test("a 3-part spark_catalog.gold name reads and merges the gold table") {
+    val cat = GoldCatalog(spark, tmpDir("txsql_gold3_wh"))
+    cat.ensureDatabases()
+    cat.saveAsTable(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), "gold", "dim_txsql3")
+    assert(spark.sql("SELECT count(*) FROM spark_catalog.gold.dim_txsql3")
+      .head().getLong(0) === 2L)
+    Seq((2L, "B"), (3L, "c")).toDF("id", "v").createOrReplaceTempView("txsql_gold3_src")
+    spark.sql("""
+      MERGE INTO spark_catalog.gold.dim_txsql3 t USING txsql_gold3_src s
+      ON t.id = s.id
+      WHEN MATCHED THEN UPDATE SET *
+      WHEN NOT MATCHED THEN INSERT *""")
+    assert(cat.txlog("gold", "dim_txsql3").currentVersion() === 1L)
+    val rows = spark.sql("SELECT id, v FROM spark_catalog.gold.dim_txsql3").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(rows === Map(1L -> "a", 2L -> "B", 3L -> "c"))
+    cat.dropTable("gold", "dim_txsql3")
+  }
+
+  test("SELECT * of a registered name equals snapshot() for every read-semantics shape") {
+    // each shape: a table whose snapshot() applies one of the read
+    // rules a plain parquet scan of its dirs would get wrong
+    def partitioned(t: TxLog): Unit = {
+      t.overwritePartitioned(Seq(("a", "r1", 1L, "x1"), ("a", "r2", 2L, "x2"),
+        ("b", "r1", 3L, "x3"), ("c", "r2", 4L, "x4")).toDF("day", "region", "id", "v"), "day")
+      // pruned merge on day=b: the first dir stays live for a,c only —
+      // its day=b row (id=3 "x3") is dead, superseded by "X3"
+      t.mergePartitioned(Seq(("b", "r1", 3L, "X3")).toDF("day", "region", "id", "v"),
+        Seq("id"), "day")
+    }
+    val shapes: Seq[(String, TxLog => Unit)] = Seq(
+      "partition tags, dead partitions of a multi-tagged dir" -> partitioned,
+      "NULL-fill after additive evolution" -> { t =>
+        t.overwrite(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+        t.append(Seq((3L, "c", 30.0)).toDF("id", "v", "score"))
+      },
+      "merge-on-read deletes" -> { t =>
+        t.overwrite((1L to 5L).map(i => (i, i * 10L)).toDF("id", "amt"))
+        t.append((6L to 8L).map(i => (i, i * 10L)).toDF("id", "amt"))
+        t.deleteWhere("amt >= 40 AND amt <= 60")
+      },
+      "column-mapped names" -> { t =>
+        t.overwrite(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+        t.append(Seq((3L, "c")).toDF("id", "v"))
+        t.renameColumn("v", "amount")
+        t.append(Seq((4L, "d")).toDF("id", "amount"))
+      },
+      "evolved partition scheme" -> { t =>
+        partitioned(t)
+        t.evolvePartitioning("region")
+      })
+    def bag(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.map(_.toSeq).groupBy(identity).map { case (r, rs) => r -> rs.size }
+    shapes.zipWithIndex.foreach { case ((shape, build), i) =>
+      val t = fresh(s"readshape_$i")
+      build(t)
+      TxLogSql.register(s"txsql_readshape_$i", t)
+      val viaSql = spark.sql(s"SELECT * FROM txsql_readshape_$i")
+      assert(viaSql.columns.toSeq === t.snapshot().columns.toSeq, shape)
+      assert(bag(viaSql) === bag(t.snapshot()), shape)
+    }
   }
 
   test("a registered table resolves inside subquery EXPRESSIONS (IN / scalar)") {
