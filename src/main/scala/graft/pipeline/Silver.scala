@@ -24,23 +24,25 @@ object Silver {
       .withColumn("model_category", split(col("Model_ID"), "-").getItem(0))
       .withColumn("RevPerUnit", col("Revenue") / col("Units_Sold"))
 
-  /** S5 — silver parquet sink, Hive-partitioned by Year/Month (the
-    * SURVEY §7.5 100 TB posture: silver is the volume table, and both
-    * the incremental ingest and typical analytics are time-scoped, so
-    * Year/Month dirs give partition-pruned scans and let an
-    * incremental batch land as a handful of new partition dirs instead
-    * of rewriting history). Overwrite for a full load; append for an
-    * incremental batch (the bronze watermark guarantees no replays). */
-  def write(silver: DataFrame, path: String, mode: String = "overwrite"): Unit =
-    silver.write.mode(mode).partitionBy("Year", "Month").parquet(path)
+  /** S5 — silver parquet sink, as the reference writes it: one plain
+    * overwrite of one unpartitioned directory
+    * (`df.write.mode("overwrite").parquet(path)`). Silver holds only the
+    * current batch ([[SalesPipeline.run]] overwrites it on every run),
+    * and its readers — the four dimension builds and the fact build —
+    * scan all of it with no Year/Month predicate, so calendar dirs would
+    * prune nothing, while each write task would open one file per
+    * (Year, Month) it sees: 132 small files for a 100k-row load instead
+    * of one per task. A deployment that wants calendar dirs writes
+    * through [[graft.ops.Scale.writePartitioned]]. */
+  def write(silver: DataFrame, path: String): Unit =
+    silver.write.mode("overwrite").parquet(path)
 
   /** Read silver back in the reference's canonical 13-column order.
-    * The schema is supplied explicitly (partition columns included —
-    * Spark matches Year/Month to the discovered dirs by name): this
-    * pins the declared [[Schemas.silver]] ordering/types AND makes a
-    * zero-row silver readable (a partitioned overwrite of an empty
-    * batch leaves no files to infer from, which is legal state after
-    * an already-seen batch replays to nothing). */
+    * The schema is supplied explicitly: it pins the declared
+    * [[Schemas.silver]] ordering and types rather than trusting the
+    * files' footers, and it keeps the read independent of what a
+    * zero-row batch (an already-seen batch replays to nothing) leaves
+    * on disk to infer a schema from. */
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(Schemas.silver).parquet(path)
       .select(Schemas.silver.fieldNames.map(col).toSeq: _*)

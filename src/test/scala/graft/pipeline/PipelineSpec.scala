@@ -20,9 +20,10 @@ class PipelineSpec extends SparkTestBase {
     p
   }
 
+  private val goldTables = DimensionBuilder.specs.map(_.name) :+ "factsales"
+
   private def counts: Map[String, Long] =
-    (DimensionBuilder.specs.map(_.name) :+ "factsales")
-      .map(n => n -> pipe.table(n).count()).toMap
+    goldTables.map(n => n -> pipe.table(n).count()).toMap
 
   test("full load reproduces every BASELINE row count") {
     assert(counts === Map(
@@ -34,6 +35,17 @@ class PipelineSpec extends SparkTestBase {
     pipe // force full load
     val silver = Silver.read(spark, s"$root/warehouse/silver/carsales")
     assert(silver.schema === Schemas.silver)
+  }
+
+  test("silver lands flat: no partition dirs, at most one file per bronze scan task") {
+    pipe
+    val entries = new java.io.File(s"$root/warehouse/silver/carsales").listFiles().toSeq
+    assert(entries.filter(_.isDirectory).map(_.getName) === Seq.empty)
+    // silver is a narrow transform of the bronze scan, so each scan task
+    // writes at most one file
+    val files = entries.count(_.getName.endsWith(".parquet"))
+    val tasks = Ingest.readBronze(spark, s"$root/bronze/rawdata").rdd.getNumPartitions
+    assert(files >= 1 && files <= tasks, s"$files silver files from $tasks bronze scan tasks")
   }
 
   test("derived columns match the reference's golden outputs") {
@@ -228,5 +240,50 @@ class PipelineSpec extends SparkTestBase {
     val before = versions
     p.run(carsales("IncrementalSalesUpdate.csv"))
     assert(versions === before)
+  }
+
+  test("an empty incremental batch leaves a zero-row silver with the declared schema") {
+    val root = tmpDir("pipeline_empty_batch")
+    val p = SalesPipeline(spark, root)
+    p.run(carsales("IncrementalSales.csv"))
+    val src = scala.io.Source.fromFile(carsales("SalesData.csv"), "UTF-8")
+    val header = try src.getLines().next() finally src.close()
+    val csv = java.nio.file.Paths.get(root, "csv", "header_only.csv")
+    java.nio.file.Files.createDirectories(csv.getParent)
+    java.nio.file.Files.writeString(csv, header + "\n")
+    p.run(csv.toString)
+    val silver = Silver.read(spark, s"$root/warehouse/silver/carsales")
+    assert(silver.count() === 0L)
+    assert(silver.schema === Schemas.silver)
+  }
+
+  /** Each gold table, as a bag of rows, after the fixture replay (full
+    * load, inc1, inc2, replay of inc2) into a fresh root. */
+  private def replayGold(name: String): Map[String, Map[org.apache.spark.sql.Row, Int]] = {
+    val p = SalesPipeline(spark, tmpDir(name))
+    Seq("SalesData.csv", "IncrementalSales.csv", "IncrementalSalesUpdate.csv",
+      "IncrementalSalesUpdate.csv").foreach(f => p.run(carsales(f)))
+    goldTables.map(t => t -> p.table(t).collect().toSeq.groupBy(identity).map {
+      case (r, rs) => r -> rs.size
+    }).toMap
+  }
+
+  private lazy val defaultReplay = replayGold("pipeline_conf_default")
+
+  // The answer must not depend on how the work is split: shuffle
+  // partition counts, AQE, and scan splits small enough that the CSV,
+  // bronze and silver scans each run in many tasks.
+  Seq(
+    "spark.sql.shuffle.partitions" -> "1",
+    "spark.sql.shuffle.partitions" -> "3",
+    "spark.sql.shuffle.partitions" -> "17",
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.files.maxPartitionBytes" -> "16k"
+  ).zipWithIndex.foreach { case ((k, v), i) =>
+    test(s"property: fixture replay gives the default conf's gold under $k=$v") {
+      val expected = defaultReplay
+      val got = withConf(k -> v)(replayGold(s"pipeline_conf_$i"))
+      goldTables.foreach(t => assert(got(t) === expected(t), s"gold.$t differs"))
+    }
   }
 }
