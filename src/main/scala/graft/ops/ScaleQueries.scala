@@ -269,9 +269,9 @@ object ScaleQueries {
     // code (pure column math — no partitioner dependence), and emit
     // per-bucket extents of BOTH dimensions. Z-locality means each
     // bucket's (partkey, suppkey) bounding box is tight on BOTH axes —
-    // the multi-dimensional analogue of TxLog.compactClustered's 1-D
-    // range clustering, and the layout that lets min/max data skipping
-    // prune on either dimension. The extent columns ARE the skipping
+    // the layout TxLog.compactZOrder writes (there from global-rank
+    // codes), which lets min/max data skipping prune on either
+    // dimension. The extent columns ARE the skipping
     // metadata; the oracle recomputes the identical integer geometry.
     Q("scale_zorder_cluster", (spark, dir) => {
       val a = col("l_partkey").bitwiseAND(lit(0xFFFFL))

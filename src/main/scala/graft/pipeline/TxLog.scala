@@ -39,10 +39,8 @@ import org.apache.spark.sql.types.StructType
 final case class TxLog(spark: SparkSession, root: String,
                        statsCols: Seq[String] = Nil,
                        bloomCols: Seq[String] = Nil,
-                       bloomBits: Int = 4096,
                        checkConstraints: Seq[(String, String)] = Nil,
-                       generatedCols: Seq[(String, String)] = Nil,
-                       targetFileBytes: Long = 128L << 20) {
+                       generatedCols: Seq[(String, String)] = Nil) {
 
   // CHECK constraints are manifest header lines (one per `\t`-free SQL
   // predicate); reject undeclarable ones at construction, not commit
@@ -1554,7 +1552,7 @@ final case class TxLog(spark: SparkSession, root: String,
 
   /** OPTIMIZED WRITE (Delta's `optimizedWrite` parity): right-size the
     * dir's file count from the plan's size estimate so each task
-    * writes roughly one [[targetFileBytes]] file, instead of
+    * writes roughly one [[TxLog.TargetFileBytes]] file, instead of
     * inheriting the upstream partitioning (at 100 TB the alternative
     * is a shuffle's worth of tiny files per commit; locally it is 32
     * near-empty files per dir that every later stats/bloom/snapshot
@@ -1565,18 +1563,15 @@ final case class TxLog(spark: SparkSession, root: String,
     * at least the session's shuffle parallelism, the frame is left
     * untouched, so genuinely large writes keep their width and the
     * extra shuffle never exceeds one target file per task.
-    * `targetFileBytes <= 0` disables (layout-controlled rewrites —
-    * bucketed/clustered/packed — bypass via `sized = false`). */
-  private def sizedForWrite(df: DataFrame): DataFrame =
-    if (targetFileBytes <= 0) df
-    else {
-      val est = org.apache.spark.sql.graft.GraftSqlBridge.planSizeBytes(df)
-      // catalyst sizeInBytes is the in-memory width — parquet encoding
-      // + compression lands near a third of it
-      val n = est / 3 / targetFileBytes + 1
-      val cur = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-      if (n < cur) df.repartition(n.toInt) else df
-    }
+    * Layout-controlled rewrites ([[pack]]) bypass it via `sized = false`. */
+  private def sizedForWrite(df: DataFrame): DataFrame = {
+    val est = org.apache.spark.sql.graft.GraftSqlBridge.planSizeBytes(df)
+    // catalyst sizeInBytes is the in-memory width — parquet encoding
+    // + compression lands near a third of it
+    val n = est / 3 / TxLog.TargetFileBytes + 1
+    val cur = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
+    if (n < cur) df.repartition(n.toInt) else df
+  }
 
   /** Write `df` fully into a fresh uuid data dir (no manifest yet —
     * unreferenced dirs are invisible to readers and GC'd by vacuum).
@@ -1633,12 +1628,12 @@ final case class TxLog(spark: SparkSession, root: String,
     * dir — the POINT-LOOKUP complement of min/max ranges (a needle key
     * in a 100 TB table prunes to the handful of dirs whose filter
     * fires, where a [min,max] band over a high-NDV key prunes
-    * nothing). Geometry: [[bloomBits]] bits (self-describing in the
+    * nothing). Geometry: [[TxLog.BloomBits]] bits (self-describing in the
     * manifest hex — readers derive it per line), 3 hashes =
     * `xxhash64(i, CAST(col AS STRING))` for i in 0..2 — the hash runs
     * INSIDE codegen on the executors; the driver replays the same
     * expression per probe. Build cost: one `bit_or` aggregation per
-    * commit collapsing to `bloomBits/64` word rows — metadata-sized,
+    * commit collapsing to `BloomBits/64` word rows — metadata-sized,
     * like [[statsFor]]'s agg. Size for ~10 bits per distinct key per
     * dir (~1% fp); an undersized filter saturates and degrades to
     * "open the dir" — conservative, never wrong. */
@@ -1652,13 +1647,13 @@ final case class TxLog(spark: SparkSession, root: String,
         .filter(c => df.schema.exists(_.name == c)).flatMap { c =>
         val words = df.filter(col(c).isNotNull)
           .select(explode(array((0 until BloomHashes).map(i =>
-            pmod(xxhash64(lit(i), col(c).cast("string")), lit(bloomBits.toLong))): _*))
+            pmod(xxhash64(lit(i), col(c).cast("string")), lit(TxLog.BloomBits.toLong))): _*))
             .as("i"))
           .select((col("i") / 64).cast("int").as("w"),
             expr("shiftleft(CAST(1 AS BIGINT), CAST(i % 64 AS INT))").as("m"))
           .groupBy(col("w")).agg(bit_or(col("m")).as("bits"))
           .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-        val packed = Array.tabulate(bloomBits / 64)(w => words.getOrElse(w, 0L))
+        val packed = Array.tabulate(TxLog.BloomBits / 64)(w => words.getOrElse(w, 0L))
         Some((uuid, c) -> packed.map(w => f"$w%016x").mkString)
       }.toMap
     }
@@ -3356,20 +3351,19 @@ final case class TxLog(spark: SparkSession, root: String,
     }
   }
 
-  /** OPTIMIZE-style compaction commit: rewrite the current snapshot as
-    * one fresh data dir. Append-built and partition-merged tables
-    * accumulate a dir per batch — readers then pay per-dir listing and
-    * small-file overhead; compaction folds them into one dir in a
-    * normal versioned commit (no data change; time travel still
-    * reaches the fragmented layout until [[vacuum]] reclaims it).
-    * Partition tags survive: a tagged table is re-tagged from the
-    * compacted data. */
-  def compact(): Long = {
-    require(exists(), s"TxLog table at $root has no commits to compact")
-    val pc = readManifestFull(currentVersion()).partCol
-    val snap = snapshot().localCheckpoint(true)
-    pc.fold(overwrite(snap))(c => overwritePartitioned(snap, c))
-  }
+  /** OPTIMIZE-style full compaction ([[pack]]): rewrite EVERY entry
+    * into fresh dirs, one per [[TxLog.TargetFileBytes]] of input (at
+    * least one), range-clustered on the partition column or the first
+    * stats column. It folds the dir-per-batch layout of append-built
+    * and partition-merged tables in a versioned commit recorded as
+    * `OVERWRITE` (time travel reaches the old layout until [[vacuum]]).
+    * It always commits, and materializes everything reads resolve
+    * through the manifest: deletion vectors, column mapping (logical
+    * names become physical, the map resets), an evolved partition
+    * scheme (dirs re-tagged under the current column) and a shallow
+    * clone's references to its source. Table metadata (`#txn`,
+    * `#check`, `#copied`, `#prop`) carries. */
+  def compact(): Long = pack("OVERWRITE", debt = None, TxLog.BySize(TxLog.TargetFileBytes))
 
   /** On-disk bytes of a data dir — OPTIMIZE's packing metric. A
     * driver-side metadata listing, not a data read. */
@@ -3408,8 +3402,11 @@ final case class TxLog(spark: SparkSession, root: String,
     * because reads resolve per entry. A scoped pass does NOT purge
     * such a split dir's deletion vectors (the dir survives for its
     * carried entries); a table-wide pass does. */
-  def compactSmallFiles(targetBytes: Long, parts: Seq[String] = Nil): Long =
-    packImpl(targetBytes, parts, dvOnly = false)
+  def compactSmallFiles(targetBytes: Long, parts: Seq[String] = Nil): Long = {
+    require(targetBytes > 0, s"targetBytes must be positive (got $targetBytes)")
+    pack("OPTIMIZE", Some(TxLog.Debt(targetBytes, parts, dvOnly = false)),
+      TxLog.BySize(targetBytes))
+  }
 
   /** `REORG TABLE … APPLY (PURGE)` — materialize the deletion-vector
     * debt and NOTHING else: only dirs carrying tombstones rewrite
@@ -3425,175 +3422,154 @@ final case class TxLog(spark: SparkSession, root: String,
     * for its carried entries). A table with no tombstones is a
     * version-preserving no-op. */
   def purgeDeletes(parts: Seq[String] = Nil): Long =
-    packImpl(targetFileBytes, parts, dvOnly = true)
+    pack("OPTIMIZE", Some(TxLog.Debt(TxLog.TargetFileBytes, parts, dvOnly = true)),
+      TxLog.BySize(TxLog.TargetFileBytes))
 
-  private def packImpl(targetBytes: Long, parts: Seq[String],
-                       dvOnly: Boolean): Long = {
-    require(exists(), s"TxLog table at $root has no commits to compact")
-    require(targetBytes > 0, s"targetBytes must be positive (got $targetBytes)")
-    commit("OPTIMIZE")((_, prev) => packAttempt(targetBytes, parts, dvOnly, prev))
+  /** Z-ORDER compaction — the liquid-clustering move: rewrite every
+    * entry as `nBuckets` dirs cut by range along the z-curve of
+    * `zCols`, so each dir's committed [min,max] is tight on EVERY
+    * listed column at once and [[snapshotRangeOn]] prunes dirs for
+    * predicates on ANY of them. One column's z-curve is its own order:
+    * the dirs are disjoint slices of it, and [[snapshotRange]] skips all
+    * but the matching bucket(s). For 2+ columns the codes are
+    * per-column GLOBAL RANKS — the two-phase range-partitioned rank,
+    * so arbitrary value distributions interleave uniformly and no step
+    * funnels through one task. Code width is min(16, 62/n) bits per
+    * column: the interleaved word must stay inside a signed long's
+    * non-negative range (bit 63 would flip the sign and misorder the
+    * range partitioner; an index ≥ 64 would silently alias through the
+    * JVM's mod-64 shift), so 4+ columns trade per-column resolution
+    * for column count — the standard z-order curve trade.
+    * `zCols` must be tracked stats columns (the layout is only useful
+    * through the stats that skip on it). A partition-tagged head is
+    * refused (one physical clustering per table). Like [[compact]], a
+    * [[pack]] of every entry; recorded as `COMPACTZORDER`. */
+  def compactZOrder(zCols: Seq[String], nBuckets: Int): Long = {
+    require(zCols.nonEmpty, "compactZOrder needs at least one column")
+    require(zCols.forall(statsCols.contains),
+      s"compactZOrder columns must all be in statsCols (got $zCols vs $statsCols)")
+    pack("COMPACTZORDER", debt = None, TxLog.ByZOrder(zCols, nBuckets))
   }
 
-  /** One attempt of [[packImpl]] against the head manifest `prev`. */
-  private def packAttempt(targetBytes: Long, parts: Seq[String], dvOnly: Boolean,
-                          prev: Manifest): Option[Manifest] = {
-    import org.apache.spark.sql.functions.{col, spark_partition_id}
-    require(parts.isEmpty || prev.partCol.nonEmpty,
-      "partition-scoped OPTIMIZE requires a partition-tagged table")
-    val scope: Option[Set[String]] = if (parts.isEmpty) None else Some(parts.toSet)
-    // under a scope, a None-tagged entry (dir covers the whole
-    // table) never packs — it spans partitions outside the scope
-    def inScope(tag: Option[String]): Boolean =
-      scope.forall(s => tag.exists(s))
+  /** THE layout rewrite every compaction form calls. Each attempt runs
+    * inside [[commit]], so it rewrites rows read from the head it
+    * publishes over and a concurrent append carries through. `debt`
+    * None rewrites every entry under the visible names into the
+    * [[rewritten]] shape (mapping, deletion vectors and foreign tags
+    * materialize) and always commits; `Some(d)` rewrites
+    * [[TxLog.Debt]] `d`'s entries under their stored names, keeps the
+    * mapping, [[carried]] the rest, and commits nothing without debt.
+    * Each non-empty bucket of `cut` becomes one dir with fresh stats,
+    * Blooms and partition tags from its data. */
+  private def pack(op: String, debt: Option[TxLog.Debt], cut: TxLog.Cut): Long = {
+    require(exists(), s"TxLog table at $root has no commits to compact")
+    commit(op)((_, prev) => packAttempt(prev, debt, cut))
+  }
+
+  /** One attempt of [[pack]] against the head manifest `prev`. */
+  private def packAttempt(prev: Manifest, debt: Option[TxLog.Debt],
+                          cut: TxLog.Cut): Option[Manifest] = {
+    import org.apache.spark.sql.functions.{col, lit, spark_partition_id}
     val sizes = prev.dirs.map(d => d -> dirSize(d)).toMap
-    // deletion-vector debt counts as packing debt: rewriting a
-    // tombstoned dir MATERIALIZES its deletes (survivors only, lines
-    // dropped) — Delta's OPTIMIZE-purges-DVs behavior
-    val dvDirs = prev.dirs.filter(d =>
-      prev.tombstones.get(d).exists(_.nonEmpty)).toSet
-    val packable = prev.entries.filter { case (d, t) =>
-      (if (dvOnly) dvDirs(d)
-       else sizes(d) < targetBytes || dvDirs(d)) && inScope(t) }
-    val packDirs = packable.map(_._1).distinct
-    // no size debt (≤1 small dir cannot pack better) and no deletion
-    // debt — no version churn
-    if (packDirs.size <= 1 && packDirs.forall(!dvDirs(_))) return None
-    val carry = prev.entries.filterNot(packable.contains)
-    // allowMissingColumns: small dirs may span a SCHEMA EVOLUTION —
-    // the same additive-widening semantics every read path uses
-    val rows = packable
-      .groupBy(_._1).toSeq.sortBy(_._1).map { case (d, es) =>
-        val base = dirVisibleRows(prev.tombstones, d)
-        tagFilter(prev.partCol, es.map(_._2)).fold(base)(base.filter)
-      }.reduce(_.unionByName(_, allowMissingColumns = true))
-    val k = math.max(1L, packDirs.map(sizes).sum / targetBytes).toInt
-    // `rows` is physical-named (raw dir reads) — resolve the writer's
-    // logical cluster column through the map; partCol is physical
-    val clusterCol = prev.partCol.orElse(
-      statsCols.headOption.map(physicalOf(prev.colMap, _)))
-    val packed = clusterCol.fold(rows.repartition(k))(c =>
-        rows.repartitionByRange(k, col(c)))
-      .withColumn("__bucket", spark_partition_id())
-      .localCheckpoint(true)
-    val uuids = (0 until k).flatMap { b =>
-      val part = packed.filter(col("__bucket") === b).drop("__bucket")
-      if (part.isEmpty) None else Some(writeDataDir(part, sized = false))
+    val picked = debt.fold(prev.entries)(debtEntries(prev, _, sizes))
+    if (picked.isEmpty) return None
+    val carry = prev.entries.filterNot(picked.contains)
+    // a whole rewrite stores the VISIBLE names (the mapping
+    // materializes); a partial one keeps the stored names, so its dirs
+    // sit under the same mapping as the carried ones
+    val whole = debt.isEmpty
+    val colMap = if (whole) Nil else prev.colMap
+    val partCol = if (whole) prev.partCol.map(logicalOf(prev.colMap, _)) else prev.partCol
+    val rows = readChosen(if (whole) prev else prev.copy(colMap = Nil), picked)
+    val (cutRows, k) = cut match {
+      case TxLog.BySize(targetBytes) =>
+        val k = math.max(1L, picked.map(_._1).distinct.map(sizes).sum / targetBytes).toInt
+        val c = (partCol ++ statsCols.map(physicalOf(colMap, _))).find(rows.columns.contains)
+        (c.fold(rows.repartition(k))(c => rows.repartitionByRange(k, col(c))), k)
+      case TxLog.ByZOrder(cols, n) =>
+        require(prev.partCol.isEmpty,
+          "z-order compaction on a partition-tagged table is unsupported")
+        (zOrdered(rows, cols.map(physicalOf(colMap, _)), n), n)
     }
-    val stats = uuids.map(statsFor(_, prev.colMap))
+    val uuids =
+      if (k == 1) Seq(writeDataDir(cutRows, sized = false))
+      else {
+        val bucketed = cutRows.withColumn("__bucket", spark_partition_id())
+          .localCheckpoint(true)
+        // non-empty buckets in one pass over the checkpoint, no shuffle
+        val live = bucketed.select("__bucket").rdd
+          .mapPartitions(_.map(_.getInt(0)).toSet.iterator).collect().distinct.sorted
+        live.toSeq.map(b => writeDataDir(
+          bucketed.filter(col("__bucket") === b).drop("__bucket"), sized = false))
+      }
+    val stats = uuids.map(statsFor(_, colMap))
     // packed rows may include NULL partition values (from a degraded
     // untagged append): such a packed dir stays untagged
-    val newEntries0 = uuids.flatMap(taggedFromData(_, prev.partCol))
-    // a full merge-on-read wipe leaves every dir dirty and zero
-    // visible rows: keep a zero-row dir referenced (untagged) so the
-    // manifest still resolves to a snapshot — same guard as the
-    // overwritePartitioned/foldCommit empty cases
-    val newEntries =
-      if (newEntries0.isEmpty && carry.isEmpty)
-        Seq((writeDataDir(packed.drop("__bucket")
-          .filter(org.apache.spark.sql.functions.lit(false)), sized = false),
-          Option.empty[String]))
-      else newEntries0
-    val next = carried(prev, carry, newEntries,
-      stats.map(_._1).find(_.nonEmpty).getOrElse(Seq.empty),
-      stats.flatMap(_._2).toMap,
-      uuids.map(bloomsFor(_, prev.colMap)).foldLeft(
-        Map.empty[(String, String), String])(_ ++ _))
+    val added0 = uuids.flatMap(taggedFromData(_, partCol))
+    // a full merge-on-read wipe leaves zero visible rows: keep a
+    // zero-row dir referenced (untagged) so the manifest still resolves
+    // to a snapshot — same guard as the overwritePartitioned/foldCommit
+    // empty cases
+    val added =
+      if (added0.nonEmpty || carry.nonEmpty) added0
+      else Seq((uuids.headOption.getOrElse(
+        writeDataDir(rows.filter(lit(false)), sized = false)), Option.empty[String]))
+    val header = stats.map(_._1).find(_.nonEmpty).getOrElse(Seq.empty)
+    val ranges = stats.flatMap(_._2).toMap
+    val blooms = uuids.map(bloomsFor(_, colMap)).foldLeft(
+      Map.empty[(String, String), String])(_ ++ _)
+    val next =
+      if (whole) rewritten(prev, partCol, added, header, ranges, blooms)
+      else carried(prev, carry, added, header, ranges, blooms)
     val checks = mergedChecks(prev.checks)
-    enforceChecksOnDirs(uuids, checks, prev.colMap)
+    enforceChecksOnDirs(uuids, checks, colMap)
     enforceChecks(entryTagSets(carry, prev.partCol), prev.partCol,
       addedChecks(prev.checks), next.tombstones, prev.colMap)
     Some(next.copy(checks = checks))
   }
 
-  /** Range-CLUSTERED compaction — the 1-D Z-ORDER move: rewrite the
-    * snapshot as `nBuckets` dirs, range-partitioned on the FIRST stats column,
-    * so each dir's committed [min,max] is a tight disjoint slice and
-    * [[snapshotRange]] skips all but the matching bucket(s). Run it
-    * after bulk ingest shuffles values across dirs and skipping
-    * stopped biting. Unsupported on partition-tagged tables (one
-    * physical clustering per table — pick partition pruning OR range
-    * clustering). */
-  def compactClustered(nBuckets: Int): Long = {
-    require(exists(), s"TxLog table at $root has no commits to compact")
-    val c = statsCols.headOption.getOrElse(throw new IllegalArgumentException(
-      "compactClustered needs a statsCols-configured TxLog writer"))
-    require(readManifestFull(currentVersion()).partCol.isEmpty,
-      "clustered compaction on a partition-tagged table is unsupported")
-    import org.apache.spark.sql.functions.{col, spark_partition_id}
-    val snap = snapshot().repartitionByRange(nBuckets, col(c))
-      .withColumn("__bucket", spark_partition_id())
-      .localCheckpoint(true)
-    commitBucketedRewrite(snap, nBuckets, "compactClustered")
+  /** The entries of `prev` carrying [[TxLog.Debt]] `d`, or none when packing
+    * them would not pay: ≤1 small dir cannot pack better, and without
+    * deletion vectors there is nothing to materialize. */
+  private def debtEntries(prev: Manifest, d: TxLog.Debt,
+                          sizes: Map[String, Long]): Seq[(String, Option[String])] = {
+    require(d.parts.isEmpty || prev.partCol.nonEmpty,
+      "partition-scoped OPTIMIZE requires a partition-tagged table")
+    // under a scope, a None-tagged entry (dir covers the whole
+    // table) never packs — it spans partitions outside the scope
+    def inScope(tag: Option[String]): Boolean =
+      d.parts.isEmpty || tag.exists(d.parts.contains)
+    // deletion-vector debt counts as packing debt: rewriting a
+    // tombstoned dir MATERIALIZES its deletes (survivors only, lines
+    // dropped) — Delta's OPTIMIZE-purges-DVs behavior
+    val dvDirs = prev.dirs.filter(x => prev.tombstones.get(x).exists(_.nonEmpty)).toSet
+    val picked = prev.entries.filter { case (x, t) =>
+      (dvDirs(x) || !d.dvOnly && sizes(x) < d.targetBytes) && inScope(t) }
+    val dirs = picked.map(_._1).distinct
+    if (dirs.size <= 1 && dirs.forall(!dvDirs(_))) Nil else picked
   }
 
-  /** Multi-column Z-ORDER compaction — the liquid-clustering move:
-    * rewrite the snapshot ordered by the BIT-INTERLEAVED rank codes of
-    * `zCols`, so each dir's committed [min,max] is tight on EVERY listed
-    * column at once and [[snapshotRangeOn]] prunes dirs for predicates
-    * on ANY of them (1-D [[compactClustered]] only serves its first
-    * column). Codes are per-column GLOBAL RANKS — the two-phase
-    * range-partitioned rank, so arbitrary value distributions
-    * interleave uniformly and no step funnels through one task. Code
-    * width is min(16, 62/n) bits per column: the interleaved word must
-    * stay inside a signed long's non-negative range (bit 63 would flip
-    * the sign and misorder the range partitioner; an index ≥ 64 would
-    * silently alias through the JVM's mod-64 shift), so 4+ columns
-    * trade per-column resolution for column count — the standard
-    * z-order curve trade.
-    * `zCols` must be tracked stats columns (the layout is only useful
-    * through the stats that skip on it). Unsupported on
-    * partition-tagged tables, like [[compactClustered]]. */
-  def compactZOrder(zCols: Seq[String], nBuckets: Int): Long = {
-    require(exists(), s"TxLog table at $root has no commits to compact")
-    require(zCols.size >= 2, "compactZOrder interleaves 2+ columns (use compactClustered for 1)")
-    require(zCols.forall(statsCols.contains),
-      s"compactZOrder columns must all be in statsCols (got $zCols vs $statsCols)")
-    require(readManifestFull(currentVersion()).partCol.isEmpty,
-      "z-order compaction on a partition-tagged table is unsupported")
-    import org.apache.spark.sql.functions.{col, expr, lit, shiftright, spark_partition_id}
-    val n = zCols.size
+  /** `rows` range-partitioned into `n` buckets along the z-curve of
+    * `zCols` (see [[compactZOrder]]); one column ranges on itself. */
+  private def zOrdered(rows: DataFrame, zCols: Seq[String], n: Int): DataFrame = {
+    import org.apache.spark.sql.functions.{col, expr, lit, shiftright}
+    if (zCols.size == 1) return rows.repartitionByRange(n, col(zCols.head))
+    val w = zCols.size
     val ranked = zCols.zipWithIndex.foldLeft(
-      graft.functions.GlobalRank.rowNumber(snapshot(), "__zr0", 32,
+      graft.functions.GlobalRank.rowNumber(rows, "__zr0", 32,
         Seq(col(zCols.head)), totalCol = Some("__zn"))) {
       case (d, (c, j)) if j > 0 =>
         graft.functions.GlobalRank.rowNumber(d, s"__zr$j", 32, Seq(col(c)))
       case (d, _) => d
     }
-    // max interleave index = bits*n - 1 ≤ 61 < the sign bit
-    val bits = math.min(16, 62 / n)
-    val codes = (0 until n).map(j => expr(s"((__zr$j - 1) * ${1L << bits}) div __zn"))
-    val z = (0 until bits).flatMap(i => (0 until n).map(j =>
-        shiftright(codes(j), i).bitwiseAND(lit(1L)) * lit(1L << (i * n + j))))
+    // max interleave index = bits*w - 1 ≤ 61 < the sign bit
+    val bits = math.min(16, 62 / w)
+    val codes = (0 until w).map(j => expr(s"((__zr$j - 1) * ${1L << bits}) div __zn"))
+    val z = (0 until bits).flatMap(i => (0 until w).map(j =>
+        shiftright(codes(j), i).bitwiseAND(lit(1L)) * lit(1L << (i * w + j))))
       .reduce(_ + _)
-    val bucketed = ranked.withColumn("__zz", z)
-      .repartitionByRange(nBuckets, col("__zz"))
-      .withColumn("__bucket", spark_partition_id())
-      .drop((0 until n).map(j => s"__zr$j") ++ Seq("__zn", "__zz"): _*)
-      .localCheckpoint(true)
-    commitBucketedRewrite(bucketed, nBuckets, "compactZOrder")
-  }
-
-  /** Shared tail of the clustered/z-order compactions: write each
-    * `__bucket` slice as its own dir, commit all dirs as the next
-    * version with fresh stats/blooms (validated against the full
-    * constraint set — a compaction rewrites every row anyway). */
-  private def commitBucketedRewrite(snap: DataFrame, nBuckets: Int,
-                                    op: String): Long = {
-    import org.apache.spark.sql.functions.col
-    val uuids = (0 until nBuckets).flatMap { b =>
-      val part = snap.filter(col("__bucket") === b).drop("__bucket")
-      if (part.isEmpty) None else Some(writeDataDir(part, sized = false))
-    }
-    val stats = uuids.map(statsFor(_))
-    val blooms = uuids.map(bloomsFor(_)).foldLeft(
-      Map.empty[(String, String), String])(_ ++ _)
-    val header = stats.map(_._1).find(_.nonEmpty).getOrElse(Seq.empty)
-    commit(op.toUpperCase) { (_, prev) =>
-      val checks = mergedChecks(prev.checks)
-      enforceChecksOnDirs(uuids, checks)
-      Some(rewritten(prev, None, uuids.map(u => (u, None)), header,
-        stats.flatMap(_._2).toMap, blooms).copy(checks = checks))
-    }
+    ranked.withColumn("__zz", z).repartitionByRange(n, col("__zz"))
+      .drop((0 until w).map(j => s"__zr$j") :+ "__zn" :+ "__zz": _*)
   }
 
   /** Garbage-collect data dirs unreferenced by any of the newest
@@ -3709,7 +3685,7 @@ final case class TxLog(spark: SparkSession, root: String,
       require(fs.exists(new Path(dirPath(d))),
         s"cannot clone $root@v$v: data dir $d was vacuumed")
     }
-    val dest = TxLog(spark, destRoot, statsCols, bloomCols, bloomBits)
+    val dest = TxLog(spark, destRoot, statsCols, bloomCols)
     require(!dest.exists(), s"clone destination $destRoot already has commits")
     def abs(d: String): String = dirPath(d)
     // tombstone sidecars clone by absolute reference too; their (file,
@@ -3740,6 +3716,28 @@ object TxLog {
   /** Table property: default `VACUUM … RETAIN n VERSIONS` count when
     * the statement omits the RETAIN clause. */
   val VacuumRetainProp = "graft.vacuum.retainVersions"
+
+  /** Target on-disk bytes of one written data file: the optimized
+    * write's file sizing and the compaction dirs' bucket size. */
+  final val TargetFileBytes: Long = 128L << 20
+
+  /** Bits of every per-dir Bloom filter a commit writes (readers derive
+    * each filter's geometry from its manifest hex). */
+  private final val BloomBits = 4096
+
+  /** The entries a partial [[TxLog!.pack]] rewrites: those of dirs
+    * carrying packing debt — under `targetBytes` on disk (unless
+    * `dvOnly`) or carrying deletion vectors — whose partition tag is in
+    * `parts` (every tag when empty). */
+  private final case class Debt(targetBytes: Long, parts: Seq[String], dvOnly: Boolean)
+
+  /** How [[TxLog!.pack]] cuts the rows it rewrites into dirs. */
+  private sealed trait Cut
+  /** By range on the partition column, else the first stats column,
+    * into one dir per `targetBytes` of input (at least one). */
+  private final case class BySize(targetBytes: Long) extends Cut
+  /** By range along the z-curve of `cols` into `n` dirs. */
+  private final case class ByZOrder(cols: Seq[String], n: Int) extends Cut
 
   /** Parsed stats for the optimizer's scan-prune rule, assembled
     * across manifest versions (dir stats are immutable) and cached per

@@ -47,34 +47,15 @@ object Upsert {
   }
 
   /** Pure merge: returns the post-merge relation. Column sets of target
-    * and src must match (SCD1 "UpdateAll" semantics need all columns).
+    * and src must match (SCD1 "UpdateAll" semantics need all columns);
+    * on matching sets [[mergeEvolve]] evolves nothing, so it is the
+    * merge.
     */
   def merge(target: DataFrame, src: DataFrame, keys: Seq[String],
             strict: Boolean = true): DataFrame = {
     require(target.columns.sorted.sameElements(src.columns.sorted),
       s"merge requires identical column sets; got target=${target.columns.toSeq} src=${src.columns.toSeq}")
-    if (strict) requireUniqueKeys(src, keys, "MERGE source")
-    // Alias-qualified refs: target and src often share lineage (e.g. an
-    // incremental batch derived from the target's own source), so plain
-    // DataFrame column refs would hit the ambiguous-self-join check.
-    val t = target.alias("__t")
-    // broadcast: src is the small incremental side by construction
-    val s = broadcast(src).alias("__s")
-    // plain (non-null-safe) equality: null keys never match, so
-    // null-key source rows insert — matching the reference's `trg.k = src.k`.
-    val cond = keys.map(k => col(s"__t.$k") === col(s"__s.$k")).reduce(_ && _)
-    val matchedFlag = col(s"__s.${keys.head}").isNotNull
-    // whenMatchedUpdateAll: per column, take src value when matched.
-    val updatedOrKept = t.join(s, cond, "left").select(
-      target.columns.map(c =>
-        when(matchedFlag, col(s"__s.$c")).otherwise(col(s"__t.$c")).as(c)).toSeq: _*)
-    // whenNotMatchedInsertAll:
-    val inserts = src.alias("__s2").join(
-        target.select(keys.map(col): _*).alias("__t2"),
-        keys.map(k => col(s"__s2.$k") === col(s"__t2.$k")).reduce(_ && _),
-        "left_anti")
-      .select(target.columns.map(col).toSeq: _*)
-    updatedOrKept.unionByName(inserts)
+    mergeEvolve(target, src, keys, strict)
   }
 
   /** [[merge]] with AUTOMATIC SCHEMA EVOLUTION (Delta's
@@ -84,17 +65,23 @@ object Upsert {
     *   - a target-only column survives: matched rows KEEP the target
     *     value (an UPDATE * never nulls a column the source doesn't
     *     carry), inserted source rows null-fill it;
-    *   - shared columns behave exactly as [[merge]].
+    *   - shared columns: matched rows take the source value, the rest
+    *     keep their own (UpdateAll).
     * Column order: target columns first, new source columns appended —
-    * additive, the same contract as [[TxLog]]'s evolving reads. Same
-    * broadcast shape and strict duplicate-source check as [[merge]]. */
+    * additive, the same contract as [[TxLog]]'s evolving reads. The
+    * join shape and `strict` are the object doc's. */
   def mergeEvolve(target: DataFrame, src: DataFrame, keys: Seq[String],
                   strict: Boolean = true): DataFrame = {
     require(keys.forall(k => target.columns.contains(k) && src.columns.contains(k)),
       s"merge keys ${keys.mkString(",")} must exist on both sides")
     if (strict) requireUniqueKeys(src, keys, "MERGE source")
+    // Alias-qualified refs: target and src often share lineage (e.g. an
+    // incremental batch derived from the target's own source), so plain
+    // DataFrame column refs would hit the ambiguous-self-join check.
     val t = target.alias("__t")
     val s = broadcast(src).alias("__s")
+    // plain (non-null-safe) equality: null keys never match, so
+    // null-key source rows insert — matching the reference's `trg.k = src.k`.
     val cond = keys.map(k => col(s"__t.$k") === col(s"__s.$k")).reduce(_ && _)
     val matchedFlag = col(s"__s.${keys.head}").isNotNull
     val sSet = src.columns.toSet

@@ -26,9 +26,9 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, Do
   *      retention unit is VERSIONS, not Delta's HOURS: TxLog retention
   *      is version-count-based (documented divergence; the time-based
   *      knob is a deployment's vacuum scheduler).
-  *   - `OPTIMIZE name [ZORDER BY (c1, c2, ...)]` —
+  *   - `OPTIMIZE name [ZORDER BY (c1, ...)]` —
   *      [[TxLog.compactSmallFiles]] (bin-packing, Delta's OPTIMIZE) or
-  *      [[TxLog.compactZOrder]].
+  *      [[TxLog.compactZOrder]] (one column or more).
   *   - `ALTER TABLE name ADD CONSTRAINT n CHECK (p)` /
   *      `ALTER TABLE name DROP CONSTRAINT n` —
   *      [[TxLog.addConstraint]] (existing data validated, then a
@@ -1025,13 +1025,16 @@ case class TxLogDescribeDetailCommand(name: String)
 }
 
 /** `OPTIMIZE t [WHERE partcol = 'v' | partcol IN ('v', …)] [ZORDER BY
-  * (…)]` → bin-packing compaction ([[TxLog.compactSmallFiles]],
+  * (c1, …)]` → bin-packing compaction ([[TxLog.compactSmallFiles]],
   * Delta's OPTIMIZE — WHERE scopes the pass to the named partitions,
-  * Delta's partition-predicate form) or a z-order rewrite; returns the
-  * committed version. WHERE accepts only the table's partition column
-  * (Delta refuses non-partition predicates the same way) and cannot
-  * combine with ZORDER BY (z-order is a table-wide re-clustering —
-  * the graft layout supports one physical clustering per table). */
+  * Delta's partition-predicate form) or a z-order rewrite into 32 dirs
+  * ([[TxLog.compactZOrder]]; one column ranges on that column); returns
+  * the committed version. Both rewrite inside the table's commit loop,
+  * so a concurrent INSERT is never lost. WHERE accepts only the table's
+  * partition column (Delta refuses non-partition predicates the same
+  * way) and cannot combine with ZORDER BY (z-order is a table-wide
+  * re-clustering — the graft layout supports one physical clustering
+  * per table). */
 case class TxLogOptimizeCommand(name: String, zorderCols: Seq[String],
                                 where: Option[String] = None)
     extends LeafRunnableCommand {
@@ -1046,7 +1049,7 @@ case class TxLogOptimizeCommand(name: String, zorderCols: Seq[String],
       if (zorderCols.nonEmpty)
         TxLog(session, root, statsCols = zorderCols)
           .compactZOrder(zorderCols, nBuckets = 32)
-      else TxLog(session, root).compactSmallFiles(128L << 20, parts)
+      else TxLog(session, root).compactSmallFiles(TxLog.TargetFileBytes, parts)
     Seq(Row(v))
   }
 }

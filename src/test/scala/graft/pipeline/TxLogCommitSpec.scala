@@ -88,7 +88,6 @@ class TxLogCommitSpec extends SparkTestBase {
       (flatRoot, "OVERWRITE", _.compact()),
       (flatRoot, "OPTIMIZE", _.compactSmallFiles(1L << 30)),
       (flatRoot, "OPTIMIZE", _.purgeDeletes()),
-      (flatRoot, "COMPACTCLUSTERED", _.compactClustered(2)),
       (flatRoot, "COMPACTZORDER", _.compactZOrder(Seq("id", "v"), 2)),
       (flatRoot, "RESTORE v0", _.restoreTo(0L)),
       (tagRoot, "OVERWRITE", _.overwritePartitioned(rows(5), "p")),
@@ -136,16 +135,25 @@ class TxLogCommitSpec extends SparkTestBase {
 
   test("an op that loses one race to a concurrent append lands one version later; the winner's row survives") {
     val winnerId = 100L
-    def withWinner[T](name: String)(run: TxLog => T): (TxLog, Long, T) = {
-      val t = TxLog(spark, tmpDir(s"commit_race_$name"))
-      t.overwrite(Seq((1L, "x1"), (2L, "x2")).toDF("id", "v"))
-      t.append(Seq((3L, "x3")).toDF("id", "v"))
+    def parted(rs: (Long, String)*) =
+      rs.toDF("id", "v").withColumn("p", (col("id") % 2).cast("string"))
+    // `tagged`: the table and the winner's append are tagged on
+    // p = id % 2, so the winner (p = 0) sits outside every partition
+    // the partitioned ops below rewrite
+    def withWinner[T](name: String, stats: Seq[String] = Nil, tagged: Boolean = false)(
+        run: TxLog => T): (TxLog, Long, T) = {
+      val t = TxLog(spark, tmpDir(s"commit_race_$name"), statsCols = stats)
+      def frame(rs: (Long, String)*) = if (tagged) parted(rs: _*) else rs.toDF("id", "v")
+      val tagBy = if (tagged) Some("p") else None
+      if (tagged) t.overwritePartitioned(frame((1L, "x1"), (2L, "x2")), "p")
+      else t.overwrite(frame((1L, "x1"), (2L, "x2")))
+      t.append(frame((3L, "x3")), tagBy = tagBy)
       val head = t.currentVersion()
       val other = TxLog(spark, t.root)
       var fired = false
       t.beforePublish = () => if (!fired) {
         fired = true
-        other.append(Seq((winnerId, "winner")).toDF("id", "v"))
+        other.append(frame((winnerId, "winner")), tagBy = tagBy)
       }
       val out = try run(t) finally t.beforePublish = () => ()
       assert(fired, s"$name never reached a commit attempt")
@@ -187,5 +195,58 @@ class TxLogCommitSpec extends SparkTestBase {
     val (ty, hy, (vy, loaded)) = withWinner("copy")(_.copyInto(src))
     assert(vy === hy + 2 && loaded === 1L && ty.copiedFiles().count() === 1L)
     assert(ty.snapshot().count() === 5L)
+
+    // every compaction rewrites from the head it publishes over
+    val (tk, hk, vk) = withWinner("compact")(_.compact())
+    assert(vk === hk + 2 && tk.snapshotDataDirs().length === 1)
+    val (tkp, hkp, vkp) = withWinner("compact_tagged", tagged = true)(_.compact())
+    assert(vkp === hkp + 2 && tkp.snapshotDataDirs().length === 1 &&
+      tkp.partitionColumn().contains("p"))
+    for (cols <- Seq(Seq("id"), Seq("id", "v"))) {
+      val (tz, hz, vz) = withWinner(s"zorder_${cols.size}", stats = cols)(
+        _.compactZOrder(cols, 2))
+      assert(vz === hz + 2 && tz.snapshotDataDirs().length === 2, cols)
+      assert(tz.snapshot().count() === 4L, cols)
+    }
+
+    val (tmor, hmor, vmor) = withWinner("update_mor")(
+      _.updateWhereMoR(Seq("v" -> "'u'"), Some("id = 1")))
+    assert(vmor === hmor + 2 &&
+      tmor.snapshot().filter(col("v") === "u").select("id").as[Long].collect().toSeq === Seq(1L))
+
+    val (ta, ha, va) = withWinner("add_columns")(_.addColumns(
+      org.apache.spark.sql.types.StructType.fromDDL("z INT")))
+    assert(va === ha + 2 && ta.snapshot().columns.toSeq === Seq("id", "v", "z"))
+
+    val (tdc, hdc, vdc) = withWinner("drop_column")(_.dropColumn("v"))
+    assert(vdc === hdc + 2 && tdc.snapshot().columns.toSeq === Seq("id"))
+
+    val (te, he, ve) = withWinner("evolve")(_.evolvePartitioning("v"))
+    assert(ve === he + 2 && te.partitionColumn().contains("v"))
+
+    val (ti, hi, vi) = withWinner("identity", stats = Seq("id"))(
+      _.appendWithIdentity(Seq("n").toDF("v"), "id"))
+    assert(vi === hi + 2 && ti.snapshot().filter(col("v") === "n").count() === 1L)
+
+    val (tmp, hmp, vmp) = withWinner("merge_partitioned", tagged = true)(
+      _.mergePartitioned(parted((1L, "m1"), (9L, "m9")), Seq("id"), "p"))
+    assert(vmp === hmp + 2 &&
+      tmp.snapshot().select("id", "v").orderBy("id").as[(Long, String)].collect().toSeq ===
+        Seq((1L, "m1"), (2L, "x2"), (3L, "x3"), (9L, "m9"), (winnerId, "winner")))
+
+    val (trp, hrp, vrp) = withWinner("replace_partitions", tagged = true)(
+      _.replacePartitions(parted((5L, "r5")), "p"))
+    assert(vrp === hrp + 2 &&
+      trp.snapshot().select("id").as[Long].collect().sorted.toSeq === Seq(2L, 5L, winnerId))
+
+    val (tac, hac, vac) = withWinner("apply_changes", tagged = true)(
+      _.applyChangesPartitioned(parted((1L, "c1")).withColumn("op", lit("U")), Seq("id"), "p"))
+    assert(vac === hac + 2 &&
+      tac.snapshot().filter(col("id") === 1L).select("v").as[String].collect().toSeq === Seq("c1"))
+
+    val (tmt, hmt, vmt) = withWinner("merge_tagged", tagged = true)(
+      _.merge(parted((1L, "m1")), Seq("id")))
+    assert(vmt === hmt + 2 &&
+      tmt.snapshot().filter(col("id") === 1L).select("v").as[String].collect().toSeq === Seq("m1"))
   }
 }

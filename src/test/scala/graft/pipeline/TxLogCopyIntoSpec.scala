@@ -91,13 +91,13 @@ class TxLogCopyIntoSpec extends SparkTestBase {
   }
 
   test("every OPTIMIZE form carries the registry: a re-run loads nothing") {
-    // compactSmallFiles, purgeDeletes and the clustered / z-order
-    // rewrites must keep the #copied lines like compact() does —
+    // compactSmallFiles, purgeDeletes and the one- and two-column
+    // z-order rewrites must keep the #copied lines like compact() does —
     // losing them makes the next COPY INTO load every file again
     val optimizers: Seq[(String, TxLog => Long)] = Seq(
       "compactSmallFiles" -> (_.compactSmallFiles(1L << 30)),
       "purgeDeletes" -> (_.purgeDeletes()),
-      "compactClustered" -> (_.compactClustered(2)),
+      "compactZOrder1" -> (_.compactZOrder(Seq("id"), 2)),
       "compactZOrder" -> (_.compactZOrder(Seq("id", "v"), 2)))
     optimizers.foreach { case (name, optimize) =>
       val src = tmpDir(s"copy_opt_src_$name")

@@ -505,7 +505,7 @@ class TxLogSpec extends SparkTestBase {
     t.append(spark.range(1, 1000, 2).toDF("k"))
     assert(t.rangeDirs("100", "110").length === 2)
     // ...until clustered compaction re-sorts dirs into disjoint slices
-    t.compactClustered(4)
+    t.compactZOrder(Seq("k"), 4)
     assert(t.snapshotDataDirs().length === 4)
     assert(t.rangeDirs("100", "110").length === 1)
     val got = t.snapshotRange("100", "110").collect().map(_.getLong(0)).sorted
@@ -924,7 +924,7 @@ class TxLogSpec extends SparkTestBase {
     // 1-D clustering would NOT have pruned b: prove z-order beats it
     val t1 = TxLog(spark, tmpDir("txlog_zorder_1d"), statsCols = Seq("a", "b"))
     t1.overwrite(rows.toDF("a", "b"))
-    t1.compactClustered(16)
+    t1.compactZOrder(Seq("a"), 16)
     assert(t1.rangeDirs("0", "255", Some("b")).length === t1.snapshotDataDirs().length,
       "1-D layout unexpectedly pruned the second column")
   }

@@ -102,6 +102,23 @@ class TxLogSqlDdlSpec extends SparkTestBase {
     TxLogSql.unregister("sqlddl_z")
   }
 
+  test("OPTIMIZE … ZORDER BY one column commits a version that range-prunes on it") {
+    val loc = tmpDir("sqlddl_zorder1")
+    spark.sql(s"CREATE TABLE sqlddl_z1 (c BIGINT, p STRING) USING graft LOCATION '$loc'")
+    (0L until 1024L).map(i => ((i * 37) % 1024, s"r$i")).toDF("c", "p")
+      .createOrReplaceTempView("sqlddl_z1_src")
+    spark.sql("INSERT INTO sqlddl_z1 SELECT * FROM sqlddl_z1_src")
+    val v = spark.sql("OPTIMIZE sqlddl_z1 ZORDER BY (c)").head().getLong(0)
+    assert(v === 2L)
+    assert(spark.sql("SELECT count(*) FROM sqlddl_z1").head().getLong(0) === 1024L)
+    // the dirs are disjoint slices of c: a narrow range opens fewer
+    // dirs than the table has
+    val t = TxLog(spark, loc)
+    val total = t.snapshotDataDirs().length
+    assert(t.rangeDirs("0", "15", Some("c")).length < total, s"opened all $total dirs")
+    TxLogSql.unregister("sqlddl_z1")
+  }
+
   test("OPTIMIZE … WHERE scopes the pass to the named partitions; predicates are validated") {
     val loc = tmpDir("sqlddl_optwhere")
     val t = TxLog(spark, loc)
